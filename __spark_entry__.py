@@ -3693,7 +3693,7 @@ def _q_gopher_rules(spark, sf_dir):
     (Gopher, RefinedWeb, Dolma) apply before model-based scoring: word
     count in [50, 100k], mean word length in [3, 10], >= 80% of words
     contain an alphabetic character, >= 2 distinct required stop words,
-    and a symbol-to-word lid on '#' and '...' (< 0.1 per word).  Every
+    and a symbol-to-word lid on '#' and '...' (<= 0.1 per word).  Every
     threshold is evaluated with CROSS-MULTIPLIED INTEGERS (3*n <= s,
     never s/n >= 3.0), so the flags are bit-identical across engines
     and partitionings — no float thresholds to drift.
@@ -4357,8 +4357,9 @@ def _q_sitemap_parse(spark, sf_dir):
     Parses <url> entries (loc, optional lastmod, optional priority,
     changefreq) out of per-host urlset bodies and rolls them up to the
     per-host facts a frontier scheduler consumes: URL count, how many
-    carry lastmod, the freshest lastmod, the priority mass, and the
-    count of daily-changefreq entries.  Bodies are synthesized
+    carry lastmod, the freshest lastmod ('' when none does, never
+    NULL), the priority mass, and the count of daily-changefreq
+    entries.  Bodies are synthesized
     deterministically per host (entry count, dates, priorities all
     derived from the numeric host id) so the DuckDB twin parses the
     identical text; priorities are single-digit decimals aggregated as
@@ -4418,9 +4419,10 @@ def _q_sitemap_parse(spark, sf_dir):
             F.sum((F.col("lastmod") != "").cast("bigint")).alias(
                 "n_lastmod"
             ),
-            F.max(F.when(F.col("lastmod") != "", F.col("lastmod"))).alias(
-                "last_mod"
-            ),
+            F.coalesce(
+                F.max(F.when(F.col("lastmod") != "", F.col("lastmod"))),
+                F.lit(""),
+            ).alias("last_mod"),
             F.sum(
                 F.when(F.col("prio") != "", F.col("prio").cast("bigint"))
                 .otherwise(F.lit(0))
@@ -4457,7 +4459,7 @@ def _q_c4_filters(spark, sf_dir):
     are JVM higher-order functions fused into the scan, zero shuffles
     before the presentation sort; at 10^12 docs this is a pure map
     stage (the reference's cleaning chain runs the same way inside
-    the extraction kernel, ref stage2_ocr.py:520-610)."""
+    the extraction kernel: `clean_result`, ref stage2_ocr.py:184-251)."""
     d = _t(spark, sf_dir, "documents")
     body = (
         "transform(sequence(0, cast(floor((size(split(text, ' ')) - 1)"
@@ -6802,7 +6804,7 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_urls,
                    sum(CASE WHEN lastmod <> '' THEN 1 ELSE 0 END)
                        AS n_lastmod,
-                   max(nullif(lastmod, '')) AS last_mod,
+                   coalesce(max(nullif(lastmod, '')), '') AS last_mod,
                    sum(CASE WHEN prio <> '' THEN CAST(prio AS BIGINT)
                             ELSE 0 END) AS sum_prio10,
                    sum(CASE WHEN cf = 'daily' THEN 1 ELSE 0 END) AS n_daily

@@ -122,7 +122,7 @@ def main() -> None:
         ).collect()[0]
         return time.time() - t0, agg
 
-    # (a) north-rule plan: salted host co-location shuffle before the kernel
+    # (a) north-rule plan: salted host co-location shuffle after the kernel
     # n_runs: best-of-2, plus one extra run when the pre-leg idle probe
     # says a co-tenant burst survived the wait — the best run measures
     # the job, the worst measures the neighbor

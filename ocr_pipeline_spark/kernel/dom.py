@@ -583,18 +583,17 @@ def decode_html(raw: bytes) -> str:
 
 def parse_html(
     html: str | bytes,
-    tokenizer: str = "fast",
     hrefs: bool = False,
     metadata: bool = False,
 ) -> Node:
     """Parse an HTML document (bytes are charset-sniffed via decode_html).
 
-    `tokenizer='fast'` (default) uses the string/regex scanner;
-    `'stdlib'` uses html.parser.  Both drive the same tree-building
-    logic and are asserted to produce identical extraction output over
-    the fixture corpus, the 420-case differential suite, and the
-    property-test grammar (tests/test_dom_blocks.py,
-    tests/test_properties.py).
+    Uses the string/regex scanner; a scanner exception falls back to
+    `_parse_html_stdlib` (html.parser).  Both drive the same
+    tree-building logic and are asserted to produce identical
+    extraction output over the fixture corpus, the 420-case
+    differential suite, and the property-test grammar
+    (tests/test_dom_blocks.py, tests/test_properties.py).
 
     Equivalence envelope: on well-formed(-ish) markup — including
     quoted attributes with '>' in values, mixed quote styles, stray
@@ -609,8 +608,6 @@ def parse_html(
     a 15k-case cross-round differential)."""
     if isinstance(html, (bytes, bytearray)):
         html = decode_html(bytes(html))
-    if tokenizer == "stdlib":
-        return _parse_html_stdlib(html)
     try:
         return _parse_html_fast(html, hrefs=hrefs, metadata=metadata)
     except Exception:

@@ -1,22 +1,18 @@
-"""The extraction job: scan → salted repartition → Arrow kernel →
-(describe branch) → bucketed write with manifest resume + metrics.
+"""The extraction job: scan → Arrow kernel → salted repartition →
+bucketed write with manifest resume + metrics.
 
 Physical plan notes (SURVEY.md §3.4/§4):
   * column pruning: only (url, warc_ts, html, lang) are selected, so
     Catalyst pushes the projection into the scan — the wide `text`
     column is never read;
-  * shuffles: at most two — the optional salted host repartition
-    (key (hash(host), hash(url) % salt): pages co-locate by host,
-    bounded to `salt` sub-buckets so Zipf-skewed hosts cannot pin a
-    task — the north rule's explicit skew handling) and the output
-    repartition by bucket before the write (one file per bucket,
-    shuffling the ~2x smaller extracted text, never the html);
-  * the kernel is one narrow mapInPandas over Arrow batches (capped
-    records/batch for multi-MB html blobs);
-  * in staged mode the describe branch is a filtered projection of the
-    stage-1 output joined back with a broadcast hash join — the
-    diagram subset is small by construction (T7 selectivity,
-    qwen_processor.py:310-323).
+  * the kernel is one narrow mapInPandas over Arrow batches, capped at
+    ARROW_BATCH_ROWS records per batch for multi-MB html blobs;
+  * shuffles: at most two — the optional salted host repartition of
+    the EXTRACTED rows (key (hash(host), hash(url) % salt): pages
+    co-locate by host, bounded to `salt` sub-buckets so Zipf-skewed
+    hosts cannot pin a task — the north rule's explicit skew handling)
+    and the output repartition by bucket before the write (one file
+    per bucket).  Both shuffle markdown-sized rows, never the html.
 """
 
 from __future__ import annotations
@@ -29,12 +25,7 @@ from pyspark.sql import functions as F
 
 from ocr_pipeline_spark.operators.extract_op import (
     EXTRACTED_DDL,
-    STAGE1_DDL,
-    DESCRIPTION_DDL,
-    describe_kernel,
-    finalize_kernel,
     fused_extract_kernel,
-    stage1_kernel,
 )
 from ocr_pipeline_spark.sources.catalog import (
     DEFAULT_BUCKETS,
@@ -115,72 +106,34 @@ def run_extraction(
     spark: SparkSession,
     pages: DataFrame,
     describe: bool = True,
-    mode: str = "fused",
     num_partitions: int | None = None,
     salt: int = 8,
     co_locate_hosts: bool = True,
     counters: dict | None = None,
-    co_locate_stage: str = "post",
     bucket_metrics: tuple | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> extracted DataFrame.
 
-    `mode`: 'fused' (default, one narrow pass) or 'staged' (stage-1 +
-    filtered describe branch + broadcast join) — byte-identical output,
-    see operators/extract_op.py.
+    The narrow kernel runs on scan splits (kernel parallelism rides on
+    them; tune spark.sql.files.maxPartitionBytes at scale).
 
-    `co_locate_hosts`: the north rule's salted host shuffle (default).
-    Extraction itself is per-row, so when no downstream operator needs
-    host grouping, `co_locate_hosts=False` skips the exchange and runs
-    map-only over scan splits; output is byte-identical either way
-    (tested).
-
-    `co_locate_stage`: where the co-locating exchange sits.
-      * 'post' (default): the narrow kernel runs on scan splits and the
-        salted shuffle moves the EXTRACTED rows — markdown-sized
-        payloads, ~3× fewer bytes than raw html.  Catalyst pushes
-        narrow transforms below exchanges for built-in expressions; it
-        cannot see through an opaque Python kernel, so this plan does
-        the same reordering by hand.  Kernel parallelism rides on scan
-        splits (tune spark.sql.files.maxPartitionBytes at scale).
-      * 'pre': the exchange moves raw pages before extraction — kept
-        for plan-invariance testing and for inputs whose scan exposes
-        too few splits to feed the cluster.
-    Both produce byte-identical rows; only exchange placement differs.
+    `co_locate_hosts`: the north rule's salted host shuffle (default),
+    placed AFTER the kernel so it moves the extracted rows —
+    markdown-sized payloads, ~3× fewer bytes than raw html.  Catalyst
+    pushes narrow transforms below exchanges for built-in expressions;
+    it cannot see through an opaque Python kernel, so this plan does
+    the same reordering by hand.  Extraction itself is per-row, so
+    when no downstream operator needs host grouping,
+    `co_locate_hosts=False` skips the exchange and runs map-only;
+    output is byte-identical either way (tested).
     """
-    pruned = pages.select(*INPUT_COLUMNS)
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
-    if co_locate_stage not in ("pre", "post"):
-        raise ValueError(f"unknown co_locate_stage: {co_locate_stage!r}")
-    if co_locate_hosts and co_locate_stage == "pre":
-        distributed = salted_repartition(pruned, num_partitions, salt)
-    else:
-        distributed = pruned
-
-    if mode == "fused":
-        out = distributed.mapInPandas(
-            fused_extract_kernel(describe, counters, bucket_metrics),
-            schema=EXTRACTED_DDL,
-        )
-    elif mode == "staged":
-        stage1 = distributed.mapInPandas(stage1_kernel, schema=STAGE1_DDL)
-        if describe:
-            diagram_subset = stage1.filter(F.size("diagram_sources") > 0).select(
-                "url", "diagram_sources"
-            )
-            descriptions = diagram_subset.mapInPandas(
-                describe_kernel, schema=DESCRIPTION_DDL
-            )
-            joined = stage1.join(F.broadcast(descriptions), "url", "left")
-        else:
-            joined = stage1.withColumn("description", F.lit(None).cast("string"))
-        joined = joined.fillna({"description": ""})
-        out = joined.mapInPandas(finalize_kernel, schema=EXTRACTED_DDL)
-    else:
-        raise ValueError(f"unknown mode: {mode!r}")
-
-    if co_locate_hosts and co_locate_stage == "post":
+    out = pages.select(*INPUT_COLUMNS).mapInPandas(
+        fused_extract_kernel(describe, counters, bucket_metrics),
+        schema=EXTRACTED_DDL,
+    )
+    if co_locate_hosts:
+        if num_partitions is None:
+            num_partitions = spark.sparkContext.defaultParallelism * 2
         out = salted_repartition(out, num_partitions, salt)
     return out
 
@@ -248,13 +201,11 @@ def run_pipeline(
     run_id: str,
     table: str = "extracted",
     describe: bool = True,
-    mode: str = "fused",
     n_buckets: int = DEFAULT_BUCKETS,
     chunk_size: int | None = None,
     num_partitions: int | None = None,
     salt: int = 8,
     co_locate_hosts: bool = True,
-    co_locate_stage: str = "post",
     max_chunks: int | None = None,
     metrics_mode: str = "committed",
 ) -> dict:
@@ -279,20 +230,18 @@ def run_pipeline(
         manifest remains grounded in committed files.  Same accumulator
         retry caveat as the P7 counters (a re-executed map stage can
         double-count) — which is why committed-scan metrics stay the
-        default where lineage must be exact under failures.  Fused mode
-        only.  (A CollectMetrics/Observation variant was measured first
+        default where lineage must be exact under failures.  (A
+        CollectMetrics/Observation variant was measured first
         and REJECTED: 6 aggregates × buckets of per-row conditional
         evaluation made the sf0.1 write 40% slower than the re-read it
         replaced.)
     """
     if metrics_mode not in ("committed", "observe"):
         raise ValueError(f"unknown metrics_mode: {metrics_mode!r}")
-    if metrics_mode == "observe" and mode != "fused":
-        raise ValueError("metrics_mode='observe' requires mode='fused'")
     catalog = open_catalog(spark, warehouse)
     t_start = time.time()
     # kernel-side progress counters (P7): filled by the extraction kernel
-    # itself during the write action — no extra scan (fused mode only)
+    # itself during the write action — no extra scan
     counters = {
         name: spark.sparkContext.accumulator(0)
         for name in ("pages", "empty_pages", "described_pages")
@@ -333,11 +282,10 @@ def run_pipeline(
             )
         extracted = with_bucket(
             run_extraction(
-                spark, pages_chunk, describe=describe, mode=mode,
+                spark, pages_chunk, describe=describe,
                 num_partitions=num_partitions, salt=salt,
                 co_locate_hosts=co_locate_hosts,
-                co_locate_stage=co_locate_stage,
-                counters=counters if mode == "fused" else None,
+                counters=counters,
                 bucket_metrics=(
                     (metrics_acc, n_buckets) if metrics_acc is not None else None
                 ),

@@ -7,7 +7,7 @@
         --input  <pages parquet path or iceberg table> \
         --warehouse <output warehouse dir> \
         --run-id R1 [--table extracted] [--buckets 64] [--chunk-size 8] \
-        [--no-describe-diagrams] [--mode fused|staged] [--salt 8] \
+        [--no-describe-diagrams] [--salt 8] \
         [--no-co-locate] [--synthetic N]
 
 Env-var equivalents (graft of OCR_* vars, docs/DEPLOYMENT_PLAN.md:205-216):
@@ -37,7 +37,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--table", default="extracted")
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--chunk-size", type=int, default=None)
-    p.add_argument("--mode", choices=("fused", "staged"), default="fused")
     p.add_argument("--salt", type=int, default=8)
     p.add_argument(
         "--no-describe-diagrams", action="store_true",
@@ -45,17 +44,11 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     )
     p.add_argument("--no-co-locate", action="store_true")
     p.add_argument(
-        "--co-locate-stage", choices=("pre", "post"), default="post",
-        help="where the salted host exchange sits: 'post' (default) "
-        "shuffles markdown-sized extracted rows; 'pre' shuffles raw "
-        "pages (for inputs whose scans expose too few splits)",
-    )
-    p.add_argument(
         "--metrics-mode", choices=("committed", "observe"), default="committed",
         help="lineage metrics source: 'committed' (default) re-reads the "
         "committed files (pruned scan, exact under any failure); 'observe' "
         "accumulates per-bucket metrics inside the extraction kernel "
-        "during the write (no re-read; fused mode only)",
+        "during the write (no re-read)",
     )
     p.add_argument(
         "--synthetic", type=int, default=None,
@@ -118,12 +111,10 @@ def main(argv: list[str] | None = None) -> int:
         spark, pages, args.warehouse, args.run_id,
         table=args.table,
         describe=not args.no_describe_diagrams,
-        mode=args.mode,
         n_buckets=args.buckets,
         chunk_size=args.chunk_size,
         salt=args.salt,
         co_locate_hosts=not args.no_co_locate,
-        co_locate_stage=args.co_locate_stage,
         metrics_mode=args.metrics_mode,
     )
     print(json.dumps(summary))

@@ -211,15 +211,14 @@ Spark-relative efficiency (job scaling / control scaling) ≥ 1.0 on all
 plans shows the job adds no serialization bottleneck of its own.
 
 The salted plan runs the narrow extraction kernel on scan splits and
-salts the co-locating exchange AFTER it (co_locate_stage='post'), so
-the shuffle ships markdown-sized extracted rows, not raw html — the
-round-2 change that lifted salted 4→16 efficiency from 0.788 to ≥ the
-north rule's 0.8 bar.
+salts the co-locating exchange AFTER it, so the shuffle ships
+markdown-sized extracted rows, not raw html — the round-2 change that
+lifted salted 4→16 efficiency from 0.788 to ≥ the north rule's 0.8 bar.
 
 Correctness under distribution: outputs are byte-identical per url to a
 single-process kernel loop (tests/test_spark_job.py::
 test_distributed_equals_local_byte_identical, test_partitioning_invariance),
-including across exchange placements (pre/post/none).
+with and without the salted exchange.
 """)
     return "".join(out)
 

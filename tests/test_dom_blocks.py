@@ -309,7 +309,7 @@ def test_main_root_hints_match_traversal():
         "",
     ]
     for html in cases:
-        fast = parse_html(html, tokenizer="fast")
+        fast = parse_html(html)
         assert getattr(fast, "hints", None) is not None
         hinted = select_main_root(fast)
         fast.hints = None  # force the traversal on the SAME tree

@@ -325,6 +325,18 @@ def test_extract_fidelity_nonvacuous(spark):
     assert mean_recall > 0.9, mean_recall
 
 
+def test_sitemap_parse_last_mod_never_null(spark, ddb):
+    """A host whose sitemap carries no <lastmod> reports '' — on both
+    sides.  `_norm` maps None to the same token for Spark and DuckDB, so
+    the hash compare alone cannot catch a NULL cell."""
+    spark_rows = entry_mod._q_sitemap_parse(spark, SF_DIR).collect()
+    duck_rows = ddb.execute(entry_mod.oracle_sql()["sitemap_parse"]).fetchall()
+    assert spark_rows and duck_rows
+    assert all(r.last_mod is not None for r in spark_rows)
+    assert "" in {r.last_mod for r in spark_rows}
+    assert all(None not in row for row in duck_rows)
+
+
 def test_mojibake_repair_nonvacuous(spark):
     """Guard against the all-ASCII silent pass: the fixture corpus is
     pure ASCII, so without the non-ASCII garnish the garble would be

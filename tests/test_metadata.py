@@ -7,6 +7,7 @@ malformed-JSON-LD degrade, absent fields, attr-parse opt-in — plus the
 normalize_text NFC/control contract the DuckDB oracle cross-checks.
 """
 
+from ocr_pipeline_spark.kernel import dom
 from ocr_pipeline_spark.kernel.dom import parse_html
 from ocr_pipeline_spark.kernel.metadata import EMPTY_METADATA, page_metadata
 from ocr_pipeline_spark.operators.text_ops import normalize_text
@@ -107,7 +108,7 @@ def test_stdlib_parser_agrees_on_wellformed_head():
     from ocr_pipeline_spark.kernel import metadata as meta_mod
 
     fast = page_metadata(FULL_HEAD)
-    root = parse_html(FULL_HEAD, tokenizer="stdlib")
+    root = dom._parse_html_stdlib(FULL_HEAD)
     # re-run the field walk over the stdlib tree via the module's
     # internals: parse path is the only difference
     out = dict(EMPTY_METADATA)

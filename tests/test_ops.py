@@ -1,4 +1,4 @@
-"""Text analytics, dedup, ANN, multimodal, config operator tests."""
+"""Text analytics, dedup, ANN, multimodal operator tests."""
 
 import struct
 
@@ -28,7 +28,6 @@ from ocr_pipeline_spark.operators.text_ops import (
     ngram_jaccard,
     simhash64,
 )
-from ocr_pipeline_spark.plans.config import JobConfig, load_config
 
 
 # --- lang id / simhash / minhash (pure) -------------------------------------
@@ -381,26 +380,6 @@ def test_image_features_pixel_path_on_real_png():
     white = np.full((4, 4, 3), 255, dtype=np.uint8)
     fw = image_features(_make_png(white), dim=8)
     assert fw[7] == 1.0
-
-
-# --- config -------------------------------------------------------------------
-def test_config_defaults_and_validation():
-    cfg = load_config(env={})
-    assert cfg.describe_diagrams is True and cfg.mode == "fused"
-    with pytest.raises(ValueError):
-        JobConfig(mode="bogus").validate()
-
-
-def test_config_cascade_and_env(tmp_path):
-    p = tmp_path / "c.json"
-    p.write_text('{"mode": "staged", "n_buckets": 8}')
-    cfg = load_config(str(p), env={})
-    assert cfg.mode == "staged" and cfg.n_buckets == 8
-    cfg2 = load_config(str(p), env={"EXTRACT_N_BUCKETS": "32",
-                                    "EXTRACT_DESCRIBE_DIAGRAMS": "0"})
-    assert cfg2.n_buckets == 32 and cfg2.describe_diagrams is False
-    cfg3 = load_config(env={"EXTRACT_CONFIG": str(p)})
-    assert cfg3.mode == "staged"
 
 
 # --- fingerprinting (winnowing) ----------------------------------------------

@@ -50,14 +50,6 @@ def test_distributed_equals_local_byte_identical(fused_result, local_golden):
     assert fused_result == local_golden
 
 
-def test_staged_mode_equals_fused(spark, pages, fused_result):
-    staged = {
-        r.url: r.markdown
-        for r in run_extraction(spark, pages, describe=True, mode="staged").collect()
-    }
-    assert staged == fused_result
-
-
 def test_partitioning_invariance(spark, fused_result):
     """Different generation partitioning + different repartition/salt
     must not change a single output byte."""
@@ -76,15 +68,6 @@ def test_partitioning_invariance(spark, fused_result):
         ).collect()
     }
     assert map_only == fused_result
-    # exchange placement (pre-kernel vs post-kernel salted shuffle) moves
-    # rows, never bytes
-    pre = {
-        r.url: r.markdown
-        for r in run_extraction(
-            spark, pages3, describe=True, co_locate_stage="pre"
-        ).collect()
-    }
-    assert pre == fused_result
 
 
 def test_describe_off_changes_only_diagram_pages(spark, pages, fused_result):
@@ -96,24 +79,29 @@ def test_describe_off_changes_only_diagram_pages(spark, pages, fused_result):
 
 def test_scan_pruning_and_single_shuffle(spark, tmp_path):
     """The wide `text` column must not reach the scan; the salted
-    repartition must be the only exchange (fused mode)."""
+    repartition must be the only exchange, and the map-only plan must
+    have none."""
     import contextlib
     import io
 
     d = str(tmp_path / "pages")
     generate_pages_df(spark, 50, SEED).write.parquet(d)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        run_extraction(spark, spark.read.parquet(d), describe=True).explain(
-            "formatted"
+    for co_locate_hosts, n_exchanges in ((True, 1), (False, 0)):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            run_extraction(
+                spark, spark.read.parquet(d), describe=True,
+                co_locate_hosts=co_locate_hosts,
+            ).explain("formatted")
+        plan = buf.getvalue()
+        scan = next(
+            block for block in plan.split("\n\n")
+            if "Scan parquet" in block and "ReadSchema:" in block
         )
-    plan = buf.getvalue()
-    scan = next(
-        block for block in plan.split("\n\n")
-        if "Scan parquet" in block and "ReadSchema:" in block
-    )
-    assert "text" not in scan.split("ReadSchema:")[1]
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
+        assert "text" not in scan.split("ReadSchema:")[1]
+        assert (
+            len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == n_exchanges
+        ), (co_locate_hosts, plan)
 
 
 def test_classification_struct_roundtrip(spark, pages):
