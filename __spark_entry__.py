@@ -3859,6 +3859,24 @@ def _q_bloom_dedup_probe(spark, sf_dir):
     )
 
 
+# link_spam and hits_step build their host graph from a page count that
+# scales with the sf directory, but both oracles read the
+# host_link_graph witness, which exists only at this scale factor
+LINK_WITNESS_SF = 0.01
+
+
+def _link_witness_pages(sf_dir: str) -> int:
+    """Page count for link_spam/hits_step; raises at any scale but the
+    witness's, where the oracle compare would silently diverge."""
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    if sf != LINK_WITNESS_SF:
+        raise ValueError(
+            f"link_spam and hits_step run only at sf{LINK_WITNESS_SF}: their "
+            f"oracles read the host_link_graph witness, got {sf_dir!r}"
+        )
+    return min(max(500, int(sf * 200_000)), 4000)
+
+
 def _q_link_spam(spark, sf_dir):
     """X70: nepotistic-link / link-farm detection over the X31 host
     graph — the link-spam screen (Davison 2000's 'recognizing
@@ -3878,10 +3896,7 @@ def _q_link_spam(spark, sf_dir):
     from ocr_pipeline_spark.fixtures.gen_pages import generate_pages_df
     from ocr_pipeline_spark.operators.links_op import host_link_graph
 
-    n_pages = min(
-        max(500, int(float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) * 200_000)),
-        4000,
-    )
+    n_pages = _link_witness_pages(sf_dir)
     pages = generate_pages_df(spark, n_pages, seed=42, cross_links=True)
     e = host_link_graph(pages)
     w = Window.partitionBy("src_host").orderBy(
@@ -3935,10 +3950,7 @@ def _q_hits_step(spark, sf_dir):
     from ocr_pipeline_spark.fixtures.gen_pages import generate_pages_df
     from ocr_pipeline_spark.operators.links_op import host_link_graph
 
-    n_pages = min(
-        max(500, int(float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) * 200_000)),
-        4000,
-    )
+    n_pages = _link_witness_pages(sf_dir)
     pages = generate_pages_df(spark, n_pages, seed=42, cross_links=True)
     e = (
         host_link_graph(pages)

@@ -71,16 +71,11 @@ _FLOW_HINT_RE = re.compile(r"\b(?:flowchart|graph\s+(?:td|lr|rl|bt)|start|end|ye
 _DIAGRAM_CLASS_RE = re.compile(r"\b(?:mermaid|diagram|flowchart|graphviz|chart|ascii-art)\b")
 
 
-@dataclass
+@dataclass(slots=True)
 class Block:
     kind: str       # heading|paragraph|list|table|quote|code|diagram|figure|rule
     text: str       # rendered markdown for the block
     link_chars: int = 0
-    n_chars: int = 0
-
-    def __post_init__(self) -> None:
-        if not self.n_chars:
-            self.n_chars = len(self.text)
 
 
 @dataclass
@@ -98,17 +93,35 @@ class PageStats:
     diagram_sources: list[str] = field(default_factory=list)
 
 
+# (role, id, class) -> _is_chrome verdict: site chrome repeats the same
+# attribute values on every page.  Bounded by entries and by key length
+# like dom._ATTRS_MEMO, so unique-class floods cannot grow the worker.
+_CHROME_MEMO: dict[tuple[str, str, str], bool] = {}
+_CHROME_MEMO_MAX = 8192
+_CHROME_MEMO_KEY_MAX = 256
+
+
 def _is_chrome(node: Node) -> bool:
     """Structural/semantic boilerplate test for a container element."""
     if node.tag in _CHROME_TAGS:
         return True
-    role = node.attr("role").lower()
-    if role in _CHROME_ROLES:
-        return True
-    label = f'{node.attr("id")} {node.attr("class")}'.lower()
-    if _NEGATIVE_RE.search(label) and not _POSITIVE_RE.search(label):
-        return True
-    return False
+    attrs = node.attrs
+    if not attrs:
+        return False
+    key = (attrs.get("role") or "", attrs.get("id") or "", attrs.get("class") or "")
+    chrome = _CHROME_MEMO.get(key)
+    if chrome is None:
+        role, id_, cls = key
+        label = f"{id_} {cls}".lower()
+        chrome = role.lower() in _CHROME_ROLES or bool(
+            _NEGATIVE_RE.search(label) and not _POSITIVE_RE.search(label)
+        )
+        if (
+            len(role) + len(id_) + len(cls) <= _CHROME_MEMO_KEY_MAX
+            and len(_CHROME_MEMO) < _CHROME_MEMO_MAX
+        ):
+            _CHROME_MEMO[key] = chrome
+    return chrome
 
 
 from ocr_pipeline_spark.kernel.dom import _CONTENT_IDS  # noqa: E402
@@ -171,9 +184,18 @@ class _Renderer:
         if depth > _MAX_DEPTH:
             text = " ".join(node.text(" ").split())
             return text, len(text) if in_link else 0
+        children = node.children
+        if len(children) == 1 and isinstance(children[0], str):
+            # one text child (most cells and paragraphs): the loop below
+            # reduced to what it does for a lone string
+            text = " ".join(children[0].split())
+            link_chars = len(text) if in_link else 0
+            if _BR_SENTINEL in text:
+                text = _BR_COLLAPSE_RE.sub("\n", text).strip()
+            return text, link_chars
         parts: list[str] = []
         link_chars = 0
-        for child in node.children:
+        for child in children:
             if isinstance(child, str):
                 parts.append(child)
                 if in_link:
@@ -276,24 +298,28 @@ class _Renderer:
 
     def _table_rows(self, table: Node) -> list[list[str]]:
         rows: list[list[str]] = []
-
-        def collect(container: Node) -> None:
-            for child in container.children:
-                if not isinstance(child, Node):
-                    continue
-                if child.tag == "tr":
-                    cells = []
-                    for cell in child.children:
-                        if isinstance(cell, Node) and cell.tag in ("td", "th"):
-                            text, _ = self._inline(cell)
-                            flat = " ".join(text.split())
-                            cells.append(flat.replace("|", "\\|"))
-                    rows.append(cells)
-                elif child.tag in ("thead", "tbody", "tfoot"):
-                    collect(child)
-
-        collect(table)
+        self._collect_rows(table, rows)
         return [r for r in rows if any(c.strip() for c in r)] or rows
+
+    def _collect_rows(self, container: Node, rows: list[list[str]]) -> None:
+        # a method, not a recursive closure: a closure that calls itself
+        # is a reference cycle, and the kernel must create none
+        for child in container.children:
+            if not isinstance(child, Node):
+                continue
+            if child.tag == "tr":
+                cells = []
+                for cell in child.children:
+                    if isinstance(cell, Node) and cell.tag in ("td", "th"):
+                        text, _ = self._inline(cell)
+                        # _inline output is whitespace-normalized
+                        # except for <br> newlines
+                        if "\n" in text:
+                            text = " ".join(text.split())
+                        cells.append(text.replace("|", "\\|"))
+                rows.append(cells)
+            elif child.tag in ("thead", "tbody", "tfoot"):
+                self._collect_rows(child, rows)
 
     def _render_table(self, node: Node, depth: int = 0) -> None:
         rows = self._table_rows(node)
@@ -371,10 +397,12 @@ class _Renderer:
         "div section article main body html span center details summary "
         "dl dt dd address #document #li td th".split()
     )
+    # element tags that end the pending paragraph and render as blocks
+    _BLOCK_TAGS = _CONTAINERS | frozenset(_HEADINGS) | frozenset(
+        "p ul ol blockquote pre table svg figure img hr".split()
+    )
 
     def _flush_pending(self, pending: list[tuple[str, int]]) -> None:
-        if not pending:
-            return
         text = " ".join(" ".join(p for p, _ in pending).split())
         link_chars = sum(lc for _, lc in pending)
         pending.clear()
@@ -394,21 +422,31 @@ class _Renderer:
             tag = child.tag
             if tag in _SKIP_TAGS:
                 continue
-            if _is_chrome(child):
+            if tag in _CHROME_TAGS or (child.attrs and _is_chrome(child)):
                 self.stats.dropped_boilerplate_chars += len(child.text())
                 continue
-            if tag in self._HEADINGS:
+            if tag not in self._BLOCK_TAGS:
+                # unknown/inline element encountered at block level: treat as
+                # phrasing content and fold into the pending paragraph
+                text, lc = self._inline(child, depth=depth + 1)
+                if tag == "a":
+                    lc = len(text)  # the whole element is anchor text
+                if text:
+                    pending.append((text, lc))
+                continue
+            if pending:
                 self._flush_pending(pending)
+            if tag == "p":
+                text, lc = self._inline(child)
+                self._emit_text_block("paragraph", text, lc)
+            elif tag in self._CONTAINERS:
+                self._walk_children(child, depth + 1)
+            elif tag in self._HEADINGS:
                 text, lc = self._inline(child)
                 if text:
                     level = self._HEADINGS[tag]
                     self._emit_text_block("heading", "#" * level + " " + text, lc)
-            elif tag == "p":
-                self._flush_pending(pending)
-                text, lc = self._inline(child)
-                self._emit_text_block("paragraph", text, lc)
-            elif tag in ("ul", "ol"):
-                self._flush_pending(pending)
+            elif tag == "ul" or tag == "ol":
                 lines, lc, tc = self._render_list(child, tag == "ol", 0)
                 if lines:
                     text = "\n".join(lines)
@@ -418,41 +456,24 @@ class _Renderer:
                         self.blocks.append(Block("list", text, lc))
                         self.stats.text_chars += tc
             elif tag == "blockquote":
-                self._flush_pending(pending)
                 text, lc = self._inline(child)
                 if text:
                     quoted = "\n".join("> " + ln for ln in text.split("\n"))
                     self._emit_text_block("quote", quoted, lc)
             elif tag == "pre":
-                self._flush_pending(pending)
                 self._render_pre(child)
             elif tag == "table":
-                self._flush_pending(pending)
                 self._render_table(child, depth)
             elif tag == "svg":
-                self._flush_pending(pending)
                 self._render_svg(child)
             elif tag == "figure":
-                self._flush_pending(pending)
                 self._render_figure(child, depth)
             elif tag == "img":
-                self._flush_pending(pending)
                 self.blocks.append(Block("figure", self._figure_ref(child)))
-            elif tag == "hr":
-                self._flush_pending(pending)
+            else:  # hr
                 self.blocks.append(Block("rule", "---"))
-            elif tag in self._CONTAINERS:
-                self._flush_pending(pending)
-                self._walk_children(child, depth + 1)
-            else:
-                # unknown/inline element encountered at block level: treat as
-                # phrasing content and fold into the pending paragraph
-                text, lc = self._inline(child, depth=depth + 1)
-                if tag == "a":
-                    lc = len(text)  # the whole element is anchor text
-                if text:
-                    pending.append((text, lc))
-        self._flush_pending(pending)
+        if pending:
+            self._flush_pending(pending)
 
 
 def render_blocks(html: str | bytes) -> tuple[list[Block], PageStats]:

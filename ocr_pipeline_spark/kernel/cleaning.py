@@ -84,15 +84,15 @@ def frame_tables(text: str) -> str:
     A table row is any line containing at least two ``|`` characters
     (ref stage2_ocr.py:381-399).
     """
+    if "|" not in text:
+        return text
     out: list[str] = []
     inside = False
     for line in text.split("\n"):
         is_row = line.count("|") >= 2
-        if is_row and not inside:
+        if is_row != inside:  # a run of rows starts or ends here
             out.append("")
-        elif not is_row and inside:
-            out.append("")
-        inside = is_row
+            inside = is_row
         out.append(line)
     return "\n".join(out)
 
@@ -232,7 +232,8 @@ def drop_integer_runs(text: str, min_run: int = 5) -> str:
 
 
 # --- C9 ---------------------------------------------------------------
-_BLANK_RUN_RE = re.compile(r"\n{3,}")
+# spelled with a literal prefix so the regex engine can scan ahead for it
+_BLANK_RUN_RE = re.compile(r"\n\n\n+")
 
 
 def squeeze_blanks(text: str) -> str:

@@ -1,4 +1,5 @@
-"""Forgiving HTML → lightweight DOM tree, built on stdlib ``html.parser``.
+"""Forgiving HTML → lightweight DOM tree: a one-pass regex scanner, with
+stdlib ``html.parser`` as its fallback.
 
 This replaces the reference's page-image rendering front end
 (/root/reference/src/stage2_ocr.py:406-442): for web pages the "page"
@@ -19,11 +20,16 @@ import re
 from html.parser import HTMLParser
 
 
+# shared by every element without attributes; attr dicts are never
+# mutated after the parse (readers use attr()/classes()/get only)
+_NO_ATTRS: dict[str, str] = {}
+
+
 class Node:
     """An element node.  Text nodes are plain ``str`` children.
 
-    ``hints`` is set only on the ``#document`` root by the fast
-    tokenizer: the pre-order main-content candidates
+    ``hints`` is set only on the ``#document`` root by the scanner
+    (`_parse_html_fast`): the pre-order main-content candidates
     (main, article, role_main, content_div, body) recorded during the
     parse so blocks.select_main_root skips its second full traversal.
     Unset (AttributeError via getattr default) on stdlib-parsed trees.
@@ -33,7 +39,7 @@ class Node:
 
     def __init__(self, tag: str, attrs: dict[str, str] | None = None):
         self.tag = tag
-        self.attrs = attrs or {}
+        self.attrs = attrs or _NO_ATTRS
         self.children: list[Node | str] = []
 
     # -- convenience accessors -----------------------------------------
@@ -197,36 +203,114 @@ def _parse_html_stdlib(html: str) -> Node:
     return builder.root
 
 
-# --- fast tokenizer ----------------------------------------------------------
-# html.parser spends most of its time in position tracking and eager
-# attribute parsing (profiled: ~70% of kernel CPU).  This scanner emits
-# the same callback stream into the same _TreeBuilder, but: attributes
-# are parsed lazily (only for tags whose attrs the renderer reads),
-# entity unescaping runs only when '&' is present, and raw-text elements
-# (script/style/...) are skipped with a single find().
+# --- scanner -----------------------------------------------------------------
+# One compiled tag regex splits the whole document in a single `re.split`
+# (a C loop); the Python loop in `_parse_html_fast` only builds the tree.
+# The split list holds, per tag, its groups and then the text up to the
+# next tag, so a '<' that starts no tag stays inside that text.  Attributes are parsed lazily (only
+# for tags whose attributes a caller reads) and memoized; entity
+# unescaping runs only on text that contains '&'.  Each group costs a
+# slice per tag, so there are few.
 
 import html as _html_mod
 
-_TAG_RE = re.compile(
-    r"<(?:"
-    r"!--(?P<comment>.*?)(?:-->|$)"
-    r"|!\[CDATA\[(?P<cdata>.*?)(?:\]\]>|$)"
-    r"|(?P<decl>![^>]*)>"
-    r"|\?(?P<pi>[^>]*)>"
-    # attrs via "unrolled loop": one linear scan of plain chars, the
-    # quoted alternatives tried only at actual quote characters —
-    # measured ~14% faster than the naive per-char alternation and
-    # match-for-match identical on the fixture corpus
-    r"|(?P<end>/)?(?P<name>[a-zA-Z][a-zA-Z0-9:_.-]*)(?P<attrs>[^>\"']*(?:\"[^\"]*\"[^>\"']*|'[^']*'[^>\"']*)*)(?P<selfclose>/?)>"
-    r")",
-    re.DOTALL,
+# raw-text elements: content is literal until the matching end tag
+_RAW_TEXT = frozenset(("script", "style", "textarea", "title"))
+
+_NAME = r"[a-zA-Z][a-zA-Z0-9:_.-]*"
+# attrs via "unrolled loop": one linear scan of plain chars, the quoted
+# alternatives tried only at quote characters.  A '>' inside a quoted
+# value does not end the tag; a quote that never closes leaves no tag,
+# so the '<' is text.  A trailing '/' lands in the attrs, so no tag
+# self-closes.
+_ATTRS = r"[^>\"']*(?:\"[^\"]*\"[^>\"']*|'[^']*'[^>\"']*)*"
+# comment, CDATA, declaration, processing instruction: dropped
+_DROPPED = r"!--.*?(?:-->|$)|!\[CDATA\[.*?(?:\]\]>|$)|![^>]*>|\?[^>]*>"
+# a whole raw-text element: start tag in any case, body to the first
+# lowercase '</name', then past the next '>'; with no such close, the
+# rest of the document (its body is never tokenized as markup)
+_RAW_ELEMENT = "|".join(
+    "".join(f"[{c}{c.upper()}]" for c in tag)
+    + rf"(?![a-zA-Z0-9:_.-]){_ATTRS}>(?:.*?</{tag}[^>]*>?|.*)"
+    for tag in sorted(_RAW_TEXT)
 )
+
+
+def _tag_re(raw_element: str) -> re.Pattern:
+    # groups: 1 raw-text element (from `raw_element`), 2 '/' of an end
+    # tag, 3 tag name, 4 attrs; dropped markup leaves all four None
+    return re.compile(
+        rf"<(?:({raw_element})|(/)?({_NAME})({_ATTRS})>|{_DROPPED})", re.DOTALL
+    )
+
+
+_TAG_RE = _tag_re(_RAW_ELEMENT)
+# the same groups, with a raw-text alternative that never matches
+_BARE_TAG_RE = _tag_re("(?!)")
+# the start tag at the head of a raw-text element (group 1 of _TAG_RE)
+_RAW_START_RE = re.compile(rf"([a-zA-Z]+)({_ATTRS})>")
+
+
+def _raw_element(raw: str) -> tuple[str, str, str | None]:
+    """(name, attrs, body) of a `_TAG_RE` raw-text element; body is
+    None when no lowercase close follows the start tag."""
+    start = _RAW_START_RE.match(raw)
+    name, attrs = start.groups()
+    close = raw.find("</" + name.lower(), start.end())
+    return name, attrs, None if close == -1 else raw[start.end() : close]
+
+
+def _split_from(html: str, pos: int) -> list:
+    """`_TAG_RE.split(html[pos:])[1:]` for a `pos` where a tag starts,
+    with every raw-text body found the slow, exact way: the first
+    `</name` in lowercase, else the first in any case (an index into the
+    lowered document), then past the next '>'.  Linear however many
+    elements need the second search."""
+    parts: list = []
+    lowered = None
+    n = len(html)
+    while pos < n:
+        for m in _BARE_TAG_RE.finditer(html, pos):
+            if parts:
+                parts.append(html[pos : m.start()])  # text after the last tag
+            raw, end, name, attrs = m.groups()
+            pos = m.end()
+            if end or not name or name.lower() not in _RAW_TEXT:
+                parts += (raw, end, name, attrs)
+                continue
+            tag = name.lower()
+            close = html.find("</" + tag, pos)
+            if close == -1:
+                if lowered is None:
+                    lowered = html.lower()
+                close = lowered.find("</" + tag, pos)
+            if close == -1:
+                body, pos = html[pos:], n
+            else:
+                body = html[pos:close]
+                gt = html.find(">", close)
+                pos = n if gt == -1 else gt + 1
+            # as `_TAG_RE` would give it, had the close been lowercase
+            parts += (f"{tag}{attrs}>{body}</{tag}>", None, None, None)
+            break
+        else:
+            break
+    parts.append(html[pos:])
+    return parts
+
+
+def _split_slow(html: str) -> list:
+    """`_split_from` the first raw-text element with no lowercase close."""
+    for m in _TAG_RE.finditer(html):
+        raw = m.group(1)
+        if raw and _raw_element(raw)[2] is None:
+            return _split_from(html, m.start())
+    raise ValueError("no raw-text element without a lowercase close")
+
+
 _ATTR_RE = re.compile(
     r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*(\"[^\"]*\"|'[^']*'|[^\s>]*))?"
 )
-# tag-name prefix of a '<'..'>' segment — same charset as _TAG_RE's name
-# group; used by the scanner's quoted-attr fast path
-_NAME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9:_.-]*")
 
 # tags whose attributes the renderer actually reads (id/class/role/alt);
 # everything else skips attribute parsing entirely
@@ -235,9 +319,6 @@ _ATTR_TAGS = frozenset(
     "summary table ul ol p blockquote pre img figure svg h1 h2 h3 h4 h5 h6 "
     "body dl menu form iframe".split()
 )
-
-# raw-text elements: content is literal until the matching end tag
-_RAW_TEXT = ("script", "style", "textarea", "title")
 
 # head-metadata tags whose attributes are parsed only when the caller
 # opts in (kernel/metadata.py): the extraction hot path never reads
@@ -287,221 +368,146 @@ def _parse_attrs(raw: str) -> dict[str, str]:
     return attrs
 
 
+# tag name as written -> lowercase name, one shared string per spelling
+# (no per-tag str.lower(), and set lookups reuse its cached hash);
+# bounded like _ATTRS_MEMO
+_TAG_NAMES: dict[str, str] = {}
+_TAG_NAMES_MAX = 4096
+_TAG_NAMES_KEY_MAX = 32
+
+
+def _tag_name(name: str) -> str:
+    tag = name.lower()
+    if len(name) <= _TAG_NAMES_KEY_MAX and len(_TAG_NAMES) < _TAG_NAMES_MAX:
+        _TAG_NAMES[name] = tag
+    return tag
+
+
 def _parse_html_fast(
     html: str, hrefs: bool = False, metadata: bool = False
 ) -> Node:
-    """String-scanner with the tree-builder's start/end logic inlined.
+    """Tag loop with the tree-builder's start/end logic inlined.
 
     Must mirror _TreeBuilder._handle_start_parsed / handle_endtag /
-    _implied_closes exactly — the fast-vs-stdlib equivalence test
-    (tests/test_dom_blocks.py) pins the two paths to identical output.
-
-    Two tiers (corpus mix: ~46% pure end tags, ~32% attr-less start
-    tags, ~21% quoted-attr tags):
-      * memchr tier — `str.find('<') + find('>')` and a pure-name
-        segment check handle end tags and bare start tags with zero
-        regex work;
-      * regex tier — anything else (attrs, quotes, comments, decls,
-        stray '<') goes through _TAG_RE.search at the found '<', which
-        preserves the scanner's exact boundary semantics (quoted '>',
-        skipped non-tags become text, selfclose group absorbed by the
-        attrs chunk).
+    _implied_closes exactly — the fast-vs-stdlib equivalence tests
+    (tests/test_dom_blocks.py, tests/test_properties.py) pin the two
+    to the same extraction output, and tests/test_scanner_oracle.py pins
+    the tree node for node to the two-tier scanner this one replaced.
     """
     root = Node("#document")
     stack = [root]
     open_p = 0  # count of <p> nodes currently on the stack
-    search = _TAG_RE.search
-    find = html.find
     unescape = _html_mod.unescape
+    names = _TAG_NAMES
     heading_tags = _TreeBuilder._HEADING_TAGS
     # main-content candidates, recorded in pre-order during the parse
     # (start-tag emission order == tree pre-order) so select_main_root
     # needs no second traversal; the logic mirrors its if/elif chain
     # exactly — equivalence pinned by tests/test_dom_blocks.py
     main_node = article = role_main = content_div = body = None
-    lowered = None  # lazily-lowered copy for case-insensitive raw-text closes
-    pos = 0
-    n = len(html)
-    while pos < n:
-        lt = find("<", pos)
-        if lt == -1:
-            text = html[pos:]
-            if "&" in text:
-                text = unescape(text)
-            stack[-1].children.append(text)
-            break
-        tag = None
-        is_end = False
-        attrs_raw = ""
-        selfclose = ""
-        nxt = html[lt + 1 : lt + 2]
-        if nxt == "/":
-            gt = find(">", lt + 2)
-            if gt != -1:
-                seg = html[lt + 2 : gt]
-                # pure-name end tag: '</div>' — no attrs, ASCII name
-                if (
-                    seg
-                    and seg.isascii()
-                    and seg.isalnum()
-                    and not seg[0].isdigit()
-                ):
-                    tag = seg.lower()
-                    is_end = True
-                    tag_start, tag_end = lt, gt + 1
-        elif nxt and nxt.isascii() and nxt.isalpha():
-            gt = find(">", lt + 1)
-            if gt != -1:
-                seg = html[lt + 1 : gt]
-                # bare start tag: '<p>', '<h1>', '<DIV>' — name only
-                if seg.isascii() and seg.isalnum():
-                    tag = seg.lower()
-                    tag_start, tag_end = lt, gt + 1
-                else:
-                    # quoted/attr start tag, single quote STYLE only with
-                    # an even count: every quote is closed, so this '>'
-                    # cannot sit inside a value and the regex would match
-                    # exactly this span.  (Mixed quote styles can balance
-                    # across a mid-quote cut — those take the regex tier.)
-                    dq, sq = '"' in seg, "'" in seg
-                    if (
-                        (not dq or not sq)
-                        and (not dq or seg.count('"') % 2 == 0)
-                        and (not sq or seg.count("'") % 2 == 0)
-                    ):
-                        m2 = _NAME_RE.match(seg)
-                        if m2 is not None:
-                            tag = m2.group().lower()
-                            attrs_raw = seg[m2.end() :]
-                            tag_start, tag_end = lt, gt + 1
-        if tag is None:
-            # regex tier: one search = find-next-tag + tokenize in a
-            # single C call; stray '<'s that don't form a tag stay
-            # inside the preceding text chunk (same concatenated text
-            # as html.parser's chunking)
-            m = search(html, lt)
-            if m is None:
-                text = html[pos:]
-                if "&" in text:
-                    text = unescape(text)
-                stack[-1].children.append(text)
-                break
-            tag_start, tag_end = m.start(), m.end()
-            # groups 5-8: end, name, attrs, selfclose
-            end_g, name, attrs_raw, selfclose = m.group(5, 6, 7, 8)
-            if name is None:
-                # comment/decl/cdata/pi: dropped (but flush text first)
-                if tag_start > pos:
-                    text = html[pos:tag_start]
-                    if "&" in text:
-                        text = unescape(text)
-                    stack[-1].children.append(text)
-                pos = tag_end
-                continue
-            tag = name.lower()
-            is_end = bool(end_g)
-        if tag_start > pos:
-            text = html[pos:tag_start]
-            if "&" in text:
-                text = unescape(text)
-            stack[-1].children.append(text)
-        pos = tag_end
-        if is_end:
-            # -- inlined handle_endtag --
-            if tag in VOID_TAGS:
-                continue
-            for depth in range(len(stack) - 1, 0, -1):
-                if stack[depth].tag == tag:
-                    if open_p:
-                        for node in stack[depth:]:
-                            if node.tag == "p":
-                                open_p -= 1
-                    del stack[depth:]
+    tags = iter(_TAG_RE.split(html))
+    text = next(tags)  # before the first tag
+    if text:
+        root.children.append(unescape(text) if "&" in text else text)
+    while tags is not None:
+        split, tags = tags, None
+        for raw, end, name, attrs_raw, text in zip(split, split, split, split, split):
+            if name:
+                tag = names.get(name) or _tag_name(name)
+            elif raw:
+                name, attrs_raw, raw_body = _raw_element(raw)
+                if raw_body is None:
+                    # no lowercase close: this element and everything
+                    # after it take the slow, exact path
+                    tags = iter(_split_slow(html))
                     break
-            continue
-        if attrs_raw and (
-            tag in _ATTR_TAGS
-            or "class" in attrs_raw
-            or "id" in attrs_raw
-            or "role" in attrs_raw
-            or "alt" in attrs_raw
-            # opt-in (kernel/links.py): the extraction hot path never
-            # reads hrefs, so anchors skip attr parsing by default
-            or (hrefs and "href" in attrs_raw)
-            # opt-in (kernel/metadata.py): head-metadata tags
-            or (metadata and tag in _META_TAGS)
-        ):
-            attrs = _parse_attrs(attrs_raw)
-        else:
-            attrs = {}
-        # -- inlined _implied_closes + _handle_start_parsed --
-        if tag in _IMPLIED_TAGS:
-            siblings = _SIBLING_CLOSERS.get(tag)
-            if siblings:
-                while len(stack) > 1 and stack[-1].tag in siblings:
+                tag = names.get(name) or _tag_name(name)
+            else:
+                tag = None  # comment, CDATA, declaration, PI: dropped
+            if end:
+                # -- inlined handle_endtag --
+                if stack[-1].tag == tag:
                     stack.pop()
-            if tag in _P_CLOSERS:
-                if stack[-1].tag in heading_tags and len(stack) > 1:
-                    stack.pop()
-                if open_p:
-                    blocked = False
-                    while len(stack) > 1 and stack[-1].tag != "p":
-                        t = stack[-1].tag
-                        if t in _P_CLOSERS or t in ("td", "th", "li", "body", "html"):
-                            blocked = True
-                            break
-                        stack.pop()
-                    if not blocked and len(stack) > 1 and stack[-1].tag == "p":
-                        stack.pop()
+                    if tag == "p":
                         open_p -= 1
-        node = Node(tag, attrs)
-        if main_node is None:
-            if tag == "main":
-                main_node = node
-            else:
-                if tag == "article":
-                    if article is None:
-                        article = node
-                elif attrs:
-                    if (
-                        role_main is None
-                        and attrs.get("role", "").lower() == "main"
-                    ):
-                        role_main = node
-                    elif (
-                        content_div is None
-                        and (tag == "div" or tag == "section")
-                        and attrs.get("id", "").lower() in _CONTENT_IDS
-                    ):
-                        content_div = node
-                if tag == "body" and body is None:
-                    body = node
-        stack[-1].children.append(node)
-        if selfclose or tag in VOID_TAGS:
-            continue
-        stack.append(node)
-        if tag == "p":
-            open_p += 1
-        if tag in _RAW_TEXT:
-            close = html.find(f"</{tag}", pos)
-            if close == -1:
-                # case-insensitive fallback (</SCRIPT>): lower the doc
-                # ONCE and reuse — a fresh .lower() per raw-text tag is
-                # O(n) each, quadratic on pages with many uppercase-
-                # closed scripts (measured 4x time at 2x tags)
-                if lowered is None:
-                    lowered = html.lower()
-                close = lowered.find(f"</{tag}", pos)
-            if close == -1:
-                raw = html[pos:]
-                pos = n
-            else:
-                raw = html[pos:close]
-                gt = html.find(">", close)
-                pos = n if gt == -1 else gt + 1
-            if raw:
-                stack[-1].children.append(raw)
-            stack.pop()  # the raw-text element we just pushed (never <p>)
+                elif tag not in VOID_TAGS:
+                    for depth in range(len(stack) - 2, 0, -1):
+                        if stack[depth].tag == tag:
+                            if open_p:
+                                for node in stack[depth:]:
+                                    if node.tag == "p":
+                                        open_p -= 1
+                            del stack[depth:]
+                            break
+            elif tag is not None:
+                if attrs_raw and (
+                    tag in _ATTR_TAGS
+                    or "class" in attrs_raw
+                    or "id" in attrs_raw
+                    or "role" in attrs_raw
+                    or "alt" in attrs_raw
+                    # opt-in (kernel/links.py): the extraction hot path
+                    # never reads hrefs, so anchors skip attr parsing
+                    or (hrefs and "href" in attrs_raw)
+                    # opt-in (kernel/metadata.py): head-metadata tags
+                    or (metadata and tag in _META_TAGS)
+                ):
+                    attrs = _parse_attrs(attrs_raw)
+                else:
+                    attrs = _NO_ATTRS
+                # -- inlined _implied_closes + _handle_start_parsed --
+                if tag in _IMPLIED_TAGS:
+                    siblings = _SIBLING_CLOSERS.get(tag)
+                    if siblings:
+                        while len(stack) > 1 and stack[-1].tag in siblings:
+                            stack.pop()
+                    if tag in _P_CLOSERS:
+                        if stack[-1].tag in heading_tags and len(stack) > 1:
+                            stack.pop()
+                        if open_p:
+                            blocked = False
+                            while len(stack) > 1 and stack[-1].tag != "p":
+                                t = stack[-1].tag
+                                if t in _P_CLOSERS or t in ("td", "th", "li", "body", "html"):
+                                    blocked = True
+                                    break
+                                stack.pop()
+                            if not blocked and len(stack) > 1 and stack[-1].tag == "p":
+                                stack.pop()
+                                open_p -= 1
+                node = Node(tag, attrs)
+                if main_node is None:
+                    if tag == "main":
+                        main_node = node
+                    else:
+                        if tag == "article":
+                            if article is None:
+                                article = node
+                        elif attrs:
+                            if (
+                                role_main is None
+                                and attrs.get("role", "").lower() == "main"
+                            ):
+                                role_main = node
+                            elif (
+                                content_div is None
+                                and (tag == "div" or tag == "section")
+                                and attrs.get("id", "").lower() in _CONTENT_IDS
+                            ):
+                                content_div = node
+                        if tag == "body" and body is None:
+                            body = node
+                stack[-1].children.append(node)
+                if raw:
+                    # a raw-text element holds its body and never stays open
+                    if raw_body:
+                        node.children.append(raw_body)
+                elif tag not in VOID_TAGS:
+                    stack.append(node)
+                    if tag == "p":
+                        open_p += 1
+            if text:
+                stack[-1].children.append(unescape(text) if "&" in text else text)
     root.hints = (main_node, article, role_main, content_div, body)
     return root
 
@@ -588,12 +594,14 @@ def parse_html(
 ) -> Node:
     """Parse an HTML document (bytes are charset-sniffed via decode_html).
 
-    Uses the string/regex scanner; a scanner exception falls back to
+    Uses the one-pass regex scanner; a scanner exception falls back to
     `_parse_html_stdlib` (html.parser).  Both drive the same
     tree-building logic and are asserted to produce identical
     extraction output over the fixture corpus, the 420-case
     differential suite, and the property-test grammar
-    (tests/test_dom_blocks.py, tests/test_properties.py).
+    (tests/test_dom_blocks.py, tests/test_properties.py).  The scanner's
+    trees are pinned node for node to the two-tier scanner it replaced
+    (tests/oracle_scanner.py, tests/test_scanner_oracle.py).
 
     Equivalence envelope: on well-formed(-ish) markup — including
     quoted attributes with '>' in values, mixed quote styles, stray
@@ -604,8 +612,8 @@ def parse_html(
     plan uses the same tokenizer, so the per-url byte-identity
     invariant is unaffected (measured: ~0 divergence on the corpus
     grammar; deliberate-garbage fuzz diverges, identically across
-    rounds — the scanner's boundary behavior is pinned bit-for-bit by
-    a 15k-case cross-round differential)."""
+    rounds — the scanner's boundary behavior is pinned by the oracle
+    differential above)."""
     if isinstance(html, (bytes, bytearray)):
         html = decode_html(bytes(html))
     try:

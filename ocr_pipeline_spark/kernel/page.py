@@ -11,6 +11,7 @@ pure function of the page bytes.
 
 from __future__ import annotations
 
+import gc
 import re
 from dataclasses import dataclass, field
 
@@ -61,25 +62,29 @@ class PageResult:
 
 
 # --- span computation ---------------------------------------------------
-_TABLE_LINE = re.compile(r"^[^\n]*\|[^\n]*\|")
 _LIST_LINE = re.compile(r"^(?:[-*] |\d+\. )")
 
 
+# first character -> (prefix, kind) for the kinds a prefix decides
+_PREFIX_KINDS = {
+    "<": ("<!--", "meta"),
+    "#": ("#", "heading"),
+    "`": ("```", "code"),
+    "!": ("![", "figure"),
+    ">": ("> ", "quote"),
+}
+
+
 def _segment_kind(segment: str) -> str:
-    if segment.startswith("<!--"):
-        return "meta"
-    if segment.startswith("#"):
-        return "heading"
-    if segment.startswith("```"):
-        return "code"
-    if segment.startswith("!["):
-        return "figure"
-    if segment.startswith("> "):
-        return "quote"
-    if _LIST_LINE.match(segment):
+    head = segment[:1]
+    prefix_kind = _PREFIX_KINDS.get(head)
+    if prefix_kind is not None and segment.startswith(prefix_kind[0]):
+        return prefix_kind[1]
+    # isdigit() admits every character \d does
+    if (head == "-" or head == "*" or head.isdigit()) and _LIST_LINE.match(segment):
         return "list"
-    first_line = segment.split("\n", 1)[0]
-    if first_line.count("|") >= 2:
+    line_end = segment.find("\n")
+    if segment.count("|", 0, line_end if line_end != -1 else len(segment)) >= 2:
         return "table"
     if segment.strip() == "---":
         return "rule"
@@ -163,14 +168,30 @@ def extract_body(html: str | bytes) -> tuple[str, dict, list[str], int]:
 def extract_page(
     html: str | bytes, page_num: int = 1, describe: bool = False
 ) -> PageResult:
-    """The full per-page kernel (pure, deterministic)."""
-    body, classification, diagram_sources, n_figures = extract_body(html)
-    description = ""
-    if describe and wants_description(classification) and diagram_sources:
-        description = "\n\n".join(
-            describe_diagram_source(s) for s in diagram_sources
+    """The full per-page kernel (pure, deterministic).
+
+    The cyclic garbage collector is paused for the page.  The kernel
+    creates no reference cycles (pinned by tests/test_kernel_ledger.py),
+    so reference counting frees everything it builds; the collector
+    would only re-scan the page's live tree each time allocations pile
+    up and promote it through its generations (29% of parse and 17% of
+    render time on crawl_large in the benchmark's Spark driver,
+    docs/DESIGN.md §5 item 9)."""
+    collecting = gc.isenabled()
+    gc.disable()
+    try:
+        body, classification, diagram_sources, n_figures = extract_body(html)
+        description = ""
+        if describe and wants_description(classification) and diagram_sources:
+            description = "\n\n".join(
+                describe_diagram_source(s) for s in diagram_sources
+            )
+        markdown, method, spans = finalize_page(
+            body, classification, description, page_num
         )
-    markdown, method, spans = finalize_page(body, classification, description, page_num)
+    finally:
+        if collecting:
+            gc.enable()
     return PageResult(
         markdown=markdown,
         body=body,

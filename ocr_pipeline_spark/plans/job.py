@@ -17,6 +17,7 @@ Physical plan notes (SURVEY.md §3.4/§4):
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark import AccumulatorParam
@@ -40,6 +41,27 @@ INPUT_COLUMNS = ("url", "warc_ts", "html", "lang")
 # bound executor memory (SURVEY.md §7.3).
 ARROW_BATCH_ROWS = "512"
 
+# ceiling for the host-sized driver memory default
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """`spark.driver.memory` for a local session: $SPARK_GRAFT_DRIVER_MEM
+    when set, else half of the host's MemTotal, capped at 48g (the cap
+    when MemTotal cannot be read).  In local mode the driver JVM is the
+    only memory pool, so a fixed size would overcommit small hosts."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{max(1, min(total_kb // 2048, DRIVER_MEM_CAP_MB))}m"
+
 
 def default_session(
     master: str = "local[*]",
@@ -47,8 +69,6 @@ def default_session(
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    import os
-
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -65,10 +85,7 @@ def default_session(
         .config("spark.io.compression.codec", "zstd")
         # local mode: the driver JVM is the only memory pool; multi-KB
         # binary html cells also need a smaller columnar reader batch
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        )
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
         # UI is opt-in (SPARK_GRAFT_UI=1): off by default so bench runs
         # and tests don't pay the UI server; `extra` overrides either way
