@@ -6,7 +6,7 @@
 
 Headline: end-to-end extraction (docs/sec) over a deterministic
 synthetic pages table sized by SF (materialized to parquet once and
-reused), plus the relational/driver queries at $SPARK_GRAFT_SF_DIR.
+reused), plus every queries() entry at $SPARK_GRAFT_SF_DIR.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
@@ -172,51 +172,13 @@ def main() -> None:
     if mode == "full":
         import __spark_entry__ as entry_mod
 
-        bench_queries = [
-            "pricing_summary", "revenue_by_nation", "top_orders",
-            "latest_event_per_user", "events_daily", "docs_by_lang",
-            "dedup_exact", "token_stats", "quality_scores",
-            "embedding_knn", "extract_documents", "lang_simhash",
-            "minhash_dup_pairs", "events_sessionized", "events_pivot",
-            "host_stats", "doc_fingerprints", "near_dup_verified",
-            "ann_lsh", "embedding_near_dup_lsh", "assemble_documents",
-            "pdf_page_explode", "lang_pred", "shipping_priority",
-            "promo_revenue", "priority_returned_orders",
-            "top_orders_per_segment", "jaccard_pairs_host",
-            "dup_components_host", "train_test_split", "pack_sequences",
-            "doc_chunks", "daily_active_users", "extract_pdf_documents",
-            "media_features", "repetition_stats", "pii_scrub",
-            "contamination_check", "embedding_quantize",
-            "supplier_share", "order_quartiles", "simhash_dup_pairs",
-            "dup_spans", "filter_funnel", "dedup_apply_spans",
-            "stratified_sample", "host_link_graph", "host_pagerank",
-            "bm25_search", "vocab_stats", "incremental_dedup",
-            "compression_signal", "lm_score", "bpe_pair_counts",
-            "bpe_encode_stats", "term_postings", "blocklist_tags",
-            "mixing_weights", "semdedup", "warc_records",
-            "dsir_weights", "classifier_scores", "line_dedup",
-            "snapshot_diff", "hybrid_search", "events_windowed_stream",
-            "anchor_texts", "robots_filter", "pdf_layout_markdown",
-            "doc_embeddings", "doc_embed_knn", "ann_lsh_recall",
-            "ann_ivf_recall", "embedding_near_dup_lsh_recall",
-            "pagerank_step", "cdx_index", "corpus_curation",
-            "frontier_schedule", "doc_embed_semdedup",
-            # new in round 5 (late)
-            "page_metadata", "extract_fidelity", "text_normalize",
-            "fuzzy_decontamination", "wet_export",
-            "dedup_soft_weights", "url_canonical_dedup",
-            "host_url_hll", "heavy_hitters_cms", "containment_pairs",
-            "gopher_rules", "seq_len_buckets", "bloom_dedup_probe",
-            "link_spam", "hits_step", "robots_parse", "embedding_outliers",
-            "mojibake_repair", "host_template_lines", "phrase_search",
-            "sitemap_parse", "c4_filters",
-        ]
+        qs = entry_mod.queries()
+        bench_queries = list(qs)
         if sf != entry_mod.LINK_WITNESS_SF:
             # their oracles exist only at the witness scale; they raise
             bench_queries = [
                 q for q in bench_queries if q not in ("link_spam", "hits_step")
             ]
-        qs = entry_mod.queries()
         # reference times from the last clean same-sf campaign (committed
         # as bench_ref.json): a best-of-N that still exceeds the clean
         # reference by >1.5x is treated as co-tenant-poisoned and re-run

@@ -10,10 +10,9 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+# Only the tables a query reads: a query over a retired table (the
+# TPC-H star or the events log) fails the compare loudly.
+TABLES = ("documents", "embeddings")
 
 
 @pytest.fixture(scope="module")
@@ -50,6 +49,10 @@ def _value_hash(rows, columns):
 
 
 ORACLE_KEYS = sorted(entry_mod.oracle_sql().keys())
+
+# Columns allowed a NULL cell.  hybrid_search fuses two ranked lists; a
+# document absent from one of them has no rank there.
+NULLABLE_COLUMNS = {"hybrid_search": {"r_lex", "r_dense"}}
 
 
 def test_every_oracle_key_has_a_query():
@@ -95,6 +98,14 @@ def test_query_matches_oracle(spark, ddb, name):
     assert sorted(spark_cols) == sorted(duck_cols), (
         f"{name}: column mismatch {spark_cols} vs {duck_cols}"
     )
+    # `_norm` maps None to the same token on both sides, so the hash
+    # compare alone cannot catch a NULL cell.
+    nullable = NULLABLE_COLUMNS.get(name, set())
+    null_cols = {
+        c for r in spark_rows for c, v in zip(spark_cols, r)
+        if v is None and c not in nullable
+    }
+    assert not null_cols, f"{name}: NULL cells in {sorted(null_cols)}"
     assert len(spark_rows) == len(duck_rows), (
         f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
     )
@@ -181,27 +192,6 @@ def test_near_dup_verified_consistent_with_exact_oracle(spark):
             assert (a, b) in exact, (a, b, j)
 
 
-def test_approx_distinct_within_tolerance_of_exact(spark):
-    """approx_count_distinct (HLL) is the scale path for reach-style
-    metrics; its error must stay inside the configured rsd against the
-    oracled exact query."""
-    from pyspark.sql import functions as F
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    day = F.date_format("ts", "yyyy-MM-dd").alias("day")
-    approx = {
-        r.day: r.n
-        for r in ev.groupBy(day)
-        .agg(F.approx_count_distinct("user_id", rsd=0.02).alias("n"))
-        .collect()
-    }
-    exact = {r.day: r.n_users for r in
-             entry_mod.queries()["daily_active_users"](spark, SF_DIR).collect()}
-    assert approx.keys() == exact.keys()
-    for d, n in exact.items():
-        assert abs(approx[d] - n) <= max(3, 0.06 * n), (d, approx[d], n)
-
-
 def test_approx_percentile_within_tolerance_of_exact(spark):
     """approx_percentile (the t-digest-style sketch — the scale path
     for distribution stats) must land within a small rank error of the
@@ -270,11 +260,11 @@ def test_driver_window_allocation():
         "oracled query ordered after a non-oracled one"
     )
     window = set(names[:50])
-    # final round-5 allocation: after this round EVERY oracled query has
-    # had at least one driver CORRECTNESS row in some round.  The window
-    # holds the pinned core and every never-rowed query (round-5
-    # additions swapped in for multi-round-green members, which remain
-    # covered by the identical pytest compare).
+    # The window holds the pinned core, the queries that first got a
+    # CORRECTNESS row in round 5, and four web-text queries swapped into
+    # the slots the retired relational-shell queries (three event
+    # streams and order_quartiles) freed.  Members rotated out stay
+    # covered by the identical pytest compare.
     must_have = {
         # extraction family (always pinned)
         "extract_documents", "assemble_documents",
@@ -283,16 +273,13 @@ def test_driver_window_allocation():
         "page_metadata", "extract_fidelity", "text_normalize",
         # plans changed in round 5
         "dup_spans", "dedup_apply_spans", "dsir_weights",
-        # streaming
-        "events_sessionized_stream", "events_dedup_stream",
-        "events_windowed_stream",
         # near-dup flagships
         "minhash_dup_pairs", "near_dup_verified",
-        # never had a driver row before this round
+        # first CORRECTNESS row in round 5
         "doc_embeddings", "doc_embed_knn", "ann_lsh_recall",
         "ann_ivf_recall", "embedding_near_dup_lsh_recall",
         "pagerank_step", "hybrid_search", "anchor_texts",
-        "robots_filter", "order_quartiles", "bpe_pair_counts",
+        "robots_filter", "bpe_pair_counts",
         "bpe_merges", "fuzzy_decontamination", "wet_export",
         "dedup_soft_weights", "url_canonical_dedup", "host_url_hll",
         "heavy_hitters_cms", "containment_pairs", "cdx_index",
@@ -300,9 +287,12 @@ def test_driver_window_allocation():
         "gopher_rules", "seq_len_buckets", "bloom_dedup_probe",
         "link_spam", "hits_step", "robots_parse",
         "embedding_outliers",
-        # newest round-5 operators, never driver-rowed before
         "mojibake_repair", "host_template_lines", "phrase_search",
         "sitemap_parse",
+        # swapped in for the retired relational-shell queries:
+        # c4_filters never had a CORRECTNESS row; the other three have a
+        # green row in CORRECTNESS_r04
+        "c4_filters", "warc_records", "line_dedup", "classifier_scores",
     }
     assert len(must_have) == 50
     missing = must_have - window

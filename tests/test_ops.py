@@ -784,61 +784,6 @@ def test_cosine_bruteforce_degenerate_inputs(spark):
     assert [(r.id_a, r.id_b) for r in rows] == [(1, 3)]
 
 
-# --- as-of join ---------------------------------------------------------------
-def test_asof_join_semantics(spark):
-    from ocr_pipeline_spark.operators.asof import asof_join
-
-    left = spark.createDataFrame(
-        [(1, 100, 10), (2, 100, 25), (3, 200, 5), (4, 100, 10)],
-        "lid long, k long, t long",
-    )
-    right = spark.createDataFrame(
-        [(101, 100, 10), (102, 100, 10), (103, 100, 20), (104, 300, 1)],
-        "rid long, k long, t long",
-    )
-    out = {
-        r.lid: r.asof_rid
-        for r in asof_join(
-            left, right, key="k", left_time="t", right_time="t",
-            payload_cols=["rid"], tie_col="rid",
-        ).collect()
-    }
-    assert out[1] == 102  # inclusive <=; tie at t=10 -> max rid
-    assert out[4] == 102  # same left time, same match
-    assert out[2] == 103  # latest preceding
-    assert out[3] is None  # no right rows for key 200
-
-
-def test_interval_join_bucket_boundaries(spark):
-    from datetime import datetime
-
-    from ocr_pipeline_spark.operators.range_join import interval_join
-
-    def t(h, m=0, s=0):
-        return datetime(2024, 1, 1, h, m, s)
-
-    left = spark.createDataFrame(
-        [(1, 7, t(1), t(3)), (2, 7, t(10), t(10, 30))],
-        "lid long, k long, s timestamp, e timestamp",
-    )
-    right = spark.createDataFrame(
-        [
-            (100, 7, t(0, 59)),   # before window 1
-            (101, 7, t(1)),       # inclusive start
-            (102, 7, t(2, 30)),   # inside, different bucket than start
-            (103, 7, t(3)),       # inclusive end
-            (104, 7, t(3, 0, 1)), # just after end
-            (105, 8, t(2)),       # wrong key
-            (106, 7, t(10, 15)),  # window 2
-        ],
-        "rid long, k long, ts timestamp",
-    )
-    out = {(r.lid, r.r_rid) for r in interval_join(
-        left, right, key="k", left_start="s", left_end="e", right_time="ts"
-    ).collect()}
-    assert out == {(1, 101), (1, 102), (1, 103), (2, 106)}
-
-
 # --- connected components ----------------------------------------------------
 def test_connected_components_chain_and_islands(spark):
     from ocr_pipeline_spark.operators.components import connected_components

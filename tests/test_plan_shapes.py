@@ -22,9 +22,6 @@ _NO_CROSS_QUERIES = [
     "ann_ivf",
     # embedding_knn excluded: its BNLJ is a ONE-ROW broadcast (attaching
     # the query vector to every row) — O(n), not all-pairs
-    "shipping_priority",
-    "promo_revenue",
-    "priority_returned_orders",
     "pack_sequences",
     "doc_chunks",
     "repetition_stats",

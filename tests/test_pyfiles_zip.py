@@ -1,5 +1,5 @@
 """The spark-submit artifact must never go stale: every tracked source
-module ships in dist/ocr_pipeline_spark.zip (the round-4 modules were
+module ships in dist/ocr_pipeline_spark.zip, and nothing else does (the round-4 modules were
 missing from a zip built months of commits earlier — a cluster submit
 would have ImportError'd on warc/layout/semdedup)."""
 
@@ -25,13 +25,22 @@ def test_pyfiles_zip_contains_every_source_module():
         )
     assert os.path.exists(zip_path), "run scripts/build_pyfiles.sh"
     missing, stale = [], []
-    with zipfile.ZipFile(zip_path) as z:
-        names = set(z.namelist())
+    sources = {
+        os.path.relpath(f, REPO)
         for f in glob.glob(
             os.path.join(REPO, "ocr_pipeline_spark", "**", "*.py"),
             recursive=True,
-        ):
-            rel = os.path.relpath(f, REPO)
+        )
+    }
+    with zipfile.ZipFile(zip_path) as z:
+        names = set(z.namelist())
+        # a module deleted from the tree but still in the zip would keep
+        # shipping to every executor
+        orphans = sorted(
+            n for n in names if n.endswith(".py") and n not in sources
+        )
+        for rel in sorted(sources):
+            f = os.path.join(REPO, rel)
             if rel not in names:
                 missing.append(rel)
                 continue
@@ -43,3 +52,4 @@ def test_pyfiles_zip_contains_every_source_module():
                     stale.append(rel)
     assert not missing, f"modules missing from dist zip, rebuild: {missing}"
     assert not stale, f"stale module bytes in dist zip, rebuild: {stale}"
+    assert not orphans, f"modules with no source in dist zip, rebuild: {orphans}"

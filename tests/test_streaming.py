@@ -103,339 +103,6 @@ def test_streaming_crawl_metrics_windows(spark, tmp_path):
         assert batch_map[k] == v
 
 
-def test_stateful_sessionization_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionization over a stream must produce
-    exactly the batch-window sessionization's CLOSED sessions (every
-    session but each user's final one, which stays open in state)."""
-    from pyspark.sql import Window
-
-    from ocr_pipeline_spark.streaming.stateful import sessionize_stream
-
-    src = str(tmp_path / "events_src")
-    sink = str(tmp_path / "sessions_out")
-    ckpt = str(tmp_path / "sessions_ckpt")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema(
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    ).parquet(src)
-    q = (
-        sessionize_stream(stream, gap_seconds=1800)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_start, r.n_events, r.session_value)
-        for r in spark.read.parquet(sink).collect()
-    }
-
-    # batch expectation: lag/cumsum sessionization, drop each user's last
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gapped = events.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts") - F.lag("ts", 1).over(w) > F.expr("INTERVAL 30 MINUTES"),
-            1,
-        ).otherwise(0),
-    ).withColumn(
-        "session_seq",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    sessions = gapped.groupBy("user_id", "session_seq").agg(
-        F.min("ts").alias("session_start"),
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("session_value"),
-        F.max("session_seq").alias("_seq"),
-    )
-    last_seq = sessions.groupBy("user_id").agg(
-        F.max("session_seq").alias("max_seq")
-    )
-    closed = sessions.join(last_seq, "user_id").filter(
-        F.col("session_seq") < F.col("max_seq")
-    )
-    want = {
-        (r.user_id, r.session_start, r.n_events, r.session_value)
-        for r in closed.collect()
-    }
-    assert got == want
-    assert len(got) > 0
-
-
-# --- stateful sessionizer: state bounds + ordering guards --------------------
-class _FakeState:
-    """Minimal GroupState stand-in for unit-testing the kernel."""
-
-    def __init__(self, value=None, timed_out=False):
-        self._value = value
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_ms = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, v):
-        self._value = v
-
-    def remove(self):
-        self._value = None
-        self.removed = True
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
-
-    def setTimeoutTimestamp(self, ts_ms):
-        self.timeout_ts_ms = ts_ms
-
-    def getCurrentWatermarkMs(self):
-        return getattr(self, "watermark_ms", 0)
-
-
-def test_sessionizer_timeout_emits_and_evicts():
-    import pandas as pd
-
-    from ocr_pipeline_spark.streaming.stateful import make_sessionizer
-
-    fn = make_sessionizer(gap_seconds=1800, timeout_factor=2)
-    t0 = pd.Timestamp("2024-01-01 10:00:00").value // 1000
-    state = _FakeState(value=(t0, t0 + 300_000_000, 3, 7.5), timed_out=True)
-    out = list(fn((1,), iter([]), state))
-    assert state.removed  # bounded state: idle user evicted
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert row["n_events"] == 3 and row["session_value"] == 7.5
-
-
-def test_sessionizer_sets_timeout_after_update():
-    import pandas as pd
-
-    from ocr_pipeline_spark.streaming.stateful import make_sessionizer
-
-    fn = make_sessionizer(gap_seconds=60, timeout_factor=3)
-    batch = pd.DataFrame(
-        {"event_id": [1], "ts": [pd.Timestamp("2024-01-01 10:00:00")],
-         "user_id": [1], "value": [1.0]}
-    )
-    state = _FakeState()
-    list(fn((1,), iter([batch]), state))
-    assert state.timeout_ms == 60 * 3 * 1000
-    assert state.exists
-
-
-def test_sessionizer_event_time_sets_gap_timeout():
-    """Event-time mode arms the timeout at session_end + gap (or just
-    past the watermark when that is already later)."""
-    import pandas as pd
-
-    from ocr_pipeline_spark.streaming.stateful import make_sessionizer
-
-    fn = make_sessionizer(gap_seconds=60, event_time_timeout=True)
-    t = pd.Timestamp("2024-01-01 10:00:00")
-    batch = pd.DataFrame(
-        {"event_id": [1], "ts": [t], "user_id": [1], "value": [1.0]}
-    )
-    state = _FakeState()
-    list(fn((1,), iter([batch]), state))
-    assert state.timeout_ts_ms == t.value // 1_000_000 + 60_000
-    # watermark already past the gap boundary: clamp to watermark + 1
-    state2 = _FakeState()
-    state2.watermark_ms = t.value // 1_000_000 + 3_600_000
-    list(fn((1,), iter([batch.assign(event_id=[2])]), state2))
-    assert state2.timeout_ts_ms == state2.watermark_ms + 1
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        make_sessionizer(60, timeout_factor=2, event_time_timeout=True)
-
-
-def test_sessionizer_drops_cross_batch_late_events(spark, tmp_path):
-    """An event arriving in a later micro-batch with ts older than the
-    stored session tail must be dropped, not silently merged."""
-    import pandas as pd
-
-    from ocr_pipeline_spark.streaming.stateful import sessionize_stream
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "event_id bigint, ts timestamp, user_id bigint, value double"
-
-    def run_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q = (
-            sessionize_stream(
-                spark.readStream.schema(schema).parquet(src), gap_seconds=1800
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    from datetime import datetime
-
-    ts = datetime.fromisoformat
-    run_batch([(1, ts("2024-01-01 10:00:00"), 7, 1.0),
-               (2, ts("2024-01-01 10:05:00"), 7, 2.0)])
-    # late event (09:00) + a far-future event that closes the session
-    run_batch([(3, ts("2024-01-01 09:00:00"), 7, 100.0),
-               (4, ts("2024-01-01 12:00:00"), 7, 4.0)])
-
-    rows = spark.read.parquet(sink).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    # the closed session is exactly the two in-order events — the late
-    # 09:00 event (value 100) contributed nothing
-    assert r.n_events == 2 and r.session_value == 3.0
-    assert r.session_start == ts("2024-01-01 10:00:00")
-    assert r.session_end == ts("2024-01-01 10:05:00")
-
-
-def test_sessionizer_event_time_replay_matches_batch(spark, tmp_path):
-    """r2 VERDICT #7: the event-time timeout is the replay-safe mode —
-    re-running a HISTORICAL stream under availableNow must close
-    sessions exactly where the batch twin does, INCLUDING each user's
-    final session (the watermark advances with the replayed data and
-    fires the pending timeouts before termination), with no dependence
-    on the wall clock of the replay."""
-    from pyspark.sql import Window
-
-    from ocr_pipeline_spark.streaming.stateful import sessionize_stream
-
-    src = str(tmp_path / "events_src")
-    sink = str(tmp_path / "sessions_out")
-    ckpt = str(tmp_path / "sessions_ckpt")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema(
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    ).parquet(src)
-    q = (
-        sessionize_stream(stream, gap_seconds=1800, event_time_timeout=True)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_start, r.n_events, r.session_value)
-        for r in spark.read.parquet(sink).collect()
-    }
-
-    # batch expectation: lag/cumsum sessionization, ALL sessions.  The
-    # final watermark is the max event time, so every session whose gap
-    # boundary lies at or before it closes; only sessions ending within
-    # `gap` of the stream's very last event can remain open.
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gapped = events.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts") - F.lag("ts", 1).over(w) > F.expr("INTERVAL 30 MINUTES"),
-            1,
-        ).otherwise(0),
-    ).withColumn(
-        "session_seq",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    sessions = gapped.groupBy("user_id", "session_seq").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("session_value"),
-    )
-    max_ts = events.agg(F.max("ts")).collect()[0][0]
-    closable = sessions.filter(
-        F.col("session_end") + F.expr("INTERVAL 30 MINUTES") <= F.lit(max_ts)
-    )
-    want = {
-        (r.user_id, r.session_start, r.n_events, r.session_value)
-        for r in closable.collect()
-    }
-    assert want <= got  # every batch-closable session was emitted
-    # anything extra can only be a final session within gap of stream end
-    extra = got - want
-    tails = {
-        (r.user_id, r.session_start, r.n_events, r.session_value)
-        for r in sessions.collect()
-    } - want
-    assert extra <= tails
-    assert len(got) > len(want) * 0  # non-trivial
-    assert got  # sessions actually emitted
-
-
-def test_sessionizer_timeout_fires_on_continuous_trigger(spark, tmp_path):
-    """With timeout_factor armed on a processingTime trigger, an idle
-    user's open session is emitted by the timeout (no closing event
-    needed) and the state row is evicted."""
-    import os
-    import time
-    from datetime import datetime
-
-    from ocr_pipeline_spark.streaming.stateful import sessionize_stream
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "event_id bigint, ts timestamp, user_id bigint, value double"
-    spark.createDataFrame(
-        [(1, datetime.fromisoformat("2024-01-01 10:00:00"), 9, 2.5)], schema
-    ).coalesce(1).write.parquet(src)
-
-    q = (
-        sessionize_stream(
-            spark.readStream.schema(schema).parquet(src),
-            gap_seconds=1, timeout_factor=2,   # 2s idle timeout
-        )
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        rows = []
-        while time.time() < deadline and not rows:
-            time.sleep(1)
-            if os.path.isdir(sink):
-                try:
-                    rows = spark.read.parquet(sink).collect()
-                except Exception:
-                    rows = []
-    finally:
-        q.stop()
-    assert len(rows) == 1
-    assert rows[0].n_events == 1 and rows[0].session_value == 2.5
-
-
 def test_streaming_dedup_drops_redelivery_across_microbatches(spark, tmp_path):
     """X35: dropDuplicatesWithinWatermark-based dedup must (a) process
     the re-delivered file in a SECOND micro-batch (cross-batch state,
