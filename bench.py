@@ -1,8 +1,13 @@
 #!/usr/bin/env python3
-"""Benchmark harness: prints ONE JSON line.
+"""Benchmark harness: prints ONE compact JSON line.
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": <float>, ...extras}
+     "queries": {...per-query sec...}, "sf": <float>,
+     "docs_per_sec": ..., "docs_per_sec_maponly": ...,
+     "docs_per_sec_e2e_write": ...}
+
+Run detail (CPUs, page and char counts, pre-leg idle fractions, query
+reruns) goes to BENCH/bench_detail.json, not to stdout.
 
 Headline: end-to-end extraction (docs/sec) over a deterministic
 synthetic pages table sized by SF (materialized to parquet once and
@@ -62,6 +67,10 @@ def _probe_idle(label: str, idle_fracs: dict, threshold: float = 0.85,
     return frac
 
 
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH", "bench_detail.json"
+)
+
 # pages per unit SF: sf0.1 -> 400k synthetic pages (~650 MB parquet)
 PAGES_PER_SF = 4_000_000
 SEED = 42
@@ -95,9 +104,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     timings: dict[str, float] = {}
-    extras: dict = {}
+    headline: dict[str, float] = {}  # docs/s, on the stdout line
     idle_fracs: dict[str, float] = {}
-    extras["idle_frac"] = idle_fracs
+    detail: dict = {"cpus": cpus, "idle_frac": idle_fracs}  # to DETAIL_PATH
 
     pages_path = materialize_pages(spark, n_pages)
 
@@ -134,9 +143,9 @@ def main() -> None:
         (_timed_extract(True) for _ in range(_n_runs(idle))), key=lambda r: r[0]
     )
     timings["extract_pages"] = round(t_extract, 3)
-    extras["docs_per_sec"] = round(agg["n"] / t_extract, 1)
-    extras["n_pages"] = int(agg["n"])
-    extras["chars_out"] = int(agg["chars"])
+    headline["docs_per_sec"] = round(agg["n"] / t_extract, 1)
+    detail["n_pages"] = int(agg["n"])
+    detail["chars_out"] = int(agg["chars"])
 
     # (b) map-only fast path (no input shuffle) — byte-identical output
     idle = _probe_idle("extract_pages_maponly", idle_fracs)
@@ -144,9 +153,10 @@ def main() -> None:
         (_timed_extract(False) for _ in range(_n_runs(idle))), key=lambda r: r[0]
     )
     timings["extract_pages_maponly"] = round(t_map, 3)
-    extras["docs_per_sec_maponly"] = round(n_pages / t_map, 1)
+    headline["docs_per_sec_maponly"] = round(n_pages / t_map, 1)
 
-    # (c) full pipeline incl. sink: bucketed write + manifests + metrics
+    # (c) full pipeline incl. sink: map-only kernel, one repartition by
+    # bucket, bucketed write + manifests + metrics
     import shutil
     import tempfile
 
@@ -158,7 +168,7 @@ def main() -> None:
             t0 = time.time()
             run_pipeline(
                 spark, spark.read.parquet(pages_path), wh, run_id="bench",
-                describe=True, n_buckets=32, co_locate_hosts=False,
+                describe=True, n_buckets=32,
             )
             return time.time() - t0
         finally:
@@ -167,7 +177,7 @@ def main() -> None:
     idle = _probe_idle("extract_pipeline_write", idle_fracs)
     t_pipe = min(_timed_pipeline() for _ in range(_n_runs(idle)))
     timings["extract_pipeline_write"] = round(t_pipe, 3)
-    extras["docs_per_sec_e2e_write"] = round(n_pages / t_pipe, 1)
+    headline["docs_per_sec_e2e_write"] = round(n_pages / t_pipe, 1)
 
     if mode == "full":
         import __spark_entry__ as entry_mod
@@ -221,7 +231,7 @@ def main() -> None:
                 runs.append(_timed_query())
                 n_extra_runs += 1
             timings[name] = round(min(runs), 3)
-        extras["bench_rerun_count"] = n_extra_runs
+        detail["bench_rerun_count"] = n_extra_runs
         idle_fracs["query_suite_post"] = _cpu_idle_frac()
 
     total = round(sum(timings.values()), 3)
@@ -231,10 +241,13 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        **extras,
+        **headline,
     }
     spark.stop()
-    print(json.dumps(result))
+    os.makedirs(os.path.dirname(DETAIL_PATH), exist_ok=True)
+    with open(DETAIL_PATH, "w") as fh:
+        json.dump(detail, fh, indent=1, sort_keys=True)
+    print(json.dumps(result, separators=(",", ":")))
 
 
 if __name__ == "__main__":

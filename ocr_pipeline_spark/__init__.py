@@ -20,8 +20,9 @@ Layout:
     sources/   table IO: Iceberg when a catalog is configured, otherwise
                an Iceberg-shaped partitioned-parquet fallback with a
                manifest table for atomic-ish commits and resume.
-    plans/     end-to-end jobs: the extraction pipeline with salted
-               partitioning, checkpoint/resume, and lineage metrics.
+    plans/     end-to-end jobs: extraction with optional salted host
+               partitioning, and the resumable bucketed write (one
+               shuffle, checkpoint/resume, lineage metrics).
     fixtures/  deterministic synthetic `pages` generator (seeded; Zipf
                host skew; page-taxonomy template library).
 """

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import re
 
-from ocr_pipeline_spark.kernel.blocks import render_blocks
 
 _NODE_LABEL_RE = re.compile(r"\[([^\[\]|]{1,60})\]|\(([^()|]{1,60})\)|\{([^{}|]{1,60})\}")
 _ARROW_COUNT_RE = re.compile(r"-->|->>|=>|->|→")
@@ -48,10 +47,3 @@ def describe_diagram_source(source: str) -> str:
         sentence += " Nodes: " + "; ".join(labels[:24]) + "."
     return sentence
 
-
-def describe_page(html: str | bytes) -> str:
-    """Describe every diagram on the page (ordered, newline-joined)."""
-    _, stats = render_blocks(html)
-    if not stats.diagram_sources:
-        return ""
-    return "\n\n".join(describe_diagram_source(s) for s in stats.diagram_sources)

@@ -260,6 +260,49 @@ def _raw_element(raw: str) -> tuple[str, str, str | None]:
     return name, attrs, None if close == -1 else raw[start.end() : close]
 
 
+# After the last '>' only a comment or CDATA can start a match: every
+# other alternative ends in '>'.  Scanned as a whole, each '<name' there
+# would run its attrs to the end of the document, quadratic in their
+# count.
+_TAIL_RE = re.compile(r"<!(?:--|\[CDATA\[)")
+
+
+def _matches(pattern: re.Pattern, html: str, pos: int = 0, cut: int = -1):
+    """`pattern.finditer(html, pos)` for `_TAG_RE` or `_BARE_TAG_RE`,
+    linear however many '<' follow the last '>' (`cut` is one past it).
+    A match of the document cut there is the whole document's match,
+    unless it ends at the cut: a comment, CDATA or raw-text element may
+    run on to the end, so that one is matched again uncut."""
+    if cut < 0:
+        cut = html.rfind(">") + 1
+    for m in pattern.finditer(html, pos, cut):
+        if m.end() == cut:
+            m = pattern.match(html, m.start())
+        yield m
+        pos = m.end()
+    pos = max(pos, cut)
+    while (tail := _TAIL_RE.search(html, pos)) is not None:
+        m = pattern.match(html, tail.start())
+        yield m
+        pos = m.end()
+
+
+def _split(html: str) -> list:
+    """`_TAG_RE.split(html)`: one C call unless a '<' follows the last
+    '>', else built from `_matches`."""
+    cut = html.rfind(">") + 1
+    if html.find("<", cut) == -1:
+        return _TAG_RE.split(html)
+    parts: list = []
+    pos = 0
+    for m in _matches(_TAG_RE, html, 0, cut):
+        parts.append(html[pos : m.start()])
+        parts += m.groups()
+        pos = m.end()
+    parts.append(html[pos:])
+    return parts
+
+
 def _split_from(html: str, pos: int) -> list:
     """`_TAG_RE.split(html[pos:])[1:]` for a `pos` where a tag starts,
     with every raw-text body found the slow, exact way: the first
@@ -269,8 +312,9 @@ def _split_from(html: str, pos: int) -> list:
     parts: list = []
     lowered = None
     n = len(html)
+    cut = html.rfind(">") + 1
     while pos < n:
-        for m in _BARE_TAG_RE.finditer(html, pos):
+        for m in _matches(_BARE_TAG_RE, html, pos, cut):
             if parts:
                 parts.append(html[pos : m.start()])  # text after the last tag
             raw, end, name, attrs = m.groups()
@@ -301,7 +345,7 @@ def _split_from(html: str, pos: int) -> list:
 
 def _split_slow(html: str) -> list:
     """`_split_from` the first raw-text element with no lowercase close."""
-    for m in _TAG_RE.finditer(html):
+    for m in _matches(_TAG_RE, html):
         raw = m.group(1)
         if raw and _raw_element(raw)[2] is None:
             return _split_from(html, m.start())
@@ -405,7 +449,7 @@ def _parse_html_fast(
     # needs no second traversal; the logic mirrors its if/elif chain
     # exactly — equivalence pinned by tests/test_dom_blocks.py
     main_node = article = role_main = content_div = body = None
-    tags = iter(_TAG_RE.split(html))
+    tags = iter(_split(html))
     text = next(tags)  # before the first tag
     if text:
         root.children.append(unescape(text) if "&" in text else text)

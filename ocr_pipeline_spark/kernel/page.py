@@ -37,9 +37,6 @@ def page_num_from_url(url: str) -> int:
     return int(m.group(1)) if m else 1
 
 
-def doc_key_from_url(url: str) -> str:
-    return _PAGE_NUM_RE.sub("", url or "")
-
 # Block kinds kept by the 'describe' strategy (pure diagram/flowchart
 # pages keep only their structural content, mirroring the reference's
 # describe-only prompt for those types).

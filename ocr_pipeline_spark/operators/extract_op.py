@@ -50,11 +50,7 @@ def _cls_cell(cls: dict) -> dict:
 
 
 # --- kernel ------------------------------------------------------------------
-def fused_extract_kernel(
-    describe: bool,
-    counters: dict | None = None,
-    bucket_metrics: tuple | None = None,
-):
+def fused_extract_kernel(describe: bool, counters: dict | None = None):
     """mapInPandas kernel: pages(url, warc_ts, html, lang) -> EXTRACTED_DDL.
 
     `counters`: optional dict of Spark accumulators
@@ -62,16 +58,7 @@ def fused_extract_kernel(
     Arrow batch — progress observability (P7) with zero extra scan.
     Accumulator semantics: exact for the single planned run of each
     task, over-counted on speculative retries — observability, not
-    lineage (the manifest/metrics rows stay authoritative).
-
-    `bucket_metrics`: optional (dict_accumulator, n_buckets) — per-
-    bucket lineage metric sums {pkey: (n_docs, n_bytes, n_chars_out,
-    n_empty, n_figures, n_described)} accumulated during the write
-    action, pkey computed in-kernel via catalog.pkey_of_micros (the
-    bit-exact Python twin of with_bucket).  Powers run_pipeline's
-    metrics_mode="observe" (no committed-output re-read); same retry
-    caveat as `counters`, which is why committed-scan metrics remain
-    the default."""
+    lineage (the manifest/metrics rows stay authoritative)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -105,21 +92,6 @@ def fused_extract_kernel(
                 counters["described_pages"].add(
                     sum(1 for d in cols["description"] if d)
                 )
-            if bucket_metrics is not None:
-                acc, n_buckets = bucket_metrics
-                from ocr_pipeline_spark.sources.catalog import pkey_of_micros
-
-                sums: dict[int, list] = {}
-                for i, ts in enumerate(pdf["warc_ts"]):
-                    pk = pkey_of_micros(pd.Timestamp(ts).value // 1000, n_buckets)
-                    s = sums.setdefault(pk, [0, 0, 0, 0, 0, 0])
-                    s[0] += 1
-                    s[1] += cols["n_html_bytes"][i]
-                    s[2] += cols["n_chars"][i]
-                    s[3] += 1 if cols["n_chars"][i] == 0 else 0
-                    s[4] += cols["n_figures"][i]
-                    s[5] += 1 if cols["method"][i] == "diagram-describe-v1" else 0
-                acc.add({k: tuple(v) for k, v in sums.items()})
             out = pd.DataFrame(
                 {
                     "url": pdf["url"].reset_index(drop=True),

@@ -1,5 +1,5 @@
-"""The extraction job: scan → Arrow kernel → salted repartition →
-bucketed write with manifest resume + metrics.
+"""The extraction job: scan → Arrow kernel → (salted repartition |
+bucket repartition → bucketed write with manifest resume + metrics).
 
 Physical plan notes (SURVEY.md §3.4/§4):
   * column pruning: only (url, warc_ts, html, lang) are selected, so
@@ -7,12 +7,16 @@ Physical plan notes (SURVEY.md §3.4/§4):
     column is never read;
   * the kernel is one narrow mapInPandas over Arrow batches, capped at
     ARROW_BATCH_ROWS records per batch for multi-MB html blobs;
-  * shuffles: at most two — the optional salted host repartition of
-    the EXTRACTED rows (key (hash(host), hash(url) % salt): pages
+  * shuffles: exactly one per plan, and it moves markdown-sized
+    EXTRACTED rows, never the html.  `run_extraction` ends in the
+    salted host repartition (key (hash(host), hash(url) % salt): pages
     co-locate by host, bounded to `salt` sub-buckets so Zipf-skewed
-    hosts cannot pin a task — the north rule's explicit skew handling)
-    and the output repartition by bucket before the write (one file
-    per bucket).  Both shuffle markdown-sized rows, never the html.
+    hosts cannot pin a task — the north rule's explicit skew
+    handling), or in none when map-only.  `run_pipeline` runs the
+    kernel map-only and repartitions by bucket before the write (one
+    file per bucket per chunk): a bucket's pages, every host's
+    included, already share one task, and the bucket key hashes
+    `warc_ts`, so hosts cannot skew it.
 """
 
 from __future__ import annotations
@@ -20,7 +24,6 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -127,7 +130,6 @@ def run_extraction(
     salt: int = 8,
     co_locate_hosts: bool = True,
     counters: dict | None = None,
-    bucket_metrics: tuple | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> extracted DataFrame.
 
@@ -145,7 +147,7 @@ def run_extraction(
     output is byte-identical either way (tested).
     """
     out = pages.select(*INPUT_COLUMNS).mapInPandas(
-        fused_extract_kernel(describe, counters, bucket_metrics),
+        fused_extract_kernel(describe, counters),
         schema=EXTRACTED_DDL,
     )
     if co_locate_hosts:
@@ -171,46 +173,6 @@ def partition_metrics(extracted_with_pkey: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-_METRICS_DDL = (
-    f"{PKEY_COL} int, run_id string, n_docs bigint, n_bytes bigint, "
-    "n_chars_out bigint, n_empty bigint, n_figures bigint, n_described bigint"
-)
-
-
-class _BucketMetricsParam(AccumulatorParam):
-    """Dict accumulator: {pkey: 6-tuple of metric sums}, merged by
-    element-wise addition — the carrier for kernel-side lineage metrics
-    (metrics_mode='observe')."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            cur = a.get(k)
-            a[k] = v if cur is None else tuple(x + y for x, y in zip(cur, v))
-        return a
-
-
-def _metrics_from_acc(spark, acc_value: dict, keys, run_id):
-    """Kernel-accumulated per-bucket sums -> the partition_metrics frame
-    (buckets that produced zero rows are omitted, matching the
-    committed-scan shape)."""
-    keyset = {int(k) for k in keys}
-    rows = [
-        (int(pk), run_id) + tuple(int(x) for x in sums)
-        for pk, sums in sorted(acc_value.items())
-        if int(pk) in keyset and sums[0]
-    ]
-    # ONE slice: a plain createDataFrame spreads the rows over
-    # defaultParallelism partitions, and write_metrics' coalesce(1)
-    # would then evaluate those python partitions sequentially in one
-    # task (~140 ms of worker handshake EACH — measured 5 s for 32)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), _METRICS_DDL
-    )
-
-
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -220,8 +182,6 @@ def run_pipeline(
     describe: bool = True,
     n_buckets: int = DEFAULT_BUCKETS,
     chunk_size: int | None = None,
-    num_partitions: int | None = None,
-    salt: int = 8,
     co_locate_hosts: bool = True,
     max_chunks: int | None = None,
     metrics_mode: str = "committed",
@@ -234,26 +194,19 @@ def run_pipeline(
     duplicates and no missing urls.  `max_chunks` exists for the
     kill/resume tests.
 
-    `metrics_mode`:
-      * ``"committed"`` (default) — lineage metrics come from a
-        column-pruned re-read of the files just committed: metrics
-        describe exactly the bytes on disk, at the cost of a second
-        (pruned) scan of the chunk's output.
-      * ``"observe"`` — per-bucket metrics are accumulated INSIDE the
-        extraction kernel during the write action (dict accumulator
-        keyed by pkey, computed in-kernel via the bit-exact Python twin
-        of the bucket function), eliminating the re-read entirely.
-        Commit counts still come from parquet footers, so the resume
-        manifest remains grounded in committed files.  Same accumulator
-        retry caveat as the P7 counters (a re-executed map stage can
-        double-count) — which is why committed-scan metrics stay the
-        default where lineage must be exact under failures.  (A
-        CollectMetrics/Observation variant was measured first
-        and REJECTED: 6 aggregates × buckets of per-row conditional
-        evaluation made the sf0.1 write 40% slower than the re-read it
-        replaced.)
+    Per chunk: scan → fused kernel (map-only) → ONE repartition by
+    bucket → write → lineage metrics from a column-pruned re-read of
+    the files just committed (they describe exactly the bytes on disk)
+    → manifest.
+
+    `co_locate_hosts` and `metrics_mode` accept only their defaults
+    (True and "committed") and raise ValueError otherwise: the
+    benchmark's workloads still pass them, and a later benchmark change
+    removes both.
     """
-    if metrics_mode not in ("committed", "observe"):
+    if co_locate_hosts is not True:
+        raise ValueError("run_pipeline has one write plan: co_locate_hosts=True")
+    if metrics_mode != "committed":
         raise ValueError(f"unknown metrics_mode: {metrics_mode!r}")
     catalog = open_catalog(spark, warehouse)
     t_start = time.time()
@@ -287,41 +240,22 @@ def run_pipeline(
     processed: list[int] = []
     total_docs = 0
     for keys in chunks:
-        pages_chunk = bucketed_pages.filter(
-            F.col(PKEY_COL).isin([int(k) for k in keys])
-        )
-        metrics_acc = None
-        if metrics_mode == "observe":
-            # fresh accumulator per chunk: values accumulate for exactly
-            # the buckets this chunk writes
-            metrics_acc = spark.sparkContext.accumulator(
-                {}, _BucketMetricsParam()
-            )
+        in_chunk = F.col(PKEY_COL).isin([int(k) for k in keys])
         extracted = with_bucket(
             run_extraction(
-                spark, pages_chunk, describe=describe,
-                num_partitions=num_partitions, salt=salt,
-                co_locate_hosts=co_locate_hosts,
-                counters=counters,
-                bucket_metrics=(
-                    (metrics_acc, n_buckets) if metrics_acc is not None else None
-                ),
+                spark, bucketed_pages.filter(in_chunk), describe=describe,
+                co_locate_hosts=False, counters=counters,
             ),
             n_buckets,
         )
-        # one output file per bucket per chunk (bounded small-file count)
-        subset = extracted.repartition(len(keys), F.col(PKEY_COL))
-        catalog.overwrite_buckets(table, subset)
-        if metrics_acc is not None:
-            # the write action above populated the accumulator
-            metrics = _metrics_from_acc(spark, metrics_acc.value, keys, run_id)
-        else:
-            # lineage metrics from the committed files (column-pruned scan)
-            committed = catalog.read(table).filter(
-                F.col(PKEY_COL).isin([int(k) for k in keys])
-            )
-            metrics = partition_metrics(committed, run_id)
-        metrics = metrics.withColumn(
+        # the plan's one exchange: one output file per bucket per chunk
+        catalog.overwrite_buckets(
+            table, extracted.repartition(len(keys), F.col(PKEY_COL))
+        )
+        # lineage metrics from the committed files (column-pruned scan)
+        metrics = partition_metrics(
+            catalog.read(table).filter(in_chunk), run_id
+        ).withColumn(
             "t_end", F.lit(time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))
         )
         catalog.write_metrics(table, metrics)

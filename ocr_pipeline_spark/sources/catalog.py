@@ -72,45 +72,6 @@ def read_table(spark: SparkSession, table_name: str) -> DataFrame:
     return spark.table(table_name)
 
 
-# --- Python replica of the bucket function -------------------------------
-# Spark's xxhash64 on a TimestampType hashes the epoch-microseconds long
-# (XXH64 one-8-byte-chunk path, seed 42).  The replica lets Arrow kernels
-# compute a row's pkey WITHOUT a JVM round trip (run_pipeline's
-# metrics_mode="observe") — pinned bit-exact against F.xxhash64 in
-# tests/test_catalog_iceberg.py.
-_XXH_M = (1 << 64) - 1
-_XXH_P1 = 0x9E3779B185EBCA87
-_XXH_P2 = 0xC2B2AE3D27D4EB4F
-_XXH_P3 = 0x165667B19E3779F9
-_XXH_P4 = 0x85EBCA77C2B2AE63
-_XXH_P5 = 0x27D4EB2F165667C5
-
-
-def xxhash64_long(value: int, seed: int = 42) -> int:
-    """Spark-compatible xxhash64 of one long; returns the SIGNED value
-    Spark's expression produces."""
-    v = value & _XXH_M
-    h = (seed + _XXH_P5 + 8) & _XXH_M
-    k1 = (v * _XXH_P2) & _XXH_M
-    k1 = ((k1 << 31) | (k1 >> 33)) & _XXH_M
-    k1 = (k1 * _XXH_P1) & _XXH_M
-    h ^= k1
-    h = ((h << 27) | (h >> 37)) & _XXH_M
-    h = (h * _XXH_P1 + _XXH_P4) & _XXH_M
-    h ^= h >> 33
-    h = (h * _XXH_P2) & _XXH_M
-    h ^= h >> 29
-    h = (h * _XXH_P3) & _XXH_M
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def pkey_of_micros(epoch_us: int, n_buckets: int) -> int:
-    """bucket(warc_ts) for an epoch-microseconds value — the exact
-    Python twin of with_bucket's pmod(xxhash64(warc_ts), n)."""
-    return xxhash64_long(epoch_us) % n_buckets  # floor-mod == Spark pmod
-
-
 class ParquetCatalog:
     """Iceberg-shaped warehouse on partitioned parquet + JSON manifests.
 

@@ -7,8 +7,12 @@
         --input  <pages parquet path or iceberg table> \
         --warehouse <output warehouse dir> \
         --run-id R1 [--table extracted] [--buckets 64] [--chunk-size 8] \
-        [--no-describe-diagrams] [--salt 8] \
-        [--no-co-locate] [--synthetic N]
+        [--no-describe-diagrams] [--synthetic N] [--incremental] [-v]
+
+The batch job extracts each chunk of buckets map-only, repartitions
+the extracted rows once by bucket, writes one file per bucket, then
+commits lineage metrics (read back from the committed files) and the
+resume manifest.
 
 Env-var equivalents (graft of OCR_* vars, docs/DEPLOYMENT_PLAN.md:205-216):
     EXTRACT_INPUT, EXTRACT_WAREHOUSE, EXTRACT_RUN_ID,
@@ -37,18 +41,9 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--table", default="extracted")
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--chunk-size", type=int, default=None)
-    p.add_argument("--salt", type=int, default=8)
     p.add_argument(
         "--no-describe-diagrams", action="store_true",
         default=os.environ.get("EXTRACT_DESCRIBE_DIAGRAMS", "1") == "0",
-    )
-    p.add_argument("--no-co-locate", action="store_true")
-    p.add_argument(
-        "--metrics-mode", choices=("committed", "observe"), default="committed",
-        help="lineage metrics source: 'committed' (default) re-reads the "
-        "committed files (pruned scan, exact under any failure); 'observe' "
-        "accumulates per-bucket metrics inside the extraction kernel "
-        "during the write (no re-read)",
     )
     p.add_argument(
         "--synthetic", type=int, default=None,
@@ -113,9 +108,6 @@ def main(argv: list[str] | None = None) -> int:
         describe=not args.no_describe_diagrams,
         n_buckets=args.buckets,
         chunk_size=args.chunk_size,
-        salt=args.salt,
-        co_locate_hosts=not args.no_co_locate,
-        metrics_mode=args.metrics_mode,
     )
     print(json.dumps(summary))
     return 0

@@ -168,41 +168,6 @@ def test_pipeline_still_uses_parquet_fallback(spark, tmp_path):
     assert sorted(summary["processed_buckets"]) == [0, 1, 2, 3]
 
 
-def test_python_xxhash64_matches_spark(spark):
-    """pkey_of_micros is the in-kernel twin of with_bucket — the Python
-    xxhash64-on-long must match F.xxhash64 bit-exactly (signed value
-    AND pmod bucket) over real timestamps and edge longs."""
-    from pyspark.sql import functions as F
-
-    from ocr_pipeline_spark.sources.catalog import (
-        pkey_of_micros,
-        xxhash64_long,
-    )
-
-    df = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        "ts"
-    ).limit(300)
-    rows = df.select(
-        "ts",
-        F.xxhash64(F.col("ts")).alias("h"),
-        F.pmod(F.xxhash64(F.col("ts")), F.lit(32)).cast("int").alias("pk"),
-    ).collect()
-    import pandas as pd
-
-    for r in rows:
-        us = pd.Timestamp(r.ts).value // 1000
-        assert xxhash64_long(us) == r.h
-        assert pkey_of_micros(us, 32) == r.pk
-
-    # edge longs via a literal round trip
-    edges = [0, 1, -1, 2**62, -(2**62), 123456789]
-    lits = spark.createDataFrame(
-        [(v,) for v in edges], "v bigint"
-    ).select("v", F.xxhash64(F.col("v")).alias("h")).collect()
-    for r in lits:
-        assert xxhash64_long(r.v) == r.h, r.v
-
-
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     """write_bucketed lays out both join sides bucketed+sorted on the
     key, so the join plan has NO Exchange and NO Sort — the co-located

@@ -12,7 +12,7 @@ from ocr_pipeline_spark.fixtures.gen_pages import generate_pages_df, generate_ro
 from ocr_pipeline_spark.kernel.page import extract_page, page_num_from_url
 from ocr_pipeline_spark.operators.assembly_op import assemble_documents
 from ocr_pipeline_spark.plans.job import run_extraction, run_pipeline
-from ocr_pipeline_spark.sources.catalog import ParquetCatalog
+from ocr_pipeline_spark.sources.catalog import ParquetCatalog, with_bucket
 
 N_ROWS = 250
 SEED = 42
@@ -188,9 +188,26 @@ def test_pipeline_kill_resume(spark, pages, fused_result):
         assert noop["processed_buckets"] == []
         assert noop["skipped"] == 8
 
-        # lineage metrics exist and add up
-        m = cat.read_metrics("extracted")
-        assert m.agg(F.sum("n_docs")).first()[0] == N_ROWS
+        # every committed lineage row equals a driver-side aggregate of
+        # the map-only extraction, bucket by bucket
+        expected: dict = {}
+        for r in with_bucket(
+            run_extraction(spark, pages, describe=True, co_locate_hosts=False), 8
+        ).collect():
+            e = expected.setdefault(r.pkey, [0] * 6)
+            e[0] += 1
+            e[1] += r.n_html_bytes
+            e[2] += r.n_chars
+            e[3] += r.n_chars == 0
+            e[4] += r.n_figures
+            e[5] += r.method == "diagram-describe-v1"
+        got = {
+            r.pkey: [r.n_docs, r.n_bytes, r.n_chars_out, r.n_empty,
+                     r.n_figures, r.n_described]
+            for r in cat.read_metrics("extracted").filter(F.col("run_id") == "rX")
+            .collect()
+        }
+        assert got == expected and len(got) == 8
 
         # P7: kernel-side accumulator counters come back in the summary
         # without a second scan; both runs together processed every page
@@ -201,6 +218,47 @@ def test_pipeline_kill_resume(spark, pages, fused_result):
         }
     finally:
         shutil.rmtree(wh, ignore_errors=True)
+
+
+def test_pipeline_write_plan_shuffles_once_by_bucket(
+    spark, pages, tmp_path, monkeypatch
+):
+    """The kernel runs map-only and one repartition by bucket feeds the
+    write: the plan handed to the catalog has exactly one Exchange,
+    hash-partitioned on pkey, and each bucket gets one data file."""
+    import os
+
+    frames = []
+    write = ParquetCatalog.overwrite_buckets
+
+    def capture(self, table, df):
+        frames.append(df)
+        write(self, table, df)
+
+    monkeypatch.setattr(ParquetCatalog, "overwrite_buckets", capture)
+    wh = str(tmp_path / "wh_plan")
+    run_pipeline(spark, pages, wh, run_id="rP", n_buckets=8, chunk_size=4)
+    assert len(frames) == 2
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bExchange ", plan)) == 1, plan
+        assert re.search(r"Exchange hashpartitioning\(pkey#\d+, 4\)", plan), plan
+
+    data = os.path.join(wh, "extracted", "data")
+    files = {
+        d: [f for f in os.listdir(os.path.join(data, d)) if f.endswith(".parquet")]
+        for d in os.listdir(data)
+    }
+    assert sorted(files) == [f"pkey={k}" for k in range(8)]
+    assert all(len(f) == 1 for f in files.values()), files
+
+
+@pytest.mark.parametrize(
+    "kw", [{"co_locate_hosts": False}, {"metrics_mode": "observe"}]
+)
+def test_pipeline_rejects_other_write_plans(spark, pages, tmp_path, kw):
+    with pytest.raises(ValueError):
+        run_pipeline(spark, pages, str(tmp_path / "wh"), run_id="rV", **kw)
 
 
 def test_pipeline_survives_sigkill_mid_run(spark, pages, fused_result, tmp_path):
@@ -230,7 +288,7 @@ spark = (SparkSession.builder.master("local[4]")
 spark.sparkContext.setLogLevel("ERROR")
 from ocr_pipeline_spark.plans.job import run_pipeline
 run_pipeline(spark, spark.read.parquet({src!r}), {wh!r}, run_id="rK",
-             n_buckets=8, chunk_size=1, co_locate_hosts=False)
+             n_buckets=8, chunk_size=1)
 """
     child = subprocess.Popen(
         [sys.executable, "-c", child_code],
@@ -261,51 +319,12 @@ run_pipeline(spark, spark.read.parquet({src!r}), {wh!r}, run_id="rK",
     done_before = cat.completed_buckets("extracted", "rK")
     assert done_before and len(done_before) < 8  # killed mid-run
 
-    resumed = run_pipeline(
-        spark, pages, wh, run_id="rK", n_buckets=8, co_locate_hosts=False
-    )
+    resumed = run_pipeline(spark, pages, wh, run_id="rK", n_buckets=8)
     assert resumed["skipped"] == len(done_before)
     final = cat.read("extracted").select("url", "markdown").collect()
     assert len(final) == N_ROWS
     assert len({r.url for r in final}) == N_ROWS
     assert {r.url: r.markdown for r in final} == fused_result
-
-
-def test_pipeline_observe_metrics_match_committed(spark, pages, fused_result):
-    """metrics_mode='observe' collects lineage metrics DURING the write
-    (no committed-output re-read) and must produce the same per-bucket
-    metric rows, data files, and resume manifest as the default
-    committed-scan mode."""
-    wh_a = tempfile.mkdtemp(prefix="wh_committed_")
-    wh_b = tempfile.mkdtemp(prefix="wh_observe_")
-    try:
-        a = run_pipeline(spark, pages, wh_a, run_id="rM", n_buckets=8)
-        b = run_pipeline(
-            spark, pages, wh_b, run_id="rM", n_buckets=8,
-            metrics_mode="observe",
-        )
-        assert a["n_docs"] == b["n_docs"] == N_ROWS
-        cat_a, cat_b = ParquetCatalog(spark, wh_a), ParquetCatalog(spark, wh_b)
-        cols = [
-            "pkey", "run_id", "n_docs", "n_bytes", "n_chars_out",
-            "n_empty", "n_figures", "n_described",
-        ]
-        rows_a = {tuple(r) for r in
-                  cat_a.read_metrics("extracted").select(*cols).collect()}
-        rows_b = {tuple(r) for r in
-                  cat_b.read_metrics("extracted").select(*cols).collect()}
-        assert rows_a == rows_b and rows_a
-        # identical committed data + identical manifests
-        out_a = {r.url: r.markdown
-                 for r in cat_a.read("extracted").collect()}
-        out_b = {r.url: r.markdown
-                 for r in cat_b.read("extracted").collect()}
-        assert out_a == out_b == fused_result
-        assert cat_a.completed_buckets("extracted", "rM") == \
-            cat_b.completed_buckets("extracted", "rM")
-    finally:
-        shutil.rmtree(wh_a, ignore_errors=True)
-        shutil.rmtree(wh_b, ignore_errors=True)
 
 
 # --- skew bounding ------------------------------------------------------------
