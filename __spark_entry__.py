@@ -2680,44 +2680,6 @@ def _q_stratified_sample(spark, sf_dir):
     )
 
 
-def _q_media_features(spark, sf_dir):
-    """Multimodal pixel path (X13) end to end: deterministic binary
-    image payloads (GIF/JPEG/empty/garbage — fixtures/gen_media.py,
-    encoded by the repo's own pure-Python codecs) -> Arrow-batched
-    metadata probe + pixel-decode luminance features
-    (operators/multimodal.py, operators/imagecodecs.py).  Kernel-based
-    (rows-only driver check); decoder correctness is pinned by exact/
-    bounded round-trip + Hypothesis property tests."""
-    from ocr_pipeline_spark.fixtures.gen_media import generate_media_df
-    from ocr_pipeline_spark.operators.multimodal import (
-        IMAGE_META_DDL,
-        image_features_kernel,
-        image_meta_kernel,
-    )
-
-    media = generate_media_df(spark, 200, seed=42)
-    with_meta = media.mapInPandas(
-        image_meta_kernel(),
-        schema=f"media_id long, media binary, image_meta {IMAGE_META_DDL}",
-    )
-    feats = with_meta.mapInPandas(
-        image_features_kernel(dim=8),
-        schema=(
-            f"media_id long, media binary, image_meta {IMAGE_META_DDL}, "
-            "features array<float>"
-        ),
-    )
-    return feats.select(
-        "media_id",
-        F.col("image_meta.format").alias("format"),
-        F.col("image_meta.width").alias("width"),
-        F.col("image_meta.height").alias("height"),
-        F.round(F.expr("aggregate(features, 0.0D, (s, x) -> s + x)"), 4).alias(
-            "feature_mass"
-        ),
-    ).orderBy("media_id")
-
-
 def _q_extract_pdf_documents(spark, sf_dir):
     """Full PDF pipeline: binary payloads -> page split -> the SAME
     extraction kernel + cleaning + per-document assembly as html pages
@@ -4082,7 +4044,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_chunks": _q_doc_chunks,
         "stratified_sample": _q_stratified_sample,
         "simhash_dup_pairs": _q_simhash_dup_pairs,
-        "media_features": _q_media_features,
         "host_link_graph": _q_host_link_graph,
         "bm25_search": _q_bm25_search,
         "vocab_stats": _q_vocab_stats,
@@ -4972,11 +4933,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT shard, n_records, n_bytes, wet_md5
             FROM read_parquet('{_WITNESS_DIR}/wet_export.parquet')
             ORDER BY shard
-        """,
-        "media_features": f"""
-            SELECT media_id, format, width, height, feature_mass
-            FROM read_parquet('{_WITNESS_DIR}/media_features.parquet')
-            ORDER BY media_id
         """,
         "host_link_graph": f"""
             SELECT src_host, dst_host, n_links

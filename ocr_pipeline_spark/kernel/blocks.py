@@ -89,7 +89,6 @@ class PageStats:
     n_figures: int = 0
     n_diagrams: int = 0
     flowchart_votes: int = 0
-    dropped_boilerplate_chars: int = 0
     diagram_sources: list[str] = field(default_factory=list)
 
 
@@ -257,7 +256,6 @@ class _Renderer:
             return
         total = len(text)
         if total and link_chars / total > _LINK_DENSITY_MAX and kind != "heading":
-            self.stats.dropped_boilerplate_chars += total
             return
         self.blocks.append(Block(kind, text, link_chars))
         self.stats.text_chars += total
@@ -423,7 +421,6 @@ class _Renderer:
             if tag in _SKIP_TAGS:
                 continue
             if tag in _CHROME_TAGS or (child.attrs and _is_chrome(child)):
-                self.stats.dropped_boilerplate_chars += len(child.text())
                 continue
             if tag not in self._BLOCK_TAGS:
                 # unknown/inline element encountered at block level: treat as
@@ -449,11 +446,9 @@ class _Renderer:
             elif tag == "ul" or tag == "ol":
                 lines, lc, tc = self._render_list(child, tag == "ol", 0)
                 if lines:
-                    text = "\n".join(lines)
-                    if tc and lc / max(tc, 1) > _LINK_DENSITY_MAX:
-                        self.stats.dropped_boilerplate_chars += tc
-                    else:
-                        self.blocks.append(Block("list", text, lc))
+                    # a link-dense list is navigation: dropped
+                    if not tc or lc / tc <= _LINK_DENSITY_MAX:
+                        self.blocks.append(Block("list", "\n".join(lines), lc))
                         self.stats.text_chars += tc
             elif tag == "blockquote":
                 text, lc = self._inline(child)

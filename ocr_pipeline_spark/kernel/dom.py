@@ -260,42 +260,66 @@ def _raw_element(raw: str) -> tuple[str, str, str | None]:
     return name, attrs, None if close == -1 else raw[start.end() : close]
 
 
-# After the last '>' only a comment or CDATA can start a match: every
-# other alternative ends in '>'.  Scanned as a whole, each '<name' there
-# would run its attrs to the end of the document, quadratic in their
-# count.
-_TAIL_RE = re.compile(r"<!(?:--|\[CDATA\[)")
+# A '<' that opens no match and is masked (`_masked`): after the last
+# '>', any but a comment's or CDATA's; before a quote that never closes,
+# one that would open a start, end or raw-text tag.  `_MASK` is a
+# character every pattern accepts inside a match but none starts with.
+_TAIL_OPENER_RE = re.compile(r"<(?!!--|!\[CDATA\[)")
+_OPENER_RE = re.compile(r"<(?=[a-zA-Z/])")
+_MASK = "\x00"
 
 
-def _matches(pattern: re.Pattern, html: str, pos: int = 0, cut: int = -1):
+def _mask(run: str, opener: re.Pattern) -> str:
+    # the first lowercase close of each raw-text element may end one
+    # opened before the run, so it stays
+    keep = {run.find("</" + tag) for tag in _RAW_TEXT}
+    return opener.sub(lambda m: "<" if m.start() in keep else _MASK, run)
+
+
+def _masked(html: str) -> str:
+    """`html` with each '<' masked that opens no match, in the two runs
+    where scanning from every one of them is quadratic in their count,
+    or `html` itself when neither holds one:
+      * after the last '>' only a comment or CDATA can open a match, as
+        every other alternative ends in '>';
+      * a value opened at the last '"' or "'" before that '>' never
+        closes, so a tag opened after the last '>' or quote before
+        that quote scans its attrs up to it and fails there.
+    No match moves: to any match that spans a run, its '<' were plain
+    characters already."""
+    cut = html.rfind(">") + 1
+    text = html
+    if html.find("<", cut) != -1:
+        text = html[:cut] + _mask(html[cut:], _TAIL_OPENER_RE)
+    for quote in "\"'":
+        q = html.rfind(quote, 0, cut)
+        if q == -1:
+            continue
+        start = max(html.rfind(c, 0, q) for c in ">\"'") + 1
+        if _OPENER_RE.search(html, start, q) is not None:
+            text = text[:start] + _mask(html[start:q], _OPENER_RE) + text[q:]
+    return text
+
+
+def _matches(pattern: re.Pattern, html: str, text: str, pos: int = 0):
     """`pattern.finditer(html, pos)` for `_TAG_RE` or `_BARE_TAG_RE`,
-    linear however many '<' follow the last '>' (`cut` is one past it).
-    A match of the document cut there is the whole document's match,
-    unless it ends at the cut: a comment, CDATA or raw-text element may
-    run on to the end, so that one is matched again uncut."""
-    if cut < 0:
-        cut = html.rfind(">") + 1
-    for m in pattern.finditer(html, pos, cut):
-        if m.end() == cut:
+    run on `text` = `_masked(html)` so that it is linear; a match that
+    holds a mask is matched again in `html`."""
+    for m in pattern.finditer(text, pos):
+        if text is not html and _MASK in m.group():
             m = pattern.match(html, m.start())
         yield m
-        pos = m.end()
-    pos = max(pos, cut)
-    while (tail := _TAIL_RE.search(html, pos)) is not None:
-        m = pattern.match(html, tail.start())
-        yield m
-        pos = m.end()
 
 
 def _split(html: str) -> list:
-    """`_TAG_RE.split(html)`: one C call unless a '<' follows the last
-    '>', else built from `_matches`."""
-    cut = html.rfind(">") + 1
-    if html.find("<", cut) == -1:
+    """`_TAG_RE.split(html)`: one C call unless `_masked` masks a '<',
+    else built from `_matches`."""
+    text = _masked(html)
+    if text is html:
         return _TAG_RE.split(html)
     parts: list = []
     pos = 0
-    for m in _matches(_TAG_RE, html, 0, cut):
+    for m in _matches(_TAG_RE, html, text):
         parts.append(html[pos : m.start()])
         parts += m.groups()
         pos = m.end()
@@ -303,18 +327,17 @@ def _split(html: str) -> list:
     return parts
 
 
-def _split_from(html: str, pos: int) -> list:
+def _split_from(html: str, text: str, pos: int) -> list:
     """`_TAG_RE.split(html[pos:])[1:]` for a `pos` where a tag starts,
     with every raw-text body found the slow, exact way: the first
     `</name` in lowercase, else the first in any case (an index into the
     lowered document), then past the next '>'.  Linear however many
-    elements need the second search."""
+    elements need the second search; `text` is `_masked(html)`."""
     parts: list = []
     lowered = None
     n = len(html)
-    cut = html.rfind(">") + 1
     while pos < n:
-        for m in _matches(_BARE_TAG_RE, html, pos, cut):
+        for m in _matches(_BARE_TAG_RE, html, text, pos):
             if parts:
                 parts.append(html[pos : m.start()])  # text after the last tag
             raw, end, name, attrs = m.groups()
@@ -345,10 +368,11 @@ def _split_from(html: str, pos: int) -> list:
 
 def _split_slow(html: str) -> list:
     """`_split_from` the first raw-text element with no lowercase close."""
-    for m in _matches(_TAG_RE, html):
+    text = _masked(html)
+    for m in _matches(_TAG_RE, html, text):
         raw = m.group(1)
         if raw and _raw_element(raw)[2] is None:
-            return _split_from(html, m.start())
+            return _split_from(html, text, m.start())
     raise ValueError("no raw-text element without a lowercase close")
 
 

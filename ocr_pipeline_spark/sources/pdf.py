@@ -9,16 +9,15 @@ into page rows — downstream kernels stay per-page, exactly like the
 html path (kernel/page.py), and the explode parallelizes pages across
 tasks.
 
-Decode strategy mirrors operators/multimodal.py:
-  * with PyMuPDF installed (real clusters), ``content`` is the
-    rendered-PNG bytes of each page — byte-compatible with the
-    reference's pixmap path;
-  * without codecs (this sandbox), ``content`` is each page's
-    decompressed content stream(s): a REAL structural parse (object
-    scan, page-tree ordering via /Kids, /Contents dereference, Flate
-    inflate via stdlib zlib) — deterministic and testable end to end,
-    and `page_text` extracts the text show operators from it, so
-    PDF pages flow through the same text pipeline as html pages.
+Decode strategy, chosen by whether PyMuPDF imports:
+  * with PyMuPDF, ``content`` is the rendered-PNG bytes of each page,
+    byte-compatible with the reference's pixmap path;
+  * without it, ``content`` is each page's decompressed content
+    stream(s), found by a structural parse: object scan, page-tree
+    ordering via /Kids, /Contents dereference and Flate inflate via
+    stdlib zlib.  The result is deterministic and testable end to end,
+    and `page_text` extracts the text show operators from it, so PDF
+    pages flow through the same text pipeline as html pages.
 """
 
 from __future__ import annotations

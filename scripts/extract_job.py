@@ -7,7 +7,7 @@
         --input  <pages parquet path or iceberg table> \
         --warehouse <output warehouse dir> \
         --run-id R1 [--table extracted] [--buckets 64] [--chunk-size 8] \
-        [--no-describe-diagrams] [--synthetic N] [--incremental] [-v]
+        [--no-describe-diagrams] [--synthetic N] [-v]
 
 The batch job extracts each chunk of buckets map-only, repartitions
 the extracted rows once by bucket, writes one file per bucket, then
@@ -50,12 +50,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         help="generate N synthetic pages instead of reading --input",
     )
     p.add_argument(
-        "--incremental", action="store_true",
-        help="Structured Streaming mode: process only parquet files under "
-        "--input not yet seen by this run-id's checkpoint, then exit "
-        "(cron-style incremental crawl ingest)",
-    )
-    p.add_argument(
         "-v", "--verbose", action="store_true",
         default=os.environ.get("EXTRACT_VERBOSE", "0") == "1",
     )
@@ -79,19 +73,6 @@ def main(argv: list[str] | None = None) -> int:
     ).getOrCreate()
     if not args.verbose:
         spark.sparkContext.setLogLevel("WARN")
-
-    if args.incremental:
-        from ocr_pipeline_spark.streaming import run_extraction_stream
-
-        out_dir = os.path.join(args.warehouse, args.table)
-        ckpt = os.path.join(args.warehouse, f"_checkpoints/{args.run_id}")
-        n = run_extraction_stream(
-            spark, args.input, out_dir, ckpt,
-            describe=not args.no_describe_diagrams,
-        )
-        print(json.dumps({"run_id": args.run_id, "mode": "incremental",
-                          "rows_processed": n, "output": out_dir}))
-        return 0
 
     if args.synthetic is not None:
         from ocr_pipeline_spark.fixtures.gen_pages import generate_pages_df

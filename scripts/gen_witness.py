@@ -315,42 +315,6 @@ def witness_near_dup_verified() -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["id_a", "id_b", "jaccard"])
 
 
-def witness_media_features() -> pd.DataFrame:
-    """Twin of _q_media_features: single-process payload generation +
-    meta probe + pixel features; feature_mass mirrors the Spark query's
-    aggregate-then-round exactly (sequential f64 accumulation of f32
-    features, then HALF_UP at 4 dp — the JVM BigDecimal semantics)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from ocr_pipeline_spark.fixtures.gen_media import _payload
-    from ocr_pipeline_spark.operators.multimodal import (
-        image_features,
-        probe_image,
-    )
-
-    rows = []
-    for media_id in range(200):
-        data = _payload(media_id, 42)
-        meta = probe_image(data)
-        feats = image_features(data, dim=8)
-        mass = 0.0
-        for x in feats:
-            mass += float(np.float32(x))
-        mass = float(
-            Decimal(repr(mass)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
-        )
-        rows.append(
-            {
-                "media_id": media_id,
-                "format": meta["format"],
-                "width": meta["width"],
-                "height": meta["height"],
-                "feature_mass": mass,
-            }
-        )
-    return pd.DataFrame(rows)
-
-
 def witness_host_link_graph() -> pd.DataFrame:
     """X31 witness: single-process outlink loop over the cross-linked
     corpus at the sf0.01 query size (n=2000, same formula as
@@ -748,7 +712,6 @@ WITNESSES = {
     "simhash_dup_pairs": witness_simhash_dup_pairs,
     "minhash_dup_pairs": witness_minhash_dup_pairs,
     "near_dup_verified": witness_near_dup_verified,
-    "media_features": witness_media_features,
     "host_link_graph": witness_host_link_graph,
     "anchor_texts": witness_anchor_texts,
     "pdf_layout_markdown": witness_pdf_layout_markdown,

@@ -158,16 +158,6 @@ def test_stats_counts():
     assert stats.text_chars > 20
 
 
-def test_dropped_boilerplate_counted_without_content_root():
-    # no <main>/#content → walk sees (and drops) the chrome subtrees
-    html = (
-        "<body><nav><a href='/'>HomeHomeHome</a></nav>"
-        "<p>real prose content here.</p></body>"
-    )
-    _, stats = render_blocks(html)
-    assert stats.dropped_boilerplate_chars > 0
-
-
 def test_diagram_pre_detected():
     html = "<body><pre>[Start] --> [Work] --> [End]\n[Work] --> [Retry]</pre></body>"
     blocks, stats = render_blocks(html)

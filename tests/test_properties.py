@@ -141,27 +141,6 @@ def test_tokenizer_equivalence_property(html):
     )
 
 
-# --- codec-free decoders: round-trip properties ------------------------------
-@settings(max_examples=60, deadline=None)
-@given(
-    st.integers(1, 12), st.integers(1, 10),
-    st.sampled_from([1, 3, 4]),
-    st.lists(st.integers(0, 4), min_size=12, max_size=12),
-    st.integers(0, 2**32 - 1),
-)
-def test_png_decode_roundtrip_property(h, w, nch, filters, seed):
-    import numpy as np
-
-    from ocr_pipeline_spark.operators.multimodal import decode_png
-    from tests.test_ops import _make_png
-
-    arr = np.random.RandomState(seed).randint(
-        0, 256, size=(h, w, nch), dtype=np.uint8
-    )
-    png = _make_png(arr, filters=filters[:h])
-    assert np.array_equal(decode_png(png), arr)
-
-
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(
@@ -198,92 +177,3 @@ def test_pdf_split_never_crashes_on_garbage(data):
     for page in split_pdf_pages(b"%PDF-" + data):
         page_text(page["content"])
     split_pdf_pages(data)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(1, 40), st.integers(1, 40),
-    st.integers(1, 8),          # palette size in distinct gray levels
-    st.integers(0, 2**32 - 1),
-)
-def test_gif_decode_roundtrip_property(h, w, n_colors, seed):
-    import numpy as np
-
-    from ocr_pipeline_spark.operators.imagecodecs import decode_gif, encode_gif
-
-    rng = np.random.RandomState(seed)
-    levels = np.linspace(0, 255, n_colors, dtype=np.uint8)
-    idx = rng.randint(0, n_colors, size=(h, w))
-    arr = np.stack([levels[idx]] * 3, axis=2)
-    assert np.array_equal(decode_gif(encode_gif(arr)), arr)
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(1, 33), st.integers(1, 33),
-    st.integers(0, 2**32 - 1),
-)
-def test_jpeg_decode_roundtrip_property(h, w, seed):
-    """Flat-quantization baseline JPEG: decode error is bounded by DCT
-    rounding + chroma conversion alone, for every shape including
-    non-multiple-of-8 edges."""
-    import numpy as np
-
-    from ocr_pipeline_spark.operators.imagecodecs import (
-        decode_jpeg,
-        encode_baseline_jpeg,
-    )
-
-    arr = np.random.RandomState(seed).randint(
-        0, 256, size=(h, w, 3), dtype=np.uint8
-    )
-    out = decode_jpeg(encode_baseline_jpeg(arr))
-    assert out.shape == arr.shape
-    assert np.abs(out.astype(int) - arr.astype(int)).max() <= 6
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(1, 33), st.integers(1, 33),
-    st.integers(0, 2**32 - 1),
-)
-def test_png_roundtrip_exact(h, w, seed):
-    """encode_png -> decode_png is LOSSLESS: bit-exact pixels for every
-    shape (PNG is the one format with no DCT rounding)."""
-    import numpy as np
-
-    from ocr_pipeline_spark.operators.imagecodecs import encode_png
-    from ocr_pipeline_spark.operators.multimodal import decode_png
-
-    arr = np.random.RandomState(seed).randint(
-        0, 256, size=(h, w, 3), dtype=np.uint8
-    )
-    assert np.array_equal(decode_png(encode_png(arr)), arr)
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(1, 33), st.integers(1, 33),
-    st.integers(0, 2**32 - 1),
-)
-def test_progressive_jpeg_decodes_identically_to_baseline(h, w, seed):
-    """SOF2 successive-approximation streams (DC Al=1->0, AC Ss=1..63
-    Al=1->0) transmit exactly the baseline coefficients, so the
-    progressive decode must be BIT-IDENTICAL to the baseline decode of
-    the same pixels — for every shape including non-multiple-of-8
-    edges."""
-    import numpy as np
-
-    from ocr_pipeline_spark.operators.imagecodecs import (
-        decode_jpeg,
-        encode_baseline_jpeg,
-        encode_progressive_jpeg,
-    )
-
-    arr = np.random.RandomState(seed).randint(
-        0, 256, size=(h, w, 3), dtype=np.uint8
-    )
-    assert np.array_equal(
-        decode_jpeg(encode_progressive_jpeg(arr)),
-        decode_jpeg(encode_baseline_jpeg(arr)),
-    )

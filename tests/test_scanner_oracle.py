@@ -86,6 +86,18 @@ EDGE_CASES = [
     "<p title='a>b' a<b",
     "x<b 'y>z' <c",
     "<p>a</p>\n<b\n",
+    # '<name' runs up to a quote that never closes, with a '>' after it:
+    # every tag opened there fails; a comment, declaration, PI or an
+    # earlier raw-text element may still run across the quote
+    "a<b " * 300 + '">',
+    "a<b " * 300 + "'>",
+    "<b x=" * 240 + '">',
+    "<p>x</p>" + "a</b " * 200 + "'b\"c>d",
+    "<p title='t'>a<b <!x a<b \"y>z",
+    "a<b <?p a<b 'y>z",
+    "<script>a<b </script <b </script \"x>y<p>z",
+    "<style>a</style <p>b<b \"c>d",
+    "<p title=\"a<b \">c<b d='e>f",
 ]
 
 
@@ -170,7 +182,9 @@ def test_pathological_bytes_never_fall_back(monkeypatch):
 
 def test_tag_openers_after_the_last_gt_parse_in_linear_time():
     """Each '<name' after the last '>' once scanned its attrs to the end
-    of the document: "a<b " * n took 5.4 s at 24 KB."""
+    of the document: "a<b " * n took 5.4 s at 24 KB.  So did each one
+    before a quote that never closes, with a '>' after it: 18.4 s at
+    48 KB."""
     import time
 
     n = 12_000  # 48 KB
@@ -178,6 +192,9 @@ def test_tag_openers_after_the_last_gt_parse_in_linear_time():
         "a<b " * n,
         "<p>x</p>" + "a</b " * n,
         "<SCRIPT>x</SCRIPT>" + "a<b " * n,
+        "a<b " * n + '">',
+        "a<b " * n + "'>",
+        "<b x=" * (n * 4 // 5) + '">',
     ):
         t0 = time.perf_counter()
         dom.parse_html(html)

@@ -43,7 +43,6 @@ def test_witness_rows_nontrivial():
         "extract_pdf_documents": 400,
         "pdf_page_explode": 1205,
         "lang_simhash": 500,
-        "media_features": 200,
         "page_metadata": 500,
         "fuzzy_decontamination": 5,  # the five planted %89 eval leaks
         "wet_export": 8,             # one row per content-addressed shard
