@@ -4,15 +4,15 @@ entry(spark)   — flagship: the full extraction pipeline over the
                  sf0.001 `documents` corpus wrapped as Common-Crawl
                  style pages (deterministic chrome), returning the
                  extracted table.
-queries()      — operators from SURVEY.md §2 + training-data-pipeline
-                 ops, each as (spark, sf_dir) -> DataFrame.
+queries()      — the 50 queries the correctness harness evaluates,
+                 then eight more kept for the operators their pytest
+                 checks pin, each as (spark, sf_dir) -> DataFrame.
 oracle_sql()   — DuckDB-equivalent SQL for every SQL-expressible query
                  (same column names/types).  The byte-deterministic
                  extraction family is oracled against single-process
                  golden-witness parquets (scripts/gen_witness.py);
-                 remaining kernel-based queries (lang-id, simhash,
-                 minhash-LSH, ANN) get the driver's rows-only check
-                 plus independent pytest verification.
+                 host_pagerank has no oracle and is checked against a
+                 numpy twin in tests/test_links_pagerank.py.
 """
 
 from __future__ import annotations
@@ -54,9 +54,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _synth_urls(d: DataFrame) -> DataFrame:
     """Deterministic synthetic url per document — the ONE url-shape
     definition shared by every crawl-side query (robots_filter,
-    snapshot_diff, frontier_schedule; their SQL twins spell the same
-    strings).  Keeps doc_id/text/lang and adds url, host, path, hn
-    (the numeric host id the per-host rule synthesizers key on)."""
+    frontier_schedule; their SQL twins spell the same strings).  Keeps
+    doc_id/text/lang and adds url, host, path, hn (the numeric host id
+    the per-host rule synthesizers key on)."""
     return d.select(
         "doc_id",
         "text",
@@ -88,142 +88,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# SQL-expressible queries (DuckDB-checked)
-# --------------------------------------------------------------------------
-def _q_docs_char_quantiles(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    pct = F.expr("percentile(n_chars, array(0.25, 0.5, 0.75))")
-    return (
-        d.groupBy("lang")
-        .agg(
-            F.round(pct[0], 2).alias("p25"),
-            F.round(pct[1], 2).alias("p50"),
-            F.round(pct[2], 2).alias("p75"),
-        )
-        .orderBy("lang")
-    )
-
-
-def _q_docs_by_lang(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.round(F.avg("n_chars"), 2).alias("avg_chars"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-        .orderBy("lang")
-    )
-
-
-def _q_dedup_exact(spark, sf_dir):
-    from ocr_pipeline_spark.operators.text_ops import exact_dup_key
-
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.withColumn("text_hash", exact_dup_key(F.col("text")))
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct("text_hash").alias("n_unique"),
-            (F.count("*") - F.countDistinct("text_hash")).alias("n_dups"),
-        )
-        .orderBy("source")
-    )
-
-
-def _q_token_stats(spark, sf_dir):
-    from ocr_pipeline_spark.operators.text_ops import token_count
-
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.withColumn("n_tokens", token_count(F.col("text")))
-        .groupBy("lang")
-        .agg(
-            F.round(F.avg("n_tokens"), 2).alias("avg_tokens"),
-            F.max("n_tokens").alias("max_tokens"),
-            F.sum("n_tokens").alias("total_tokens"),
-        )
-        .orderBy("lang")
-    )
-
-
-def _q_quality_scores(spark, sf_dir):
-    from ocr_pipeline_spark.operators.text_ops import (
-        alpha_ratio,
-        punct_ratio,
-        quality_flag,
-        token_count,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        F.round(alpha_ratio(F.col("text")), 4).alias("alpha_ratio"),
-        F.round(punct_ratio(F.col("text")), 4).alias("punct_ratio"),
-        quality_flag(F.col("text")).alias("is_quality"),
-    ).orderBy("doc_id")
-
-
-def _q_embedding_knn(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    joined = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q))
-    dbl = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-    dot = F.aggregate(
-        F.zip_with(dbl("embedding"), dbl("qv"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(dbl(c), lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    return (
-        joined.select(
-            "vec_id",
-            F.round(dot / (norm("embedding") * norm("qv")), 4).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(10)
-    )
-
-
-def _q_host_stats(spark, sf_dir):
-    """Host-level crawl stats — the downstream consumer that justifies
-    the salted host co-location shuffle (SURVEY.md §4.4).  Here over the
-    documents table's source field treated as the host key."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.countDistinct("lang").alias("n_langs"),
-            F.round(
-                1.0
-                - F.countDistinct(F.md5(F.col("text").cast("binary")))
-                / F.count("*"),
-                4,
-            ).alias("dup_ratio"),
-        )
-        .orderBy("source")
-    )
-
-
-def _q_embedding_near_dup(spark, sf_dir):
-    from ocr_pipeline_spark.operators.ann import cosine_pairs_bruteforce
-
-    e = _t(spark, sf_dir, "embeddings")
-    return cosine_pairs_bruteforce(e, "embedding", "vec_id", 0.4).orderBy(
-        "id_a", "id_b"
-    )
-
-
-# --------------------------------------------------------------------------
 # Kernel queries (no SQL equivalent -> rows-only driver check)
 # --------------------------------------------------------------------------
 def _q_doc_fingerprints(spark, sf_dir):
@@ -250,31 +114,6 @@ def _q_fingerprint_overlap(spark, sf_dir):
     )
 
 
-def _q_ann_ivf(spark, sf_dir):
-    from ocr_pipeline_spark.operators.ann import ivf_ann_topk
-
-    e = _t(spark, sf_dir, "embeddings")
-    query = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-    return ivf_ann_topk(
-        e.filter(F.col("vec_id") != 0), "embedding", "vec_id", query,
-        k=10, n_cells=16, n_probe=4,
-    )
-
-
-def _q_embedding_near_dup_lsh(spark, sf_dir):
-    from ocr_pipeline_spark.operators.ann import cosine_near_dup_lsh
-
-    e = _t(spark, sf_dir, "embeddings")
-    dim = len(e.first().embedding)
-    # threshold 0.4 is the weak-similarity regime: short signatures +
-    # many tables (see ann.py docstring); recall vs the exact oracled
-    # twin is pinned in tests/test_entry_contract.py
-    return cosine_near_dup_lsh(
-        e, "embedding", "vec_id", dim, threshold=0.4, n_planes=5, n_tables=16
-    ).orderBy("id_a", "id_b")
-
-
-
 def _q_assemble_documents(spark, sf_dir):
     """A3/A4: multi-page extraction -> per-document ordered assembly
     (boundary-fragment carry, headers, separators) via
@@ -293,27 +132,6 @@ def _q_assemble_documents(spark, sf_dir):
         .select("doc_key", "n_pages", "n_figures", "n_chars")
         .orderBy("doc_key")
     )
-
-
-def _q_host_link_graph(spark, sf_dir):
-    """X31: page outlinks -> (src_host, dst_host, n_links) edge list
-    over the cross-linked deterministic corpus (gen_pages
-    cross_links=True).  DOM-semantic href extraction (anchors inside
-    comments/script are invisible) + URL canonicalization (tracking
-    params, fragments, default ports stripped) in one narrow
-    mapInPandas kernel, then a single partial-aggregated groupBy.
-    Oracle: golden witness from the single-process kernel loop
-    (scripts/gen_witness.py); distributed == local pinned by
-    tests/test_links_pagerank.py."""
-    from ocr_pipeline_spark.fixtures.gen_pages import generate_pages_df
-    from ocr_pipeline_spark.operators.links_op import host_link_graph
-
-    n = min(
-        max(500, int(float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) * 200_000)),
-        4000,
-    )
-    pages = generate_pages_df(spark, n, seed=42, cross_links=True)
-    return host_link_graph(pages).orderBy("src_host", "dst_host")
 
 
 def _q_robots_filter(spark, sf_dir):
@@ -411,8 +229,8 @@ def _q_anchor_texts(spark, sf_dir):
     pages = generate_pages_df(spark, n, seed=42, cross_links=True)
     # eager localCheckpoint: BOTH aggregation branches consume the
     # anchor frame, and without the lineage cut Spark duplicates the
-    # whole generate+parse kernel subtree into each branch (the
-    # host_pagerank lesson) — checkpoint once, parse once
+    # whole generate+parse kernel subtree into each branch —
+    # checkpoint once, parse once
     a = anchor_texts_df(pages).localCheckpoint()
     pa = a.groupBy("dst_url", "anchor").agg(F.count("*").alias("n"))
     w = Window.partitionBy("dst_url").orderBy(F.desc("n"), "anchor")
@@ -595,7 +413,7 @@ def _q_text_normalize(spark, sf_dir):
     (already-normal path — the operator must be a no-op).
 
     Scale shape: a narrow map (doc_id, text) -> (doc_id, md5, lengths);
-    no shuffle, same plan as lang_pred at any corpus size."""
+    no shuffle at any corpus size."""
     from ocr_pipeline_spark.operators.text_ops import normalize_kernel
 
     d = _t(spark, sf_dir, "documents")
@@ -687,17 +505,6 @@ def _q_minhash_dup_pairs(spark, sf_dir):
     return out
 
 
-def _q_ann_lsh(spark, sf_dir):
-    from ocr_pipeline_spark.operators.ann import lsh_ann_topk
-
-    e = _t(spark, sf_dir, "embeddings")
-    query = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-    return lsh_ann_topk(
-        e.filter(F.col("vec_id") != 0), "embedding", "vec_id", query,
-        k=10, n_planes=4, n_tables=12,
-    )
-
-
 def _ann_recall_row(spark, sf_dir, approx_topk):
     """Shared body of the two ANN recall-assertion queries: exact
     top-10 (one JVM-vectorized scan) vs an approximate arm, returning
@@ -720,7 +527,7 @@ def _ann_recall_row(spark, sf_dir, approx_topk):
 
 
 def _q_ann_lsh_recall(spark, sf_dir):
-    """Recall-assertion twin of ann_lsh, giving the LSH path a HARD
+    """Recall of the LSH top-k path against exact top-k, with a HARD
     DuckDB oracle: (k, n_hits) with n_hits = |exact ∩ lsh|.  The
     oracle asserts n_hits = k: at n_planes=4, n_tables=24 the
     deterministic seeded planes give recall 1.0 on this fixture
@@ -738,7 +545,7 @@ def _q_ann_lsh_recall(spark, sf_dir):
 
 
 def _q_ann_ivf_recall(spark, sf_dir):
-    """Recall-assertion twin of ann_ivf (hard DuckDB oracle for the
+    """Recall of the IVF top-k path (hard DuckDB oracle for the
     IVF path): exact top-k vs IVF top-k at n_cells=16, n_probe=12 —
     deterministic seeded init + full-batch distributed Lloyd, so the
     probed cells and therefore n_hits are reproducible.  n_probe is
@@ -746,8 +553,7 @@ def _q_ann_ivf_recall(spark, sf_dir):
     also exact at sf0.001) — the oracle asserts n_hits = k, so a
     regression in cell training, assignment, or probing flips the
     hash.  At production scale the same pipeline runs n_probe <<
-    n_cells; this query is the correctness anchor, ann_ivf the
-    scale-shape one."""
+    n_cells."""
     from ocr_pipeline_spark.operators.ann import ivf_ann_topk
 
     return _ann_recall_row(
@@ -909,10 +715,9 @@ def _q_pagerank_step(spark, sf_dir):
     rank_q = 0.15*S + (85 * (inflow_q + (n_dangling * S) div n)) div 100,
     i.e. the standard (1-d)/n + d*(inflow + dangling/n) step scaled by
     S*n — exercising the same graph build, transition normalization,
-    dangling redistribution, and teleport arithmetic as host_pagerank,
-    but hash-provable against SQL on the witnessed edge list.  The
-    iterative query (host_pagerank) stays numpy-parity-pinned; this
-    pins the semantics per engine.
+    dangling redistribution, and teleport arithmetic as a full power
+    iteration, but hash-provable against SQL on the witnessed edge
+    list.
 
     Scale shape: edges checkpointed once (kernel subtree), one keyed
     agg for out-weights, one partial-aggregated inflow group-by;
@@ -934,7 +739,7 @@ def _q_pagerank_step(spark, sf_dir):
             F.col("n_links").cast("long").alias("w"),
         )
         # kernel-derived subtree with multiple consumers below: pin it
-        # (the anchor_texts/host_pagerank materialization policy)
+        # (the anchor_texts materialization policy)
         .localCheckpoint(eager=False)
     )
     nodes = (
@@ -1052,9 +857,9 @@ def _q_near_dup_verified(spark, sf_dir):
 
 def _q_fuzzy_decontamination(spark, sf_dir):
     """X60: fuzzy benchmark decontamination — corpus documents that are
-    NEAR-duplicates of a held-out eval set (doc_id % 97 == 0, the same
-    stand-in contamination_check uses) under MinHash-LSH banding with
-    exact char-3-gram Jaccard verification at 0.5.  Paraphrased or
+    NEAR-duplicates of a held-out eval set (doc_id % 97 == 0) under
+    MinHash-LSH banding with exact char-3-gram Jaccard verification at
+    0.5.  Paraphrased or
     lightly-edited eval leaks survive the exact-gram check; this is the
     pass that catches them.  Deterministic leaks are injected first:
     corpus docs with doc_id % 89 == 0 (and not themselves eval) take
@@ -1147,42 +952,6 @@ def _q_wet_export(spark, sf_dir):
     return wet_export_df(extracted, n_shards=8).orderBy("shard")
 
 
-def _q_jaccard_pairs_host(spark, sf_dir):
-    """Exact within-host char-3-gram Jaccard pairs (blocked dedup),
-    integer-exact output so the DuckDB oracle hash-matches."""
-    from ocr_pipeline_spark.operators.text_ops import blocked_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return blocked_jaccard_pairs(
-        d, "doc_id", "text", "source", threshold_num=3, threshold_den=5
-    ).orderBy("id_a", "id_b")
-
-
-def _q_train_test_split(spark, sf_dir):
-    """Deterministic hash-based train/test split — the standard
-    content-addressed split (never random(): reproducible across runs,
-    clusters, and engines).  Bucket = first two md5 hex digits of the
-    doc id -> 0..255 -> % 100; <90 trains.  Pure JVM expressions."""
-    d = _t(spark, sf_dir, "documents")
-    hx = F.md5(F.col("doc_id").cast("string"))
-    digit = lambda i: F.expr(  # noqa: E731
-        f"locate(substring(md5(cast(doc_id as string)), {i}, 1), "
-        f"'0123456789abcdef') - 1"
-    )
-    bucket = (digit(1) * 16 + digit(2)) % 100
-    return (
-        d.withColumn(
-            "split", F.when(bucket < 90, F.lit("train")).otherwise("test")
-        )
-        .groupBy("split")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-        .orderBy("split")
-    )
-
-
 def _q_pack_sequences(spark, sf_dir, n_shards: int | None = None):
     """Greedy sequence packing for training batches: within each shard
     (hash of doc id — packing is per-shard so the window never needs a
@@ -1216,158 +985,6 @@ def _q_pack_sequences(spark, sf_dir, n_shards: int | None = None):
         )
         .orderBy("shard", "bin")
     )
-
-
-def _q_doc_chunks(spark, sf_dir):
-    """Fixed-size chunking with overlap (context-window prep): one
-    sequence() + explode per doc — narrow, no shuffle; chunk content
-    witnessed by md5 so the oracle proves byte-equal chunking."""
-    d = _t(spark, sf_dir, "documents")
-    size, overlap = 2000, 200
-    n_chunks = F.greatest(
-        F.lit(1), F.ceil(F.col("n_chars") / F.lit(size))
-    ).cast("int")
-    chunked = d.select(
-        "doc_id",
-        "n_chars",
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
-    ).select(
-        "doc_id",
-        "chunk_id",
-        (F.col("chunk_id") * size).alias("chunk_start"),
-        F.least(
-            F.lit(size + overlap), F.col("n_chars") - F.col("chunk_id") * size
-        ).alias("chunk_len"),
-    )
-    with_text = chunked.join(d.select("doc_id", "text"), "doc_id")
-    return with_text.select(
-        "doc_id",
-        "chunk_id",
-        "chunk_start",
-        "chunk_len",
-        F.md5(
-            F.encode(
-                F.expr("substring(text, chunk_start + 1, chunk_len)"), "UTF-8"
-            )
-        ).alias("chunk_md5"),
-    ).orderBy("doc_id", "chunk_id")
-
-
-def _q_dedup_canonical_docs(spark, sf_dir):
-    """The keep-side of component dedup: one canonical doc per
-    within-host near-dup cluster (min id) plus all unimplicated docs."""
-    from ocr_pipeline_spark.operators.components import dedup_canonical
-    from ocr_pipeline_spark.operators.text_ops import blocked_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = blocked_jaccard_pairs(
-        d, "doc_id", "text", "source", threshold_num=3, threshold_den=5
-    )
-    return (
-        dedup_canonical(d, "doc_id", pairs)
-        .select("doc_id", "source", "n_chars")
-        .orderBy("doc_id")
-    )
-
-
-def _q_repetition_stats(spark, sf_dir):
-    """Gopher/C4-style repetition signals per document: word count,
-    distinct-word count, top word frequency, top bigram frequency —
-    the standard filters for templated/spammy text.  Integer-exact
-    (counts only, tie-independent).  Scale shape: explode + partial-agg
-    group-bys (map-side combine), never per-doc quadratic HOFs."""
-    d = _t(spark, sf_dir, "documents")
-    ws = d.select("doc_id", F.split("text", " ").alias("ws"))
-    words = ws.select("doc_id", F.explode("ws").alias("w"))
-    top_word = (
-        words.groupBy("doc_id", "w").count()
-        .groupBy("doc_id").agg(F.max("count").alias("top_word_count"))
-    )
-    bigrams = ws.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("ws") >= 2,
-                F.expr(
-                    "transform(sequence(1, size(ws) - 1), "
-                    "i -> array_join(slice(ws, i, 2), ' '))"
-                ),
-            ).otherwise(F.expr("array()"))
-        ).alias("g"),
-    )
-    top_bigram = (
-        bigrams.groupBy("doc_id", "g").count()
-        .groupBy("doc_id").agg(F.max("count").alias("top_bigram_count"))
-    )
-    base = ws.select(
-        "doc_id",
-        F.size("ws").alias("n_words"),
-        F.size(F.array_distinct("ws")).alias("n_distinct_words"),
-    )
-    return (
-        base.join(top_word, "doc_id", "left")
-        .join(top_bigram, "doc_id", "left")
-        .select(
-            "doc_id", "n_words", "n_distinct_words",
-            F.coalesce("top_word_count", F.lit(0)).alias("top_word_count"),
-            F.coalesce("top_bigram_count", F.lit(0)).alias("top_bigram_count"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _q_pii_scrub(spark, sf_dir):
-    """PII detection + redaction (training-data hygiene): deterministic
-    synthetic PII is injected per doc_id (emails/IPs/phones), then
-    counted and scrubbed with the same regexes in Spark and DuckDB;
-    the scrubbed text is witnessed by md5 so the oracle proves
-    byte-equal redaction.  All JVM expressions — regexp_count /
-    regexp_replace — no Python."""
-    d = _t(spark, sf_dir, "documents")
-    injected = (
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(
-                F.col("text"), F.lit(" contact user"),
-                F.col("doc_id").cast("string"), F.lit("@example.com now"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(
-                F.col("text"), F.lit(" server at 10.0."),
-                (F.col("doc_id") % 256).cast("string"), F.lit("."),
-                (F.col("doc_id") % 100).cast("string"), F.lit(" port"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(
-                F.col("text"), F.lit(" call +1-555-"),
-                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-                F.lit(" today"),
-            ),
-        )
-        .otherwise(F.col("text"))
-    )
-    email_re = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-    ip_re = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
-    phone_re = r"\+1-555-\d{4}"
-    with_inj = d.select("doc_id", injected.alias("t"))
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("t"), email_re, "[EMAIL]"),
-            ip_re, "[IP]",
-        ),
-        phone_re, "[PHONE]",
-    )
-    return with_inj.select(
-        "doc_id",
-        F.regexp_count(F.col("t"), F.lit(email_re)).alias("n_emails"),
-        F.regexp_count(F.col("t"), F.lit(ip_re)).alias("n_ips"),
-        F.regexp_count(F.col("t"), F.lit(phone_re)).alias("n_phones"),
-        F.md5(F.encode(scrubbed, "UTF-8")).alias("scrubbed_md5"),
-    ).orderBy("doc_id")
 
 
 def _q_contamination_check(spark, sf_dir):
@@ -1411,91 +1028,6 @@ def _q_contamination_check(spark, sf_dir):
         )
         .orderBy("doc_id")
     )
-
-
-def _q_lm_score(spark, sf_dir):
-    """CCNet-style LM quality scoring (X38), fully distributed: train a
-    bigram language model on the corpus's own train split (doc_id % 10
-    < 8) via one partial-aggregated gram count, then score EVERY
-    document by its average gram weight.  Weights are the
-    integer-quantized log-likelihood floor(log2(count + 1)) — computed
-    as length(bin(c + 1)) - 1, which is integer-exact in both engines,
-    so the distributed per-doc sum is order-independent and the DuckDB
-    oracle hash-proves it (a libm-log variant differs only by
-    quantization; the filter consumer thresholds the average either
-    way).  OOV grams weigh 0; docs with < 2 words score NULL.
-
-    Scale shape: gram counting is one partial-aggregated group-by; the
-    scoring join is keyed on the gram (AQE broadcasts it when the
-    pruned LM is small, bucketed co-location otherwise); the per-doc
-    aggregate is partial-aggregated integer sums.  Never a collect,
-    never a corpus broadcast — the model never leaves the cluster."""
-    d = _t(spark, sf_dir, "documents")
-    ws = d.select("doc_id", F.split("text", " ").alias("ws"))
-    grams = ws.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("ws") >= 2,
-                F.expr(
-                    "transform(sequence(1, size(ws) - 1), "
-                    "i -> array_join(slice(ws, i, 2), ' '))"
-                ),
-            ).otherwise(F.expr("array()"))
-        ).alias("g"),
-    )
-    counts = (
-        grams.filter(F.col("doc_id") % 10 < 8)
-        .groupBy("g")
-        .agg(F.count("*").alias("c"))
-    )
-    weight = F.length(F.bin(F.coalesce(F.col("c"), F.lit(0)) + 1)) - 1
-    per_doc = (
-        grams.join(counts, "g", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(weight).alias("llq_sum"),
-            F.count("*").alias("n_grams"),
-        )
-    )
-    return (
-        d.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("llq_sum", F.lit(0)).alias("llq_sum"),
-            F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-            F.when(
-                F.col("n_grams") > 0, F.col("llq_sum") / F.col("n_grams")
-            ).alias("avg_llq"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _q_compression_signal(spark, sf_dir):
-    """Gopher-style compression-ratio quality signal (X37): zlib-6
-    compressed size over raw UTF-8 size per document — repetitive
-    templated/spam text compresses far below prose, making the ratio a
-    standard corpus-hygiene filter.  Narrow Arrow kernel, no shuffle;
-    oracled by a golden witness from the single-process twin
-    (scripts/gen_witness.py, freshness-pinned).  The ratio is one IEEE
-    division of the witnessed integers, so it hashes identically."""
-    from ocr_pipeline_spark.operators.text_ops import compression_signal_kernel
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sig = d.mapInPandas(
-        compression_signal_kernel(),
-        schema="doc_id long, n_bytes long, n_compressed long",
-    )
-    return sig.select(
-        "doc_id",
-        "n_bytes",
-        "n_compressed",
-        F.when(
-            F.col("n_bytes") > 0, F.col("n_compressed") / F.col("n_bytes")
-        ).alias("ratio"),
-    ).orderBy("doc_id")
 
 
 def _q_bpe_pair_counts(spark, sf_dir):
@@ -1551,138 +1083,6 @@ def _q_bpe_merges(spark, sf_dir):
         [(i, l, r) for i, (l, r) in enumerate(merges)],
         schema="rank int, lhs string, rhs string",
     ).orderBy("rank")
-
-
-def _q_bpe_encode_stats(spark, sf_dir):
-    """X39 (tokenizer application): encode EVERY document with the
-    learned merges — the fan-back-out stage that is the real corpus-
-    scale workload.  Merges (a few KB) ship in the task closure; the
-    Arrow kernel memoizes per-word token counts so the Zipf head costs
-    dict hits.  Witness-oracled by the single-process twin: per-doc
-    (n_words, n_tokens) are integers, so the hash compare is exact."""
-    from ocr_pipeline_spark.operators.bpe import (
-        ENCODE_DDL,
-        bpe_encode_kernel,
-        train_bpe,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    merges = train_bpe(d, n_merges=64, vocab_cap=20_000)
-    return (
-        d.select("doc_id", "text")
-        .mapInPandas(bpe_encode_kernel(merges), schema=ENCODE_DDL)
-        .orderBy("doc_id")
-    )
-
-
-def _q_term_postings(spark, sf_dir):
-    """X40: inverted-index postings construction — the lexical-retrieval
-    index build (the persistent artifact behind bm25_search's on-the-fly
-    stats).  Per term: document frequency, total term frequency, and
-    the head of the doc_id-sorted posting list.
-
-    Scale shape: the index build IS a sort by (term, doc_id) — the
-    per-doc tf frame partial-aggregates map-side, the posting head is
-    bounded by a row_number window (per-group state is the sort's
-    spill-aware buffer, NEVER an unbounded collect_list over a stopword
-    term's whole corpus), and the full-index variant would writeTo a
-    term-bucketed table instead of slicing a head.  Integer-exact."""
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).filter(F.length("term") > 0)
-    per_doc = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    stats = per_doc.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("tf_total")
-    )
-    w = Window.partitionBy("term").orderBy("doc_id")
-    heads = (
-        per_doc.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 32)
-        .groupBy("term")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("plist"))
-    )
-    return (
-        stats.join(heads, "term")
-        .filter(F.col("df") >= 25)
-        .select(
-            "term",
-            "df",
-            "tf_total",
-            F.array_join(
-                F.expr("transform(plist, x -> cast(x as string))"), ","
-            ).alias("postings_head"),
-        )
-        .orderBy("term")
-    )
-
-
-def _q_blocklist_tags(spark, sf_dir):
-    """X41: word-list + source blocklist tagging — the C4 "bad words" /
-    RefinedWeb URL-blocklist filter shape.  Per document: blocked-term
-    hits, word count, and the verdict — blocked if the source is on the
-    blocklist or blocked terms are >=5% of words (integer cross-
-    multiplied predicate, no float threshold, so the oracle is exact).
-
-    Scale shape: the lexicon and source list ride the plan as literals
-    (a real deployment swaps them for a broadcast join against a
-    blocklist table); one narrow projection, no shuffle at all — the
-    tagger is a map over the scan."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.filter(F.split("text", " "), lambda w: F.length(w) > 0)
-    return (
-        d.select(
-            "doc_id",
-            "source",
-            F.size(
-                F.filter(ws, lambda w: w.isin("slow", "spam", "junk"))
-            ).alias("hits"),
-            F.size(ws).alias("n_words"),
-        )
-        .withColumn(
-            "blocked",
-            (
-                F.col("source").isin("src7", "src13")
-                | (20 * F.col("hits") >= F.col("n_words"))
-            ).cast("int"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _q_mixing_weights(spark, sf_dir):
-    """X42: temperature-based language-mixing weights — the multilingual
-    sampling table (weight ∝ count^alpha, alpha=1/2 flattens the head so
-    low-resource languages are upsampled; XLM/mT5 recipe).  Exact float
-    path: sqrt is IEEE-correctly-rounded in both engines, max is a
-    selection, and the only other float op is ONE division by the
-    max-language weight — no order-dependent float sum anywhere, so the
-    oracle hash-matches bit-for-bit.
-
-    Scale shape: one partial-aggregated group-by down to |langs| rows,
-    then a broadcast cross join for the max — nothing but the tiny lang
-    table ever moves."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.filter(F.split("text", " "), lambda w: F.length(w) > 0)
-    per_lang = d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.size(ws)).alias("n_tokens"),
-    )
-    mx = per_lang.agg(
-        F.max(F.sqrt(F.col("n_tokens").cast("double"))).alias("w_max")
-    )
-    return (
-        per_lang.crossJoin(F.broadcast(mx))
-        .select(
-            "lang",
-            "n_docs",
-            "n_tokens",
-            (
-                F.sqrt(F.col("n_tokens").cast("double")) / F.col("w_max")
-            ).alias("rel_weight"),
-        )
-        .orderBy("lang")
-    )
 
 
 def _q_warc_records(spark, sf_dir):
@@ -1812,54 +1212,6 @@ def _q_dsir_weights(spark, sf_dir):
             ).alias("keep"),
         )
         .orderBy("doc_id")
-    )
-
-
-def _q_snapshot_diff(spark, sf_dir):
-    """X48: crawl snapshot diff — classify every url across two crawl
-    snapshots as new / gone / changed / same (the recrawl-economics
-    primitive: what to refetch, what to tombstone, what to dedup
-    against the previous snapshot).  Snapshots are synthesized
-    deterministically from `documents`: snapshot A omits doc_id%10==9,
-    snapshot B omits doc_id%10==0 and rewrites content for
-    doc_id%7==3; content identity is md5 so the comparison never ships
-    the body.
-
-    Scale shape: ONE url-keyed full outer join (sort-merge, bucketable
-    by url; on Iceberg the two sides are time-travel reads of the same
-    table so they share partitioning and the join co-locates); status
-    is a null/hash case expression; per-status totals are a partial
-    agg.  Nothing collects, no pair expansion, bodies reduced to
-    hashes at the scan."""
-    d = _synth_urls(_t(spark, sf_dir, "documents")).select(
-        "url", "doc_id", "text"
-    )
-    snap_a = d.filter(F.col("doc_id") % 10 != 9).select(
-        "url", F.md5(F.encode("text", "UTF-8")).alias("h_a")
-    )
-    snap_b = d.filter(F.col("doc_id") % 10 != 0).select(
-        "url",
-        F.md5(
-            F.encode(
-                F.when(
-                    F.col("doc_id") % 7 == 3,
-                    F.concat(F.col("text"), F.lit(" [recrawled]")),
-                ).otherwise(F.col("text")),
-                "UTF-8",
-            )
-        ).alias("h_b"),
-    )
-    return (
-        snap_a.join(snap_b, "url", "full_outer")
-        .select(
-            "url",
-            F.when(F.col("h_a").isNull(), "new")
-            .when(F.col("h_b").isNull(), "gone")
-            .when(F.col("h_a") != F.col("h_b"), "changed")
-            .otherwise("same")
-            .alias("status"),
-        )
-        .orderBy("url")
     )
 
 
@@ -2185,11 +1537,9 @@ def _q_corpus_curation(spark, sf_dir):
     """X55: the flagship curation COMPOSITION in one Catalyst plan —
     hygiene filter -> exact dedup (keep lowest doc_id per content
     hash) -> per-language content-addressed quota (40 docs/lang) —
-    i.e. the standard corpus-build chain whose stage FAMILIES exist
-    as individual oracled queries (cf. filter_funnel for the full
-    multi-predicate hygiene report, dedup_exact, stratified_sample;
-    this pipeline uses a single length predicate so each stage
-    visibly changes the row set at the compare sf), fused to prove
+    i.e. the standard corpus-build chain (a single length predicate
+    so each stage visibly changes the row set at the compare sf),
+    fused to prove
     the stage shapes compose into a single lazily-planned pipeline a
     user would actually ship.
 
@@ -2355,153 +1705,6 @@ def _q_classifier_scores(spark, sf_dir):
         )
         .withColumn("label", F.col("score") >= 0)
         .orderBy("doc_id")
-    )
-
-
-def _q_semdedup(spark, sf_dir):
-    """X43: SemDeDup (Abbas et al. 2023) — semantic dedup in embedding
-    space: spherical k-means cells, then within each cell drop any
-    member with an earlier-ranked (farther-from-centroid) member within
-    cosine 0.35.  Centroids train on a bounded md5-ordered sample
-    (O(sample) driver transfer, partition-independent); assignment is a
-    broadcast-centroids Arrow kernel; the dedup is ONE shuffle on the
-    cell id + a per-cell GEMM.  Oracle: golden witness from the
-    single-process twin (scripts/gen_witness.py) — the numpy kernels
-    use fixed-order reductions so equality is bit-exact, including the
-    float64 cent_sim column."""
-    from ocr_pipeline_spark.operators.semdedup import (
-        semdedup,
-        train_centroids_sample,
-    )
-
-    e = _t(spark, sf_dir, "embeddings")
-    cents = train_centroids_sample(
-        e, "embedding", "vec_id", n_cells=8, sample_n=256, iters=8
-    )
-    return semdedup(e, "embedding", "vec_id", cents, tau=0.35).orderBy(
-        "vec_id"
-    )
-
-
-def _q_incremental_dedup(spark, sf_dir):
-    """Rolling-crawl incremental dedup (the operational shape of X1 at
-    100 TB: each new crawl drop dedups against the already-indexed
-    corpus, not against itself alone).  The fixture split is
-    deterministic: doc_id % 5 == 0 is the 'new drop', the rest is the
-    corpus index.  A new doc survives iff its exact content hash is
-    absent from the index (left_anti join on the hash) AND it is the
-    min-doc_id representative of its hash within the drop (window).
-
-    Scale shape: the index side ships only distinct (hash) — at scale
-    that is a bucketed table on the hash column, so the anti-join is
-    co-located (sources/catalog.py:write_bucketed) and only the NEW
-    drop shuffles; the within-drop window shuffles drop-sized data
-    once.  Never a broadcast of the corpus, never a pair expansion."""
-    d = _t(spark, sf_dir, "documents")
-    new = d.filter(F.col("doc_id") % 5 == 0).select(
-        "doc_id", F.md5(F.encode("text", "UTF-8")).alias("h")
-    )
-    index = (
-        d.filter(F.col("doc_id") % 5 != 0)
-        .select(F.md5(F.encode("text", "UTF-8")).alias("h"))
-        .distinct()
-    )
-    w = Window.partitionBy("h").orderBy("doc_id")
-    return (
-        new.join(index, "h", "left_anti")
-        .select("doc_id", "h", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") == 1)
-        .select("doc_id", "h")
-        .orderBy("doc_id")
-    )
-
-
-def _q_embedding_quantize(spark, sf_dir):
-    """Symmetric int8 quantization of the embedding column — the
-    standard storage/bandwidth lever for corpus-scale vector search
-    (4x smaller, GEMM-able).  Per vector: scale = 127/max|x|, q =
-    round(x*scale); witnessed by the quantized byte string's md5 plus
-    integer-exact saturation/zero counts, so the oracle proves the
-    exact same int8 codes.  Pure JVM higher-order functions — no UDF,
-    no shuffle (narrow, embarrassingly parallel at any scale)."""
-    e = _t(spark, sf_dir, "embeddings")
-    maxabs = F.expr(
-        "aggregate(embedding, CAST(0.0 AS DOUBLE), "
-        "(m, x) -> greatest(m, abs(CAST(x AS DOUBLE))))"
-    )
-    with_scale = e.select(
-        "vec_id",
-        "embedding",
-        F.when(maxabs > 0, F.lit(127.0) / maxabs).otherwise(F.lit(0.0)).alias(
-            "scale"
-        ),
-    )
-    q = F.expr(
-        "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * scale) AS INT))"
-    )
-    return with_scale.select(
-        "vec_id",
-        F.round("scale", 6).alias("scale_r"),
-        F.md5(F.concat_ws(",", q)).alias("q_md5"),
-        F.expr(
-            "size(filter(transform(embedding, x -> "
-            "CAST(round(CAST(x AS DOUBLE) * scale) AS INT)), v -> abs(v) = 127))"
-        ).alias("n_saturated"),
-        F.expr(
-            "size(filter(transform(embedding, x -> "
-            "CAST(round(CAST(x AS DOUBLE) * scale) AS INT)), v -> v = 0))"
-        ).alias("n_zero"),
-    ).orderBy("vec_id")
-
-
-def _q_filter_funnel(spark, sf_dir):
-    """The corpus-filter FUNNEL report (Gopher/C4-style pipeline
-    hygiene): documents flow through exact-dedup -> min-length ->
-    alpha-ratio -> repetition filters in order; one row per stage with
-    drop/survivor counts.  Every predicate is integer-exact (cross-
-    multiplied ratios, no float thresholds) so the oracle hash-matches
-    bit-for-bit.  Single pass: all flags computed in one projection +
-    one window, then a conditional aggregation."""
-    d = _t(spark, sf_dir, "documents")
-    w_dup = Window.partitionBy(F.md5(F.encode("text", "UTF-8"))).orderBy(
-        "doc_id"
-    )
-    ws = F.split("text", " ")
-    flagged = (
-        d.select("doc_id", "text", "n_chars")
-        .withColumn("is_dup", F.row_number().over(w_dup) > 1)
-        .withColumn("too_short", F.col("n_chars") < 200)
-        .withColumn(
-            "low_alpha",
-            10 * F.length(F.regexp_replace("text", "[^a-zA-Z]", ""))
-            < 6 * F.length("text"),
-        )
-        .withColumn("ws", ws)
-    )
-    words = flagged.select(
-        "doc_id", "is_dup", "too_short", "low_alpha",
-        F.size("ws").alias("n_words"),
-        F.explode("ws").alias("w"),
-    )
-    wc = words.groupBy(
-        "doc_id", "is_dup", "too_short", "low_alpha", "n_words", "w"
-    ).count()
-    per_doc = wc.groupBy(
-        "doc_id", "is_dup", "too_short", "low_alpha", "n_words"
-    ).agg(F.max("count").alias("top_wc"))
-    staged = per_doc.select(
-        "doc_id",
-        F.when(F.col("is_dup"), "1_exact_dup")
-        .when(F.col("too_short"), "2_too_short")
-        .when(F.col("low_alpha"), "3_low_alpha")
-        .when(5 * F.col("top_wc") > F.col("n_words"), "4_repetitive")
-        .otherwise("kept")
-        .alias("stage"),
-    )
-    return (
-        staged.groupBy("stage")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("stage")
     )
 
 
@@ -2701,25 +1904,6 @@ def _q_extract_pdf_documents(spark, sf_dir):
     )
 
 
-def _q_dup_components_host(spark, sf_dir):
-    """Near-dup clusters: the oracled within-host Jaccard pairs form the
-    edge set; min-label propagation finds components (the canonical-doc
-    grouping every dedup pipeline needs after pair generation).  Oracle:
-    DuckDB recursive CTE over the same pair SQL."""
-    from ocr_pipeline_spark.operators.components import connected_components
-    from ocr_pipeline_spark.operators.text_ops import blocked_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = blocked_jaccard_pairs(
-        d, "doc_id", "text", "source", threshold_num=3, threshold_den=5
-    )
-    return (
-        connected_components(pairs)
-        .select(F.col("id").alias("doc_id"), F.col("comp").alias("component"))
-        .orderBy("doc_id")
-    )
-
-
 def _q_dedup_soft_weights(spark, sf_dir):
     """Soft deduplication (X62): instead of DROPPING near-duplicates,
     every document keeps a training weight 1/|cluster| so each near-dup
@@ -2768,58 +1952,18 @@ def _q_dedup_soft_weights(spark, sf_dir):
     )
 
 
-def _q_lang_pred(spark, sf_dir):
-    """Deterministic stopword-vote language ID (Arrow kernel), with an
-    exact DuckDB oracle replicating the vote + tie-break in SQL."""
-    from ocr_pipeline_spark.operators.text_ops import lang_id_kernel
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(
-        lang_id_kernel(), schema="doc_id long, text string, lang_pred string"
-    ).select("doc_id", "lang_pred").orderBy("doc_id")
-
-
 _BM25_TERMS = ("spark", "window", "join")
 _BM25_K1 = 1.5
 _BM25_B = 0.75
 
 
-def _q_bm25_search(spark, sf_dir):
-    """Lexical top-k retrieval (BM25-shaped) over the documents table —
-    the text-side counterpart of the embedding ANN family (X7-X9):
-    score every document against a fixed query-term set, return the
-    top 15 with a deterministic doc_id tie-break.
-
-    Scoring uses the odds-ratio idf (N - df + 0.5)/(df + 0.5) WITHOUT
-    the usual log: every factor is then a fixed-order composition of
-    IEEE-754-exact-input operations (integer-derived counts, exactly
-    representable constants, one division per factor), so the DuckDB
-    oracle is bit-identical — with log() the value-hash compare would
-    hinge on libm-vs-JVM rounding.  log is monotone, so per-term
-    ranking is unchanged; only relative term weighting differs from
-    textbook BM25, which this docstring is the record of.
-
-    Scale shape: corpus statistics (N, avgdl, per-term df) reduce to a
-    ONE-ROW frame in a single conditional-aggregate pass and ride a
-    broadcast cross join back onto the corpus — never a collect, never
-    a shuffle of the corpus; per-doc term frequencies are JVM
-    higher-order filters over the split column (terms are few and
-    constant — no explode, no posting-list shuffle); top-k is
-    orderBy+limit = TakeOrdered, no global sort materialization."""
-    return (
-        _bm25_scored_df(spark, sf_dir)
-        .orderBy(F.desc("score"), "doc_id")
-        .limit(15)
-    )
-
-
 def _bm25_scored_df(spark, sf_dir):
-    """(doc_id, score) BM25 frame shared by _q_bm25_search and
-    _q_hybrid_search's lexical arm — ONE expression tree so the two
-    cannot drift (the SQL side shares _bm25_sql_parts the same way).
-    The cross-term sum is a literal left-to-right chain over a constant
-    number of terms: NO float aggregation whose accumulation order
-    could differ across engines."""
+    """(doc_id, score) BM25 frame: _q_hybrid_search's lexical arm,
+    built from the same term list and constants as _bm25_sql_parts so
+    the Spark and SQL sides cannot drift.  The cross-term sum is a
+    literal left-to-right chain over a constant number of terms: NO
+    float aggregation whose accumulation order could differ across
+    engines."""
     d = _t(spark, sf_dir, "documents")
     ws = d.select("doc_id", F.split("text", " ").alias("ws"))
     doc = ws.select(
@@ -2866,18 +2010,17 @@ def _bm25_scored_df(spark, sf_dir):
 
 def _q_hybrid_search(spark, sf_dir):
     """X49: hybrid retrieval via reciprocal-rank fusion (RRF, k=60 —
-    the standard lexical+dense ensemble): fuse the BM25 top-20 (same
-    expression tree as bm25_search) with the exact-cosine top-20
-    against the query embedding (vec_id 0, same scoring as
-    embedding_knn); rrf = 1/(60+r_lex) + 1/(60+r_dense), absent list
-    contributes 0.  Both ranks come from engine-identical orderings
-    (bit-exact BM25 floats; 4dp-rounded cosine; doc_id tie-breaks), and
+    the standard lexical+dense ensemble): fuse the BM25 top-20 with
+    the exact-cosine top-20 against the query embedding (vec_id 0);
+    rrf = 1/(60+r_lex) + 1/(60+r_dense), absent list contributes 0.
+    Both ranks come from engine-identical orderings (bit-exact BM25
+    floats; 4dp-rounded cosine; doc_id tie-breaks), and
     the fusion is a two-term fixed-order IEEE sum — hash-exact oracle.
 
     Scale shape: each arm ends in TakeOrdered(k); rank assignment
     (row_number without partitioning) runs over the ALREADY-REDUCED
     k-row frame, never the corpus; the fusion join is k-vs-k.  The
-    corpus-side costs are exactly bm25_search's one-row broadcast
+    corpus-side costs are the BM25 arm's one-row broadcast
     stats pass and a brute-force scan (swap the IVF/LSH arm in at
     scale)."""
     scored = _bm25_scored_df(spark, sf_dir).filter(F.col("doc_id") != 0)
@@ -2945,9 +2088,9 @@ def _q_hybrid_search(spark, sf_dir):
 
 
 def _bm25_sql_parts() -> tuple[str, str, str]:
-    """Shared tf/df/score SQL fragments for the BM25 oracles (plain
-    and hybrid), generated from the same term list and constants as
-    the Spark expression so the twins can't drift."""
+    """tf/df/score SQL fragments for the hybrid_search oracle's BM25
+    arm, generated from the same term list and constants as the Spark
+    expression so the twins can't drift."""
     k1, b = _BM25_K1, _BM25_B
     tf_cols = ",\n                   ".join(
         f"CAST(len(list_filter(ws, x -> x = '{t}')) AS DOUBLE) AS tf_{i}"
@@ -2967,36 +2110,9 @@ def _bm25_sql_parts() -> tuple[str, str, str]:
     return tf_cols, df_cols, term_exprs
 
 
-def _bm25_oracle_sql() -> str:
-    """DuckDB twin of _q_bm25_search.  All literals are CAST to DOUBLE
-    (bare decimals are DECIMAL-typed in DuckDB, which would change the
-    arithmetic path) and the expression tree mirrors the Spark column
-    expression operation-for-operation."""
-    tf_cols, df_cols, term_exprs = _bm25_sql_parts()
-    return f"""
-        WITH ws AS (
-            SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-        ), doc AS (
-            SELECT doc_id,
-                   CAST(len(ws) AS DOUBLE) AS dl,
-                   {tf_cols}
-            FROM ws
-        ), stats AS (
-            SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                   sum(dl) / count(*) AS avgdl,
-                   {df_cols}
-            FROM doc
-        )
-        SELECT doc_id, {term_exprs} AS score
-        FROM doc, stats
-        ORDER BY score DESC, doc_id
-        LIMIT 15
-    """
-
-
 def _hybrid_oracle_sql() -> str:
     """DuckDB twin of _q_hybrid_search: BM25 arm from the shared SQL
-    parts, cosine arm from the embedding_knn oracle shape (4dp round),
+    parts, cosine arm as exact top-20 cosine (4dp round),
     RRF as the same two-term fixed-order DOUBLE sum."""
     tf_cols, df_cols, term_exprs = _bm25_sql_parts()
     return f"""
@@ -3060,31 +2176,6 @@ def _hybrid_oracle_sql() -> str:
     """
 
 
-def _q_vocab_stats(spark, sf_dir):
-    """Corpus vocabulary statistics: per-language top-10 terms by
-    document frequency — the standard corpus-composition / tokenizer-
-    coverage diagnostic.  Integer-exact; ties broken lexicographically
-    so the result is engine- and partitioning-independent.
-
-    Scale shape: distinct-terms-per-doc explode -> one (lang, term)
-    partial-aggregated group-by (map-side combine collapses per-
-    partition repeats before the shuffle) -> the per-lang top-k window
-    runs over the SMALL aggregated frame — the heavy exploded stream
-    never crosses a window."""
-    d = _t(spark, sf_dir, "documents")
-    terms = d.select(
-        "lang", F.explode(F.array_distinct(F.split("text", " "))).alias("term")
-    )
-    dfreq = terms.groupBy("lang", "term").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("lang").orderBy(F.desc("df"), "term")
-    return (
-        dfreq.select("lang", "term", "df", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= 10)
-        .select("lang", "term", "df", F.col("rk").cast("int").alias("rk"))
-        .orderBy("lang", "rk")
-    )
-
-
 _GOPHER_STOPS = ("and", "be", "have", "of", "that", "the", "to", "with")
 
 
@@ -3099,10 +2190,8 @@ def _q_gopher_rules(spark, sf_dir):
     never s/n >= 3.0), so the flags are bit-identical across engines
     and partitionings — no float thresholds to drift.
 
-    Complements filter_funnel (which reports pipeline ATTRITION through
-    a different rule chain): this emits the per-rule verdict vector per
-    document, the shape a curation pipeline joins back to the corpus as
-    a filter mask.
+    This emits the per-rule verdict vector per document, the shape a
+    curation pipeline joins back to the corpus as a filter mask.
 
     Scale shape: one narrow projection — split + JVM higher-order
     filter + array_intersect per row, no shuffle at all until the
@@ -3504,8 +2593,8 @@ def _q_embedding_outliers(spark, sf_dir):
     Scale shape: per-dim centroid sums are a partial-aggregated
     group-by on (label, dim) — the corpus collapses to
     n_labels * 64 rows map-side; centroids rebuild and BROADCAST back;
-    per-row cosine is a narrow JVM fold.  The bottom-k window is the
-    stratified_sample top-k shape (one shuffle on the label key);
+    per-row cosine is a narrow JVM fold.  The bottom-k window is a
+    per-label top-k (one shuffle on the label key);
     at extreme scale the same screen is taken shuffle-free by
     thresholding cos directly."""
     e = _t(spark, sf_dir, "embeddings")
@@ -3699,8 +2788,8 @@ def _q_host_template_lines(spark, sf_dir):
 
 
 def _q_phrase_search(spark, sf_dir):
-    """X76: positional-postings phrase query — the IR operator bm25 /
-    term_postings leave uncovered: exact multi-word phrase match via
+    """X76: positional-postings phrase query — the IR operator bm25
+    leaves uncovered: exact multi-word phrase match via
     adjacent-position intersection of two posting lists (Manning's IR
     ch.2 positional index).  The query set is derived from the corpus
     itself for determinism: the 5 most frequent word bigrams under the
@@ -3853,9 +2942,9 @@ def _q_c4_filters(spark, sf_dir):
     lines under 5 words, drop lines containing the word "javascript",
     drop whole pages that contain "lorem ipsum" or a curly bracket,
     and drop pages left with fewer than 3 sentences.  (The paper's two
-    remaining rules are owned by sibling operators: the bad-words page
-    drop is X41 `blocklist_tags`, the three-sentence-span dedup is
-    X26/X29 `dup_spans`/`dedup_apply_spans`.)
+    remaining rules are not applied here: the bad-words page drop, and
+    the three-sentence-span dedup, which is X26/X29
+    `dup_spans`/`dedup_apply_spans`.)
 
     The fixture corpus is a flat word stream, so each document is
     first re-wrapped into lines of (5 + doc_id % 7) words with a
@@ -3935,27 +3024,12 @@ def _q_c4_filters(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering contract: every key with an oracle_sql() entry comes FIRST,
-    # and the FIRST 50 are the priority window — the driver's correctness
-    # harness evaluates only the first 50 entries.  There are more
-    # oracled queries than window slots, so the window is allocated
-    # deliberately.  EVERY oracled query — windowed or not — is verified
-    # by the identical compare in tests/test_entry_contract.py
-    # (test_query_matches_oracle runs all of them); the window only
-    # decides which rows appear in the driver's CORRECTNESS artifact.
-    # The membership is pinned by
-    # tests/test_entry_contract.py::test_driver_window_allocation.
+    # Ordering contract: the correctness harness evaluates only the
+    # first 50 entries, and every one of them has an oracle_sql() entry.
+    # The oracled queries past the window come next, the one unoracled
+    # query last.  tests/test_entry_contract.py runs the same compare on
+    # every oracled query and pins the window (test_driver_window_allocation).
     return {
-        # -- the window (first 50).  Composition: the pinned core
-        # (extraction/witness family, the round-5 plan-changed queries,
-        # two near-dup flagships), the oracled queries that first got a
-        # CORRECTNESS row in round 5, and four web-text queries swapped
-        # into the slots the retired relational-shell queries freed
-        # (c4_filters, which never had a row, plus three with a green
-        # row in CORRECTNESS_r04).  Every query rotated out has a
-        # green row in CORRECTNESS_r01–r04 and stays covered by the
-        # identical pytest compare.
-        #
         # pinned: extraction family
         "extract_documents": _q_extract_documents,
         "assemble_documents": _q_assemble_documents,
@@ -4016,94 +3090,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "warc_records": _q_warc_records,
         "line_dedup": _q_line_dedup,
         "classifier_scores": _q_classifier_scores,
-        # -- oracled, outside the 50-entry driver window: every one has
-        # a green driver row in CORRECTNESS_r01-r04 and stays covered by
-        # the identical compare in tests/test_entry_contract.py
-        "host_stats": _q_host_stats,
-        "embedding_near_dup": _q_embedding_near_dup,
-        "docs_char_quantiles": _q_docs_char_quantiles,
+        # -- oracled, outside the 50-entry driver window: each pins an
+        # operator (winnowing, SimHash, the contamination gram join,
+        # packing, stratified top-k) that no windowed query runs
         "fingerprint_overlap": _q_fingerprint_overlap,
-        "jaccard_pairs_host": _q_jaccard_pairs_host,
-        "dedup_canonical_docs": _q_dedup_canonical_docs,
         "lang_simhash": _q_lang_simhash,
-        "docs_by_lang": _q_docs_by_lang,
-        "dedup_exact": _q_dedup_exact,
-        "token_stats": _q_token_stats,
-        "quality_scores": _q_quality_scores,
-        "embedding_knn": _q_embedding_knn,
-        "embedding_quantize": _q_embedding_quantize,
         "doc_fingerprints": _q_doc_fingerprints,
-        "lang_pred": _q_lang_pred,
-        "dup_components_host": _q_dup_components_host,
-        "filter_funnel": _q_filter_funnel,
-        "repetition_stats": _q_repetition_stats,
-        "pii_scrub": _q_pii_scrub,
         "contamination_check": _q_contamination_check,
-        "train_test_split": _q_train_test_split,
         "pack_sequences": _q_pack_sequences,
-        "doc_chunks": _q_doc_chunks,
         "stratified_sample": _q_stratified_sample,
         "simhash_dup_pairs": _q_simhash_dup_pairs,
-        "host_link_graph": _q_host_link_graph,
-        "bm25_search": _q_bm25_search,
-        "vocab_stats": _q_vocab_stats,
-        "incremental_dedup": _q_incremental_dedup,
-        "compression_signal": _q_compression_signal,
-        "lm_score": _q_lm_score,
-        "bpe_encode_stats": _q_bpe_encode_stats,
-        "term_postings": _q_term_postings,
-        "blocklist_tags": _q_blocklist_tags,
-        "mixing_weights": _q_mixing_weights,
-        "semdedup": _q_semdedup,
-        "snapshot_diff": _q_snapshot_diff,
-        # --- no DuckDB oracle (independent pytest verification) below ---
-        "ann_lsh": _q_ann_lsh,
-        "ann_ivf": _q_ann_ivf,
-        "embedding_near_dup_lsh": _q_embedding_near_dup_lsh,
+        # -- no DuckDB oracle (numpy-twin pytest verification) --
         "host_pagerank": _q_host_pagerank,
     }
-
-
-def _lang_pred_oracle_sql() -> str:
-    """DuckDB replica of text_ops.identify_language: per-token stopword
-    vote per language, best = max by (score, lang) — i.e. ties go to the
-    lexicographically GREATEST language code, 0 votes (or no words) ->
-    'und'.  Profiles are imported from the kernel so oracle and Spark
-    can't drift."""
-    from ocr_pipeline_spark.operators.text_ops import _LANG_PROFILES, _WORD_RE
-
-    pattern = _WORD_RE.pattern
-    score_cols = ", ".join(
-        "sum(CASE WHEN w IN ({lst}) THEN 1 ELSE 0 END) AS s_{lang}".format(
-            lst=", ".join(f"'{word}'" for word in sorted(profile)), lang=lang
-        )
-        for lang, profile in sorted(_LANG_PROFILES.items())
-    )
-    unpivot = " UNION ALL ".join(
-        f"SELECT doc_id, '{lang}' AS lang, s_{lang} AS s FROM scores"
-        for lang in sorted(_LANG_PROFILES)
-    )
-    return f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(regexp_extract_all(lower(text), '{pattern}')) AS w
-            FROM documents
-        ), scores AS (
-            SELECT doc_id, {score_cols} FROM toks GROUP BY doc_id
-        ), unp AS ({unpivot}),
-        best AS (
-            SELECT doc_id, lang, s,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY s DESC, lang DESC) AS rn
-            FROM unp
-        )
-        SELECT d.doc_id,
-               CASE WHEN b.s IS NULL OR b.s = 0 THEN 'und' ELSE b.lang END
-                   AS lang_pred
-        FROM documents d
-        LEFT JOIN best b ON b.doc_id = d.doc_id AND b.rn = 1
-        ORDER BY d.doc_id
-    """
 
 
 # DuckDB replica of text_ops.winnow_fingerprints (Karp-Rabin polynomial
@@ -4168,108 +3167,6 @@ _WINNOW_FPS_SQL = r"""
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "docs_char_quantiles": """
-            SELECT lang,
-                   round(quantile_cont(n_chars, 0.25), 2) AS p25,
-                   round(quantile_cont(n_chars, 0.50), 2) AS p50,
-                   round(quantile_cont(n_chars, 0.75), 2) AS p75
-            FROM documents
-            GROUP BY lang
-            ORDER BY lang
-        """,
-        "docs_by_lang": """
-            SELECT lang, count(*) AS n_docs,
-                   round(avg(n_chars), 2) AS avg_chars,
-                   CAST(sum(n_chars) AS BIGINT) AS total_chars
-            FROM documents
-            GROUP BY lang
-            ORDER BY lang
-        """,
-        "dedup_exact": """
-            SELECT source, count(*) AS n_docs,
-                   count(DISTINCT md5(text)) AS n_unique,
-                   count(*) - count(DISTINCT md5(text)) AS n_dups
-            FROM documents
-            GROUP BY source
-            ORDER BY source
-        """,
-        "token_stats": """
-            WITH tok AS (
-                SELECT lang,
-                       CASE WHEN length(trim(text)) = 0 THEN 0
-                            ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                       END AS n_tokens
-                FROM documents
-            )
-            SELECT lang,
-                   round(avg(n_tokens), 2) AS avg_tokens,
-                   max(n_tokens) AS max_tokens,
-                   CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-            FROM tok
-            GROUP BY lang
-            ORDER BY lang
-        """,
-        "quality_scores": """
-            WITH feat AS (
-                SELECT doc_id,
-                       CASE WHEN length(trim(text)) = 0 THEN 0
-                            ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                       END AS n_tokens,
-                       CASE WHEN length(text) = 0 THEN 0.0
-                            ELSE length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0 / length(text)
-                       END AS araw,
-                       CASE WHEN length(text) = 0 THEN 0.0
-                            ELSE length(regexp_replace(text, '[^.!?,;:]', '', 'g')) * 1.0 / length(text)
-                       END AS praw,
-                       length(text) AS n_len
-                FROM documents
-            )
-            SELECT doc_id, n_tokens,
-                   round(araw, 4) AS alpha_ratio,
-                   round(praw, 4) AS punct_ratio,
-                   (n_len >= 200 AND n_tokens >= 30 AND araw > 0.6 AND praw < 0.1)
-                       AS is_quality
-            FROM feat
-            ORDER BY doc_id
-        """,
-        "embedding_knn": """
-            WITH q AS (
-                SELECT CAST(embedding AS DOUBLE[]) AS qv
-                FROM embeddings WHERE vec_id = 0
-            )
-            SELECT e.vec_id,
-                   round(
-                       list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv) /
-                       (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                              CAST(e.embedding AS DOUBLE[]))) *
-                        sqrt(list_dot_product(q.qv, q.qv))),
-                       4
-                   ) AS cos_sim
-            FROM embeddings e, q
-            WHERE e.vec_id != 0
-            ORDER BY cos_sim DESC, e.vec_id
-            LIMIT 10
-        """,
-        "embedding_near_dup": """
-            WITH e AS (
-                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            )
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(
-                       list_dot_product(a.v, b.v) /
-                       (sqrt(list_dot_product(a.v, a.v)) *
-                        sqrt(list_dot_product(b.v, b.v))),
-                       4
-                   ) AS cos_sim
-            FROM e a JOIN e b ON a.vec_id < b.vec_id
-            WHERE round(
-                      list_dot_product(a.v, b.v) /
-                      (sqrt(list_dot_product(a.v, a.v)) *
-                       sqrt(list_dot_product(b.v, b.v))),
-                      4
-                  ) >= 0.4
-            ORDER BY id_a, id_b
-        """,
         # Recall-assertion oracles for the approximate ANN paths: the
         # Spark side computes exact-vs-approx agreement; the SQL side
         # asserts the calibrated full-recall constant (ann_*_recall) or
@@ -4349,87 +3246,6 @@ def oracle_sql() -> dict[str, str]:
             FROM nodes LEFT JOIN inflow USING (host), scal
             ORDER BY nodes.host
         """,
-        "host_stats": """
-            SELECT source,
-                   count(*) AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT) AS total_chars,
-                   count(DISTINCT lang) AS n_langs,
-                   round(1.0 - count(DISTINCT md5(text)) * 1.0 / count(*), 4)
-                       AS dup_ratio
-            FROM documents
-            GROUP BY source
-            ORDER BY source
-        """,
-        "jaccard_pairs_host": """
-            WITH grams AS (
-                SELECT doc_id, source,
-                       list(DISTINCT substring(text, i, 3)) AS gs
-                FROM (SELECT doc_id, source, text,
-                             unnest(generate_series(
-                                 1, greatest(length(text) - 2, 1))) AS i
-                      FROM documents)
-                GROUP BY doc_id, source
-            )
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   len(list_intersect(a.gs, b.gs)) AS n_inter,
-                   len(a.gs) + len(b.gs) - len(list_intersect(a.gs, b.gs))
-                       AS n_union
-            FROM grams a JOIN grams b
-              ON a.source = b.source AND a.doc_id < b.doc_id
-            WHERE 5 * len(list_intersect(a.gs, b.gs))
-                  >= 3 * (len(a.gs) + len(b.gs)
-                          - len(list_intersect(a.gs, b.gs)))
-            ORDER BY id_a, id_b
-        """,
-        "lang_pred": _lang_pred_oracle_sql(),
-        "dedup_canonical_docs": """
-            WITH RECURSIVE grams AS (
-                SELECT doc_id, source,
-                       list(DISTINCT substring(text, i, 3)) AS gs
-                FROM (SELECT doc_id, source, text,
-                             unnest(generate_series(
-                                 1, greatest(length(text) - 2, 1))) AS i
-                      FROM documents)
-                GROUP BY doc_id, source
-            ), pairs AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                FROM grams a JOIN grams b
-                  ON a.source = b.source AND a.doc_id < b.doc_id
-                WHERE 5 * len(list_intersect(a.gs, b.gs))
-                      >= 3 * (len(a.gs) + len(b.gs)
-                              - len(list_intersect(a.gs, b.gs)))
-            ), e AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION
-                SELECT id_b AS src, id_a AS dst FROM pairs
-            ), reach(id, r) AS (
-                SELECT src, src FROM e
-                UNION
-                SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id
-            ), losers AS (
-                SELECT id FROM reach GROUP BY id HAVING id != min(r)
-            )
-            SELECT doc_id, source, n_chars
-            FROM documents
-            WHERE doc_id NOT IN (SELECT id FROM losers)
-            ORDER BY doc_id
-        """,
-        "train_test_split": """
-            WITH b AS (
-                SELECT n_chars,
-                       ((strpos('0123456789abcdef',
-                                substring(md5(CAST(doc_id AS VARCHAR)), 1, 1))
-                         - 1) * 16
-                        + strpos('0123456789abcdef',
-                                 substring(md5(CAST(doc_id AS VARCHAR)), 2, 1))
-                        - 1) % 100 AS bucket
-                FROM documents
-            )
-            SELECT CASE WHEN bucket < 90 THEN 'train' ELSE 'test' END AS split,
-                   count(*) AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT) AS total_chars
-            FROM b GROUP BY split ORDER BY split
-        """,
         "pack_sequences": f"""
             WITH toks AS (
                 SELECT doc_id, doc_id % {_pack_n_shards()} AS shard,
@@ -4449,48 +3265,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT shard, bin, count(*) AS n_docs,
                    CAST(sum(n_tokens) AS BIGINT) AS bin_tokens
             FROM binned GROUP BY shard, bin ORDER BY shard, bin
-        """,
-        "doc_chunks": """
-            SELECT doc_id, chunk_id,
-                   chunk_id * 2000 AS chunk_start,
-                   least(2200, n_chars - chunk_id * 2000) AS chunk_len,
-                   md5(substring(text, chunk_id * 2000 + 1,
-                                 least(2200, n_chars - chunk_id * 2000)))
-                       AS chunk_md5
-            FROM (SELECT doc_id, text, n_chars,
-                         unnest(generate_series(
-                             0, CAST(greatest(1, ceil(n_chars / 2000.0))
-                                     AS BIGINT) - 1)) AS chunk_id
-                  FROM documents)
-            ORDER BY doc_id, chunk_id
-        """,
-        "dup_components_host": """
-            WITH RECURSIVE grams AS (
-                SELECT doc_id, source,
-                       list(DISTINCT substring(text, i, 3)) AS gs
-                FROM (SELECT doc_id, source, text,
-                             unnest(generate_series(
-                                 1, greatest(length(text) - 2, 1))) AS i
-                      FROM documents)
-                GROUP BY doc_id, source
-            ), pairs AS (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                FROM grams a JOIN grams b
-                  ON a.source = b.source AND a.doc_id < b.doc_id
-                WHERE 5 * len(list_intersect(a.gs, b.gs))
-                      >= 3 * (len(a.gs) + len(b.gs)
-                              - len(list_intersect(a.gs, b.gs)))
-            ), e AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION
-                SELECT id_b AS src, id_a AS dst FROM pairs
-            ), reach(id, r) AS (
-                SELECT src, src FROM e
-                UNION
-                SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id
-            )
-            SELECT id AS doc_id, min(r) AS component
-            FROM reach GROUP BY id ORDER BY doc_id
         """,
         "dedup_soft_weights": """
             WITH RECURSIVE grams AS (
@@ -4532,41 +3306,6 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN comp c ON c.id = d.doc_id
             LEFT JOIN sizes s ON s.comp = c.comp
             ORDER BY d.doc_id
-        """,
-        "filter_funnel": """
-            WITH flagged AS (
-                SELECT doc_id, text, n_chars,
-                       row_number() OVER (PARTITION BY md5(text)
-                                          ORDER BY doc_id) > 1 AS is_dup,
-                       n_chars < 200 AS too_short,
-                       10 * length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-                           < 6 * length(text) AS low_alpha
-                FROM documents
-            ), words AS (
-                SELECT doc_id, is_dup, too_short, low_alpha,
-                       len(string_split(text, ' ')) AS n_words,
-                       unnest(string_split(text, ' ')) AS w
-                FROM flagged
-            ), wc AS (
-                SELECT doc_id, is_dup, too_short, low_alpha, n_words, w,
-                       count(*) AS c
-                FROM words
-                GROUP BY doc_id, is_dup, too_short, low_alpha, n_words, w
-            ), per_doc AS (
-                SELECT doc_id, is_dup, too_short, low_alpha, n_words,
-                       max(c) AS top_wc
-                FROM wc GROUP BY doc_id, is_dup, too_short, low_alpha, n_words
-            ), staged AS (
-                SELECT doc_id,
-                       CASE WHEN is_dup THEN '1_exact_dup'
-                            WHEN too_short THEN '2_too_short'
-                            WHEN low_alpha THEN '3_low_alpha'
-                            WHEN 5 * top_wc > n_words THEN '4_repetitive'
-                            ELSE 'kept' END AS stage
-                FROM per_doc
-            )
-            SELECT stage, count(*) AS n_docs
-            FROM staged GROUP BY stage ORDER BY stage
         """,
         "dup_spans": """
             WITH ws AS (
@@ -4665,90 +3404,6 @@ def oracle_sql() -> dict[str, str]:
                 FROM documents
             ) WHERE rk <= 40
             ORDER BY lang, rk
-        """,
-        "embedding_quantize": """
-            WITH s AS (
-                SELECT vec_id, embedding,
-                       list_aggregate(list_transform(embedding,
-                           x -> abs(CAST(x AS DOUBLE))), 'max') AS maxabs
-                FROM embeddings
-            ), sc AS (
-                SELECT vec_id, embedding,
-                       CASE WHEN maxabs > 0 THEN 127.0 / maxabs
-                            ELSE 0.0 END AS scale
-                FROM s
-            ), qq AS (
-                SELECT vec_id, scale,
-                       list_transform(embedding,
-                           x -> CAST(round(CAST(x AS DOUBLE) * scale) AS INT)) AS q
-                FROM sc
-            )
-            SELECT vec_id, round(scale, 6) AS scale_r,
-                   md5(array_to_string(q, ',')) AS q_md5,
-                   CAST(len(list_filter(q, v -> abs(v) = 127)) AS INT)
-                       AS n_saturated,
-                   CAST(len(list_filter(q, v -> v = 0)) AS INT) AS n_zero
-            FROM qq ORDER BY vec_id
-        """,
-        "repetition_stats": """
-            WITH ws AS (
-                SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-            ), words AS (
-                SELECT doc_id, unnest(ws) AS w FROM ws
-            ), topw AS (
-                SELECT doc_id, max(c) AS top_word_count FROM (
-                    SELECT doc_id, w, count(*) AS c FROM words GROUP BY doc_id, w
-                ) GROUP BY doc_id
-            ), bigrams AS (
-                SELECT doc_id, ws[i] || ' ' || ws[i + 1] AS g
-                FROM ws, LATERAL unnest(generate_series(1, len(ws) - 1)) AS t(i)
-                WHERE len(ws) >= 2
-            ), topb AS (
-                SELECT doc_id, max(c) AS top_bigram_count FROM (
-                    SELECT doc_id, g, count(*) AS c FROM bigrams GROUP BY doc_id, g
-                ) GROUP BY doc_id
-            )
-            SELECT ws.doc_id,
-                   CAST(len(ws) AS INT) AS n_words,
-                   CAST(len(list_distinct(ws)) AS INT) AS n_distinct_words,
-                   coalesce(topw.top_word_count, 0) AS top_word_count,
-                   coalesce(topb.top_bigram_count, 0) AS top_bigram_count
-            FROM ws
-            LEFT JOIN topw ON ws.doc_id = topw.doc_id
-            LEFT JOIN topb ON ws.doc_id = topb.doc_id
-            ORDER BY ws.doc_id
-        """,
-        "pii_scrub": r"""
-            WITH inj AS (
-                SELECT doc_id,
-                       CASE
-                         WHEN doc_id % 4 = 0 THEN text || ' contact user'
-                              || CAST(doc_id AS VARCHAR) || '@example.com now'
-                         WHEN doc_id % 4 = 1 THEN text || ' server at 10.0.'
-                              || CAST(doc_id % 256 AS VARCHAR) || '.'
-                              || CAST(doc_id % 100 AS VARCHAR) || ' port'
-                         WHEN doc_id % 4 = 2 THEN text || ' call +1-555-'
-                              || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                              || ' today'
-                         ELSE text
-                       END AS t
-                FROM documents
-            )
-            SELECT doc_id,
-                   CAST(len(regexp_extract_all(t,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-                       AS INT) AS n_emails,
-                   CAST(len(regexp_extract_all(t,
-                       '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))
-                       AS INT) AS n_ips,
-                   CAST(len(regexp_extract_all(t, '\+1-555-\d{4}'))
-                       AS INT) AS n_phones,
-                   md5(regexp_replace(regexp_replace(regexp_replace(t,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                       '[EMAIL]', 'g'),
-                       '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
-                       '\+1-555-\d{4}', '[PHONE]', 'g')) AS scrubbed_md5
-            FROM inj ORDER BY doc_id
         """,
         "contamination_check": """
             WITH ws AS (
@@ -4906,9 +3561,6 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{_WITNESS_DIR}/lang_simhash.parquet')
             ORDER BY doc_id
         """,
-        # simhash witness = BRUTE-FORCE all-pairs popcount over
-        # single-process signatures (rep-compression contract) —
-        # independent of the banding machinery entirely
         "simhash_dup_pairs": f"""
             SELECT id_a, id_b, hamming
             FROM read_parquet('{_WITNESS_DIR}/simhash_dup_pairs.parquet')
@@ -4933,11 +3585,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT shard, n_records, n_bytes, wet_md5
             FROM read_parquet('{_WITNESS_DIR}/wet_export.parquet')
             ORDER BY shard
-        """,
-        "host_link_graph": f"""
-            SELECT src_host, dst_host, n_links
-            FROM read_parquet('{_WITNESS_DIR}/host_link_graph.parquet')
-            ORDER BY src_host, dst_host
         """,
         "anchor_texts": f"""
             SELECT dst_url, n_refs, n_src_hosts, top_anchor, top_anchor_n
@@ -4982,64 +3629,7 @@ def oracle_sql() -> dict[str, str]:
             FROM matched WHERE rk = 1
             ORDER BY url
         """,
-        "bm25_search": _bm25_oracle_sql(),
         "hybrid_search": _hybrid_oracle_sql(),
-        "lm_score": """
-            WITH ws AS (
-                SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-            ), grams AS (
-                SELECT doc_id, ws[i] || ' ' || ws[i + 1] AS g
-                FROM ws, LATERAL unnest(generate_series(1, len(ws) - 1)) AS t(i)
-                WHERE len(ws) >= 2
-            ), counts AS (
-                SELECT g, count(*) AS c FROM grams
-                WHERE doc_id % 10 < 8 GROUP BY g
-            ), per_doc AS (
-                SELECT grams.doc_id,
-                       CAST(sum(length(bin(coalesce(counts.c, 0) + 1)) - 1)
-                            AS BIGINT) AS llq_sum,
-                       count(*) AS n_grams
-                FROM grams LEFT JOIN counts ON grams.g = counts.g
-                GROUP BY grams.doc_id
-            )
-            SELECT d.doc_id,
-                   coalesce(per_doc.llq_sum, 0) AS llq_sum,
-                   coalesce(per_doc.n_grams, 0) AS n_grams,
-                   CASE WHEN per_doc.n_grams > 0
-                        THEN per_doc.llq_sum / per_doc.n_grams
-                        ELSE NULL END AS avg_llq
-            FROM documents d LEFT JOIN per_doc ON d.doc_id = per_doc.doc_id
-            ORDER BY d.doc_id
-        """,
-        "compression_signal": f"""
-            SELECT doc_id, n_bytes, n_compressed,
-                   CASE WHEN n_bytes > 0
-                        THEN n_compressed / n_bytes
-                        ELSE NULL END AS ratio
-            FROM read_parquet('{_WITNESS_DIR}/compression_signal.parquet')
-            ORDER BY doc_id
-        """,
-        "incremental_dedup": """
-            WITH new_drop AS (
-                SELECT doc_id, md5(text) AS h FROM documents
-                WHERE doc_id % 5 = 0
-            ), idx AS (
-                SELECT DISTINCT md5(text) AS h FROM documents
-                WHERE doc_id % 5 <> 0
-            ), survivors AS (
-                SELECT n.doc_id, n.h,
-                       row_number() OVER (
-                           PARTITION BY n.h ORDER BY n.doc_id
-                       ) AS rk
-                FROM new_drop n
-                -- NOT EXISTS, not NOT IN: matches the Spark anti-join's
-                -- NULL-key semantics (an unmatched NULL hash survives;
-                -- NOT IN would nuke the whole result on any NULL)
-                WHERE NOT EXISTS (SELECT 1 FROM idx WHERE idx.h = n.h)
-            )
-            SELECT doc_id, h FROM survivors WHERE rk = 1
-            ORDER BY doc_id
-        """,
         "bpe_pair_counts": """
             WITH words AS (
                 SELECT w, count(*) AS wc FROM (
@@ -5061,80 +3651,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT rank, lhs, rhs
             FROM read_parquet('{_WITNESS_DIR}/bpe_merges.parquet')
             ORDER BY rank
-        """,
-        "bpe_encode_stats": f"""
-            SELECT doc_id, n_words, n_tokens
-            FROM read_parquet('{_WITNESS_DIR}/bpe_encode_stats.parquet')
-            ORDER BY doc_id
-        """,
-        "term_postings": """
-            WITH toks AS (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS term
-                FROM documents
-            ), per_doc AS (
-                SELECT term, doc_id, count(*) AS tf
-                FROM toks WHERE length(term) > 0
-                GROUP BY term, doc_id
-            ), stats AS (
-                SELECT term,
-                       CAST(count(*) AS BIGINT) AS df,
-                       CAST(sum(tf) AS BIGINT) AS tf_total
-                FROM per_doc GROUP BY term
-            ), ranked AS (
-                SELECT term, doc_id,
-                       row_number() OVER (
-                           PARTITION BY term ORDER BY doc_id
-                       ) AS rk
-                FROM per_doc
-            ), heads AS (
-                SELECT term,
-                       string_agg(CAST(doc_id AS VARCHAR), ','
-                                  ORDER BY doc_id) AS postings_head
-                FROM ranked WHERE rk <= 32 GROUP BY term
-            )
-            SELECT s.term, s.df, s.tf_total, h.postings_head
-            FROM stats s JOIN heads h USING (term)
-            WHERE s.df >= 25
-            ORDER BY s.term
-        """,
-        "blocklist_tags": """
-            WITH tagged AS (
-                SELECT doc_id, source,
-                       CAST(len(list_filter(
-                           list_filter(string_split(text, ' '),
-                                       w -> length(w) > 0),
-                           w -> w IN ('slow', 'spam', 'junk')
-                       )) AS INT) AS hits,
-                       CAST(len(list_filter(string_split(text, ' '),
-                                            w -> length(w) > 0))
-                            AS INT) AS n_words
-                FROM documents
-            )
-            SELECT doc_id, source, hits, n_words,
-                   CAST(source IN ('src7', 'src13')
-                        OR 20 * hits >= n_words AS INT) AS blocked
-            FROM tagged ORDER BY doc_id
-        """,
-        "mixing_weights": """
-            WITH per_lang AS (
-                SELECT lang,
-                       CAST(count(*) AS BIGINT) AS n_docs,
-                       CAST(sum(len(list_filter(string_split(text, ' '),
-                                                w -> length(w) > 0)))
-                            AS BIGINT) AS n_tokens
-                FROM documents GROUP BY lang
-            ), mx AS (
-                SELECT max(sqrt(CAST(n_tokens AS DOUBLE))) AS w_max
-                FROM per_lang
-            )
-            SELECT lang, n_docs, n_tokens,
-                   sqrt(CAST(n_tokens AS DOUBLE)) / w_max AS rel_weight
-            FROM per_lang, mx ORDER BY lang
-        """,
-        "semdedup": f"""
-            SELECT vec_id, cell, cent_sim, keep
-            FROM read_parquet('{_WITNESS_DIR}/semdedup.parquet')
-            ORDER BY vec_id
         """,
         "doc_embed_semdedup": f"""
             SELECT doc_id, cell, cent_sim, keep
@@ -5195,31 +3711,6 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN weighted w ON d.doc_id = w.doc_id
             CROSS JOIN tot
             ORDER BY d.doc_id
-        """,
-        "snapshot_diff": """
-            WITH d AS (
-                SELECT 'https://' || source || '.example.com/docs/'
-                       || doc_id AS url,
-                       doc_id, text
-                FROM documents
-            ), snap_a AS (
-                SELECT url, md5(text) AS h_a FROM d
-                WHERE doc_id % 10 <> 9
-            ), snap_b AS (
-                SELECT url,
-                       md5(CASE WHEN doc_id % 7 = 3
-                                THEN text || ' [recrawled]'
-                                ELSE text END) AS h_b
-                FROM d WHERE doc_id % 10 <> 0
-            )
-            SELECT coalesce(snap_a.url, snap_b.url) AS url,
-                   CASE WHEN snap_a.url IS NULL THEN 'new'
-                        WHEN snap_b.url IS NULL THEN 'gone'
-                        WHEN h_a <> h_b THEN 'changed'
-                        ELSE 'same' END AS status
-            FROM snap_a FULL OUTER JOIN snap_b
-                 ON snap_a.url = snap_b.url
-            ORDER BY url
         """,
         "cdx_index": """
             WITH d AS (
@@ -6016,30 +4507,4 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
             ORDER BY doc_id
         """,
-        "vocab_stats": """
-            WITH terms AS (
-                SELECT lang,
-                       unnest(list_distinct(string_split(text, ' '))) AS term
-                FROM documents
-            ), dfreq AS (
-                SELECT lang, term, count(*) AS df FROM terms GROUP BY lang, term
-            ), ranked AS (
-                SELECT lang, term, df,
-                       row_number() OVER (
-                           PARTITION BY lang ORDER BY df DESC, term
-                       ) AS rk
-                FROM dfreq
-            )
-            SELECT lang, term, df, CAST(rk AS INT) AS rk
-            FROM ranked WHERE rk <= 10
-            ORDER BY lang, rk
-        """,
-        # host_pagerank: iterative (power method) -> not expressible as
-        # a fixed DuckDB query; pinned against an independent numpy
-        # implementation instead (tests/test_links_pagerank.py).
-        # ann_lsh / ann_ivf / embedding_near_dup_lsh: float scores whose
-        # accumulation order differs across engines (BLAS vs sequential)
-        # -> a value-hash witness would be fragile at rounding
-        # boundaries; they keep the rows-only driver check + recall
-        # tests against their DuckDB-oracled exact twins.
     }

@@ -1,4 +1,4 @@
-"""Distributed BPE tokenizer training + corpus encoding (X39).
+"""Distributed BPE tokenizer training (X39).
 
 The reference has no tokenizer stage (its corpus is page images —
 /root/reference/src/stage2_ocr.py:406-442 ingests rendered PDFs); this
@@ -18,32 +18,24 @@ web-scale corpora, expressed Spark-first:
      regardless of corpus size), so the driver-side merge loop is the
      honest architecture, not a shortcut — pair statistics of a
      weighted vocab are EXACTLY the corpus's pair statistics.
-  3. **Encoding** fans back out as a narrow broadcast-merges Arrow
-     kernel (mapInPandas): merges are a few KB, the corpus never
-     moves, and a per-worker word→tokens memo collapses Zipf-repeated
-     words to dict hits.
 
 Determinism (engine- and partitioning-independent, required for the
 witness oracle): pair ties break on the lexicographically smallest
-(left, right); vocabulary truncation orders by (count DESC, word ASC);
-encoding merges the lowest-rank pair left-to-right — no set iteration
-order anywhere.
+(left, right); vocabulary truncation orders by (count DESC, word ASC)
+— no set iteration order anywhere.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Mapping
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
     "learn_bpe",
-    "encode_word",
     "word_counts_df",
     "top_vocab",
     "train_bpe",
-    "bpe_encode_kernel",
-    "ENCODE_DDL",
 ]
 
 
@@ -108,27 +100,6 @@ def learn_bpe(
     return merges
 
 
-def encode_word(
-    word: str, ranks: Mapping[tuple[str, str], int]
-) -> list[str]:
-    """Encode one word with learned merges (lowest rank first — the
-    standard BPE inference loop).  Left-to-right within a rank, so the
-    result is deterministic for overlapping occurrences."""
-    syms = list(word)
-    while len(syms) >= 2:
-        best_rank = None
-        best_i = -1
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank = r
-                best_i = i
-        if best_rank is None:
-            break
-        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-    return syms
-
-
 # --------------------------------------------------------------------------
 # Spark operators
 # --------------------------------------------------------------------------
@@ -166,45 +137,3 @@ def train_bpe(
     vocab = dict(top_vocab(word_counts_df(docs, text_col), vocab_cap))
     return learn_bpe(vocab, n_merges)
 
-
-ENCODE_DDL = "doc_id long, n_words long, n_tokens long"
-
-
-def bpe_encode_kernel(merges: list[tuple[str, str]], memo_cap: int = 200_000):
-    """Iterator-of-batches encode kernel: (doc_id, text) ->
-    (doc_id, n_words, n_tokens).
-
-    The merges table (a few KB) ships in the task closure; a per-worker
-    word→token-count memo turns the Zipf head of the corpus into dict
-    hits, bounded by entry count AND key length so hostile inputs
-    cannot pin executor memory."""
-    ranks = {tuple(p): i for i, p in enumerate(merges)}
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        memo: dict[str, int] = {}
-        for pdf in batches:
-            ids, n_words, n_tokens = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = [w for w in (text or "").split(" ") if w]
-                total = 0
-                for w in words:
-                    nt = memo.get(w)
-                    if nt is None:
-                        nt = len(encode_word(w, ranks))
-                        if len(memo) < memo_cap and len(w) <= 64:
-                            memo[w] = nt
-                    total += nt
-                ids.append(doc_id)
-                n_words.append(len(words))
-                n_tokens.append(total)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_words": pd.Series(n_words, dtype="int64"),
-                    "n_tokens": pd.Series(n_tokens, dtype="int64"),
-                }
-            )
-
-    return kernel

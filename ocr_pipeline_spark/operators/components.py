@@ -39,7 +39,7 @@ def connected_components(
 
     Only ids that appear in at least one edge are returned (isolated
     docs are their own components by definition — callers union them in
-    when needed, see dedup_canonical)."""
+    when needed)."""
     edges = pairs.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     )
@@ -86,17 +86,3 @@ def connected_components(
             break
     return labels
 
-
-def dedup_canonical(
-    df: DataFrame, id_col: str, pairs: DataFrame
-) -> DataFrame:
-    """Keep one canonical row per near-dup component (the min id) plus
-    every row not implicated in any pair.  The join is on ids only —
-    document payloads never enter the component computation."""
-    comps = connected_components(pairs)
-    losers = comps.filter(F.col("id") != F.col("comp")).select(
-        F.col("id").alias("_loser")
-    )
-    return df.join(
-        losers, df[id_col].cast("long") == F.col("_loser"), "left_anti"
-    )

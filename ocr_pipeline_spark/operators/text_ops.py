@@ -29,30 +29,6 @@ def token_count(col: Column) -> Column:
     ).cast("long")
 
 
-def alpha_ratio(col: Column) -> Column:
-    """Share of ASCII-alphabetic characters."""
-    return F.when(F.length(col) == 0, F.lit(0.0)).otherwise(
-        F.length(F.regexp_replace(col, "[^a-zA-Z]", "")) / F.length(col)
-    )
-
-
-def punct_ratio(col: Column) -> Column:
-    """Share of sentence punctuation characters."""
-    return F.when(F.length(col) == 0, F.lit(0.0)).otherwise(
-        F.length(F.regexp_replace(col, r"[^.!?,;:]", "")) / F.length(col)
-    )
-
-
-def quality_flag(text: Column, min_chars: int = 200, min_tokens: int = 30) -> Column:
-    """Cheap quality gate: long enough, word-like, not punctuation soup."""
-    return (
-        (F.length(text) >= min_chars)
-        & (token_count(text) >= min_tokens)
-        & (alpha_ratio(text) > 0.6)
-        & (punct_ratio(text) < 0.1)
-    )
-
-
 def exact_dup_key(col: Column) -> Column:
     """Exact-dedup hash key (md5 hex — same bytes in Spark and DuckDB)."""
     return F.md5(col.cast("binary"))
@@ -133,40 +109,6 @@ def normalize_kernel(text_col: str = "text", out_col: str = "norm"):
                 for t in pdf[text_col]
             ]
             yield pdf
-
-    return kernel
-
-
-# =========================================================================
-# Compression-ratio quality signal (Gopher-style)
-# =========================================================================
-def compression_signal(text: str) -> tuple[int, int]:
-    """(n_bytes, n_compressed) for a document's UTF-8 bytes under zlib
-    level 6 — the Gopher-style templated/spam-text proxy (highly
-    repetitive text compresses far below prose's ~2.5-3x).  Pure and
-    deterministic for a given zlib, so the golden witness (same
-    function, single-process loop, no Spark) is byte-stable."""
-    import zlib
-
-    raw = (text or "").encode("utf-8")
-    return len(raw), len(zlib.compress(raw, 6))
-
-
-def compression_signal_kernel(text_col: str = "text"):
-    """mapInPandas kernel factory: (doc_id, text) -> (doc_id, n_bytes,
-    n_compressed).  Narrow — no shuffle at any scale; zlib runs
-    C-side per Arrow batch, the text column never leaves the worker."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sizes = [compression_signal(t) for t in pdf[text_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": [s[0] for s in sizes],
-                    "n_compressed": [s[1] for s in sizes],
-                }
-            )
 
     return kernel
 
@@ -400,7 +342,7 @@ def intra_bucket_pairs(
       cluster of >max_bucket mirrors/templated copies shares EVERY band
       bucket, so dropping would emit zero pairs for exactly the most
       duplicated content; the star keeps the connected component intact
-      for downstream dedup_canonical without quadratic blowup.
+      for downstream connected_components without quadratic blowup.
 
     Pair count per bucket is hard-bounded at max(max_bucket*(max_bucket
     -1)/2, n-1).

@@ -42,36 +42,6 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    n_buckets: int = 16,
-    sort: bool = True,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by its join key
-    — the co-located-join layout: two tables bucketed identically on
-    the key join WITHOUT a shuffle (no Exchange in the plan; with
-    sort=True, no Sort either), because rows with equal keys are
-    guaranteed to sit in same-numbered buckets.  At 100 TB this removes
-    the single largest cost of a repeated fact-to-fact join: bucket
-    once at write time, join shuffle-free forever after.  Plan-pinned
-    in tests/test_catalog_iceberg.py."""
-    writer = (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-    )
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table_name)
-
-
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    """Read a saveAsTable-persisted (e.g. bucketed) table — bucket
-    metadata only survives through the catalog, not a raw path read."""
-    return spark.table(table_name)
-
-
 class ParquetCatalog:
     """Iceberg-shaped warehouse on partitioned parquet + JSON manifests.
 

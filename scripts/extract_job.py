@@ -68,10 +68,12 @@ def main(argv: list[str] | None = None) -> int:
 
     from ocr_pipeline_spark.plans.job import run_pipeline
 
+    # an in-process caller's session keeps its own log level
+    owns_session = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName(
         f"extract-{args.run_id}"
     ).getOrCreate()
-    if not args.verbose:
+    if owns_session and not args.verbose:
         spark.sparkContext.setLogLevel("WARN")
 
     if args.synthetic is not None:

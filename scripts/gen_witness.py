@@ -204,22 +204,6 @@ def witness_lang_simhash() -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def witness_compression_signal() -> pd.DataFrame:
-    """Twin of _q_compression_signal: single-process zlib-6 sizes per
-    document; columns (doc_id, n_bytes, n_compressed) — the ratio is
-    derived in SQL from these witnessed integers."""
-    from ocr_pipeline_spark.operators.text_ops import compression_signal
-
-    docs = _docs_texts()
-    rows = []
-    for d, t in zip(docs.doc_id, docs.text):
-        n_bytes, n_compressed = compression_signal(t or "")
-        rows.append(
-            {"doc_id": int(d), "n_bytes": n_bytes, "n_compressed": n_compressed}
-        )
-    return pd.DataFrame(rows)
-
-
 def witness_simhash_dup_pairs() -> pd.DataFrame:
     """Twin of _q_simhash_dup_pairs via BRUTE FORCE — an all-pairs
     popcount over single-process signatures, compressed to the
@@ -432,32 +416,8 @@ def witness_bpe_merges() -> pd.DataFrame:
     ).astype({"rank": "int32"})
 
 
-def witness_bpe_encode_stats() -> pd.DataFrame:
-    """X39 witness: per-document (n_words, n_tokens) under the learned
-    merges — single-process encode loop, integer-exact."""
-    from ocr_pipeline_spark.operators.bpe import encode_word
-
-    ranks = {p: i for i, p in enumerate(_bpe_train_single_process())}
-    memo: dict[str, int] = {}
-    rows = []
-    docs = _docs_texts()
-    for d, t in zip(docs.doc_id, docs.text):
-        words = [w for w in (t or "").split(" ") if w]
-        total = 0
-        for w in words:
-            nt = memo.get(w)
-            if nt is None:
-                nt = len(encode_word(w, ranks))
-                memo[w] = nt
-            total += nt
-        rows.append(
-            {"doc_id": int(d), "n_words": len(words), "n_tokens": total}
-        )
-    return pd.DataFrame(rows, columns=["doc_id", "n_words", "n_tokens"])
-
-
 def _semdedup_twin(ids: np.ndarray, V: np.ndarray, tau: float) -> pd.DataFrame:
-    """Single-process SemDeDup twin shared by BOTH semdedup witnesses:
+    """Single-process SemDeDup twin of operators/semdedup.py:
     md5-ordered bounded sample -> driver Lloyd (with the Spark path's
     exact python-float round-trip) -> renormalize -> argmax assign ->
     per-cell rank-and-drop, all with the SAME pure-numpy kernels the
@@ -500,15 +460,6 @@ def _semdedup_twin(ids: np.ndarray, V: np.ndarray, tau: float) -> pd.DataFrame:
     )
 
 
-def witness_semdedup() -> pd.DataFrame:
-    """X43 witness: SemDeDup keep/drop table over the fixture
-    embeddings (see _semdedup_twin for the bit-exactness argument)."""
-    emb = pd.read_parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    ids = emb.vec_id.to_numpy().astype("int64")
-    V = np.array([list(v) for v in emb.embedding], dtype=np.float64)
-    return _semdedup_twin(ids, V, tau=0.35)
-
-
 def witness_doc_embeddings() -> pd.DataFrame:
     """X53 witness: hashed char-ngram embeddings per document — the
     single-process twin calls the SAME pure embed_text/embedding_md5
@@ -535,8 +486,8 @@ def witness_doc_embeddings() -> pd.DataFrame:
 def witness_doc_embed_semdedup() -> pd.DataFrame:
     """X53×X43 witness: the full corpus → embedding → SemDeDup chain
     replayed single-process — embed_text per document (the pure
-    function the Arrow kernel wraps), then the identical
-    sample→Lloyd→assign→per-cell-drop flow witness_semdedup uses, so
+    function the Arrow kernel wraps), then the
+    sample→Lloyd→assign→per-cell-drop flow of _semdedup_twin, so
     the chained Spark query is proven end-to-end bit-exact, not just
     per stage."""
     from ocr_pipeline_spark.operators.embed import embed_text
@@ -708,19 +659,16 @@ WITNESSES = {
     "extract_pdf_documents": witness_extract_pdf_documents,
     "pdf_page_explode": witness_pdf_page_explode,
     "lang_simhash": witness_lang_simhash,
-    "compression_signal": witness_compression_signal,
     "simhash_dup_pairs": witness_simhash_dup_pairs,
     "minhash_dup_pairs": witness_minhash_dup_pairs,
     "near_dup_verified": witness_near_dup_verified,
     "host_link_graph": witness_host_link_graph,
     "anchor_texts": witness_anchor_texts,
     "pdf_layout_markdown": witness_pdf_layout_markdown,
-    "semdedup": witness_semdedup,
     "doc_embeddings": witness_doc_embeddings,
     "doc_embed_semdedup": witness_doc_embed_semdedup,
     "warc_records": witness_warc_records,
     "bpe_merges": witness_bpe_merges,
-    "bpe_encode_stats": witness_bpe_encode_stats,
     "page_metadata": witness_page_metadata,
     "fuzzy_decontamination": witness_fuzzy_decontamination,
     "wet_export": witness_wet_export,

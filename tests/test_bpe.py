@@ -1,20 +1,40 @@
 """X39 BPE tokenizer training — pure-kernel unit + property tests.
 
-The distributed path is oracled end-to-end by the golden witnesses
-(bpe_merges / bpe_encode_stats in tests/test_entry_contract.py); these
-tests pin the kernel's observable semantics directly.
+The distributed path is oracled end-to-end by the bpe_merges golden
+witness (tests/test_entry_contract.py); these tests pin the kernel's
+observable semantics directly.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ocr_pipeline_spark.operators.bpe import encode_word, learn_bpe
+from ocr_pipeline_spark.operators.bpe import learn_bpe
 
 # Sennrich et al.'s classic example vocabulary (no EOW marker here:
 # words encode independently, see operators/bpe.py docstring)
 VOCAB = {"low": 5, "lower": 2, "newest": 6, "widest": 3}
+
+
+def encode_word(word: str, ranks: Mapping[tuple[str, str], int]) -> list[str]:
+    """Encode one word with learned merges, lowest rank first (the
+    standard BPE inference loop), left-to-right within a rank."""
+    syms = list(word)
+    while len(syms) >= 2:
+        best_rank = None
+        best_i = -1
+        for i in range(len(syms) - 1):
+            r = ranks.get((syms[i], syms[i + 1]))
+            if r is not None and (best_rank is None or r < best_rank):
+                best_rank = r
+                best_i = i
+        if best_rank is None:
+            break
+        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
+    return syms
 
 
 def test_learn_bpe_classic_first_merges():
@@ -33,20 +53,6 @@ def test_learn_bpe_min_count_stop():
     assert learn_bpe({"abc": 1, "xyz": 1}, n_merges=10) == []
     # weighted singleton crosses the threshold
     assert learn_bpe({"abc": 2}, n_merges=1) == [("a", "b")]
-
-
-def test_encode_word_applies_ranks_in_order():
-    merges = learn_bpe(VOCAB, n_merges=8)
-    ranks = {p: i for i, p in enumerate(merges)}
-    assert encode_word("lowest", ranks) == ["low", "est"]
-    assert encode_word("low", ranks) == ["low"]
-    # unseen characters stay single symbols
-    assert encode_word("zq", ranks) == ["z", "q"]
-
-
-def test_encode_word_no_ranks_is_chars():
-    assert encode_word("abc", {}) == ["a", "b", "c"]
-    assert encode_word("", {}) == []
 
 
 @given(

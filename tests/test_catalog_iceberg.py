@@ -167,47 +167,3 @@ def test_pipeline_still_uses_parquet_fallback(spark, tmp_path):
     assert summary["n_docs"] == 60
     assert sorted(summary["processed_buckets"]) == [0, 1, 2, 3]
 
-
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """write_bucketed lays out both join sides bucketed+sorted on the
-    key, so the join plan has NO Exchange and NO Sort — the co-located
-    join that makes repeated fact-to-fact joins shuffle-free at scale.
-    The unbucketed twin of the same join must show an Exchange,
-    proving the absence is the layout's doing."""
-    from pyspark.sql import functions as F
-
-    from ocr_pipeline_spark.sources.catalog import read_table, write_bucketed
-
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    lineitem = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(orders, "b_orders", "o_orderkey", 8)
-        write_bucketed(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "b_lineitem", "o_orderkey", 8,
-        )
-        joined = read_table(spark, "b_orders").join(
-            read_table(spark, "b_lineitem"), "o_orderkey"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
-        assert "SortMergeJoin" in plan
-
-        # correctness: identical to the plain join
-        plain = orders.join(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "o_orderkey",
-        )
-        plain_plan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plain_plan  # the control: layout removed it
-        assert joined.count() == plain.count()
-        a = joined.agg(F.sum("l_extendedprice")).first()[0]
-        b = plain.agg(F.sum("l_extendedprice")).first()[0]
-        assert abs(a - b) < 1e-6
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")

@@ -127,66 +127,28 @@ def test_rows_only_queries_run(spark):
         assert df.count() >= 0, name
 
 
-# --- recall/agreement checks for the unoracled ANN queries -------------------
-# These turn rows-only queries into independently verified ones: the
-# approximate paths must agree with their exact, DuckDB-oracled twins.
-
-def test_ann_lsh_recall_vs_exact_knn(spark):
-    qs = entry_mod.queries()
-    exact = [r.vec_id for r in qs["embedding_knn"](spark, SF_DIR).collect()]
-    approx = [r.vec_id for r in qs["ann_lsh"](spark, SF_DIR).collect()]
-    recall = len(set(exact) & set(approx)) / len(exact)
-    assert recall >= 0.5, f"ann_lsh recall@10={recall}"
-
-
-def test_ann_ivf_recall_vs_exact_knn(spark):
-    qs = entry_mod.queries()
-    exact = [r.vec_id for r in qs["embedding_knn"](spark, SF_DIR).collect()]
-    approx = [r.vec_id for r in qs["ann_ivf"](spark, SF_DIR).collect()]
-    recall = len(set(exact) & set(approx)) / len(exact)
-    assert recall >= 0.5, f"ann_ivf recall@10={recall}"
-
-
-def test_near_dup_lsh_pair_recall_vs_exact(spark):
-    qs = entry_mod.queries()
-    exact = {(r.id_a, r.id_b) for r in
-             qs["embedding_near_dup"](spark, SF_DIR).collect()}
-    approx = {(r.id_a, r.id_b) for r in
-              qs["embedding_near_dup_lsh"](spark, SF_DIR).collect()}
-    assert exact, "exact near-dup set unexpectedly empty"
-    recall = len(exact & approx) / len(exact)
-    # threshold 0.4 on near-orthogonal fixtures is the hardest LSH
-    # regime (see ann.py docstring); the bar pins that the scale path
-    # still finds most truly-similar pairs (measured ~0.85)
-    assert recall >= 0.7, f"pair recall={recall} ({len(approx)} approx pairs)"
-    # precision stays high: the in-bucket GEMM verifies exactly, so
-    # approx pairs differ from exact only by 4-dp rounding at the
-    # threshold boundary
-    rounding_false_pos = approx - exact
-    assert len(rounding_false_pos) <= max(3, len(exact) // 10), rounding_false_pos
-
-
 def test_near_dup_verified_consistent_with_exact_oracle(spark):
-    """near_dup_verified (MinHash-LSH + n-gram verify) is rows-only; pin
-    it two independent ways: (a) every reported jaccard equals an
-    in-process recomputation on the raw texts, (b) any same-host pair at
-    the exact query's threshold appears in the oracled exact result."""
-    from ocr_pipeline_spark.operators.text_ops import ngram_jaccard
+    """Pin near_dup_verified (MinHash-LSH + n-gram verify) two
+    independent ways: (a) every reported jaccard equals an in-process
+    recomputation on the raw texts, (b) any same-host pair at the exact
+    blocked-Jaccard threshold (3/5) appears in the exact pair set."""
+    from ocr_pipeline_spark.operators.text_ops import (
+        blocked_jaccard_pairs,
+        ngram_jaccard,
+    )
 
     qs = entry_mod.queries()
-    texts = {r.doc_id: r.text for r in
-             spark.read.parquet(f"{SF_DIR}/documents.parquet")
-             .select("doc_id", "text").collect()}
-    hosts = {r.doc_id: r.source for r in
-             spark.read.parquet(f"{SF_DIR}/documents.parquet")
-             .select("doc_id", "source").collect()}
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    texts = {r.doc_id: r.text for r in d.select("doc_id", "text").collect()}
+    hosts = {r.doc_id: r.source for r in d.select("doc_id", "source").collect()}
     nd = [(r.id_a, r.id_b, r.jaccard) for r in
           qs["near_dup_verified"](spark, SF_DIR).collect()]
     assert nd, "no verified near-dups on the fixture corpus"
     for a, b, j in nd:
         assert j == round(ngram_jaccard(texts[a], texts[b]), 4), (a, b)
-    exact = {(r.id_a, r.id_b) for r in
-             qs["jaccard_pairs_host"](spark, SF_DIR).collect()}
+    exact = {(r.id_a, r.id_b) for r in blocked_jaccard_pairs(
+        d, "doc_id", "text", "source", threshold_num=3, threshold_den=5
+    ).collect()}
     for a, b, j in nd:
         if j >= 0.6 and hosts[a] == hosts[b]:
             assert (a, b) in exact, (a, b, j)
@@ -195,7 +157,7 @@ def test_near_dup_verified_consistent_with_exact_oracle(spark):
 def test_approx_percentile_within_tolerance_of_exact(spark):
     """approx_percentile (the t-digest-style sketch — the scale path
     for distribution stats) must land within a small rank error of the
-    oracled exact quantiles from docs_char_quantiles."""
+    exact quantiles of the same column."""
     from pyspark.sql import functions as F
 
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")

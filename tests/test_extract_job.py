@@ -26,13 +26,14 @@ def test_main_runs_the_batch_job(spark, tmp_path, capsys):
     from ocr_pipeline_spark.sources.catalog import open_catalog
 
     warehouse = str(tmp_path)
-    try:
-        rc = extract_job.main(
-            ["--synthetic", "200", "--warehouse", warehouse, "--buckets", "4"]
-        )
-    finally:
-        spark.sparkContext.setLogLevel("ERROR")  # main sets WARN
+    rc = extract_job.main(
+        ["--synthetic", "200", "--warehouse", warehouse, "--buckets", "4"]
+    )
     assert rc == 0
+    # main runs in the test session, which it did not create: the
+    # session keeps the ERROR level the fixture set
+    root = spark._jvm.org.apache.logging.log4j.LogManager.getRootLogger()
+    assert root.getLevel().toString() == "ERROR"
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["n_docs"] == 200
     assert summary["n_buckets"] == 4 and summary["skipped"] == 0

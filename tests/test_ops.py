@@ -569,19 +569,6 @@ def test_connected_components_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n + 1)}
 
 
-def test_dedup_canonical_keeps_min_and_untouched(spark):
-    from ocr_pipeline_spark.operators.components import dedup_canonical
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(6)], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame(
-        [(0, 3), (3, 5)], "id_a long, id_b long"
-    )  # {0,3,5} one cluster; 1,2,4 untouched
-    kept = sorted(r.doc_id for r in dedup_canonical(docs, "doc_id", pairs).collect())
-    assert kept == [0, 1, 2, 4]
-
-
 def test_ivf_lloyd_refinement_monotone_objective(spark):
     """refine_ivf_centroids runs full-batch distributed Lloyd rounds —
     the spherical k-means objective (sum of each row's best-centroid

@@ -8,23 +8,19 @@ import pytest
 SF_DIR = "/root/testdata/sf0.01"
 
 # every query whose scale path must never degenerate into an all-pairs
-# physical join; embedding_near_dup (the documented quadratic oracle
-# baseline) is pinned separately — since the round-5 GEMM rewrite even
-# it carries no BNLJ, just a narrow Arrow kernel
+# physical join (dedup_soft_weights runs blocked_jaccard_pairs and
+# connected_components; the two recall queries run the LSH and IVF
+# top-k paths); the quadratic cosine baseline is pinned separately —
+# since the round-5 GEMM rewrite even it carries no BNLJ, just a narrow
+# Arrow kernel
 _NO_CROSS_QUERIES = [
     "minhash_dup_pairs",
     "near_dup_verified",
     "fingerprint_overlap",
-    "embedding_near_dup_lsh",
-    "jaccard_pairs_host",
-    "dup_components_host",
-    "ann_lsh",
-    "ann_ivf",
-    # embedding_knn excluded: its BNLJ is a ONE-ROW broadcast (attaching
-    # the query vector to every row) — O(n), not all-pairs
+    "dedup_soft_weights",
+    "ann_lsh_recall",
+    "ann_ivf_recall",
     "pack_sequences",
-    "doc_chunks",
-    "repetition_stats",
     "contamination_check",
     "dup_spans",
     "dedup_apply_spans",
@@ -37,6 +33,10 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _embeddings(spark):
+    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+
+
 @pytest.mark.parametrize("name", _NO_CROSS_QUERIES)
 def test_no_allpairs_join_in_scale_path(spark, name):
     import __spark_entry__ as entry_mod
@@ -47,13 +47,16 @@ def test_no_allpairs_join_in_scale_path(spark, name):
 
 
 def test_quadratic_baseline_is_gemm_kernel_not_bnlj(spark):
-    """embedding_near_dup (the exact oracle twin) was the repo's one
-    sanctioned BroadcastNestedLoopJoin until round 5; the block-GEMM
-    rewrite made it a single narrow Arrow kernel, so pin the stronger
-    invariant: no BNLJ/Cartesian anywhere, pair math in MapInPandas."""
-    import __spark_entry__ as entry_mod
+    """cosine_pairs_bruteforce (the exact all-pairs baseline) was the
+    repo's one sanctioned BroadcastNestedLoopJoin until round 5; the
+    block-GEMM rewrite made it a single narrow Arrow kernel, so pin the
+    stronger invariant: no BNLJ/Cartesian anywhere, pair math in
+    MapInPandas."""
+    from ocr_pipeline_spark.operators.ann import cosine_pairs_bruteforce
 
-    plan = _plan(entry_mod.queries()["embedding_near_dup"](spark, SF_DIR))
+    plan = _plan(
+        cosine_pairs_bruteforce(_embeddings(spark), "embedding", "vec_id", 0.4)
+    )
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan
@@ -76,9 +79,13 @@ def test_extraction_filter_pushdown_reaches_scan(spark, tmp_path):
 def test_lsh_near_dup_single_exchange(spark):
     """cosine_near_dup_lsh = signatures (narrow) -> ONE exchange on
     (table, sig) -> in-bucket GEMM -> distinct's exchange. No more."""
-    import __spark_entry__ as entry_mod
+    from ocr_pipeline_spark.operators.ann import cosine_near_dup_lsh
 
-    plan = _plan(entry_mod.queries()["embedding_near_dup_lsh"](spark, SF_DIR))
+    e = _embeddings(spark)
+    plan = _plan(cosine_near_dup_lsh(
+        e, "embedding", "vec_id", len(e.first().embedding),
+        threshold=0.4, n_planes=5, n_tables=16,
+    ))
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges <= 2, f"{n_exchanges} exchanges:\n{plan[:2000]}"
 
@@ -208,28 +215,16 @@ def test_minhash_pairs_single_kernel_invocation(spark):
 
 
 def test_bm25_stats_broadcast_and_topk_is_takeordered(spark):
-    """bm25_search's scale contract: corpus statistics attach via a
+    """hybrid_search's BM25 arm: corpus statistics attach via a
     ONE-ROW broadcast (a BNLJ whose build side is a single aggregated
     row — O(n), not all-pairs), the corpus itself never shuffles for
     scoring, and top-k is TakeOrdered, not a global sort."""
     import __spark_entry__ as entry_mod
 
-    plan = _plan(entry_mod.queries()["bm25_search"](spark, SF_DIR))
+    plan = _plan(entry_mod.queries()["hybrid_search"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan, plan[:2000]
     assert "TakeOrderedAndProject" in plan, plan[:2000]
     assert "CartesianProduct" not in plan, plan[:2000]
-
-
-def test_incremental_dedup_is_antijoin_no_broadcast_of_corpus(spark):
-    """incremental_dedup's scale contract: the index side joins as a
-    hash anti-join (bucketable at scale), never a CartesianProduct or
-    nested-loop over the corpus."""
-    import __spark_entry__ as entry_mod
-
-    plan = _plan(entry_mod.queries()["incremental_dedup"](spark, SF_DIR))
-    assert "LeftAnti" in plan, plan[:2000]
-    assert "CartesianProduct" not in plan, plan[:2000]
-    assert "BroadcastNestedLoopJoin" not in plan, plan[:2000]
 
 
 def test_classifier_inference_is_map_only(spark):
@@ -393,7 +388,7 @@ def test_extract_fidelity_partial_aggs_no_cross(spark):
 
 def test_text_normalize_is_map_only(spark):
     """text_normalize (X59): narrow Arrow kernel over (doc_id, text);
-    no hash shuffle, no join — same scale shape as lang_pred."""
+    no hash shuffle, no join."""
     import __spark_entry__ as entry_mod
 
     plan = _plan(entry_mod.queries()["text_normalize"](spark, SF_DIR))
