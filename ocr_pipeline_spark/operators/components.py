@@ -1,9 +1,9 @@
 """Connected components over near-dup pair graphs.
 
-Pair generators (MinHash-LSH, winnowing overlap, embedding-LSH,
-blocked Jaccard) emit EDGES; deduplication needs CLUSTERS — one
-canonical document per component.  This is min-label propagation
-expressed as DataFrame joins:
+Pair generators (MinHash-LSH, embedding-LSH, blocked Jaccard) emit
+EDGES; deduplication needs CLUSTERS — one canonical document per
+component.  This is min-label propagation expressed as DataFrame
+joins:
 
     label(v) <- min(label(v), min over neighbors' labels)
 

@@ -13,7 +13,7 @@ through semantic deduplication" — the published pipeline shape:
 The reference repo has no semantic-dedup stage (its corpus is page
 images — /root/reference/src/stage2_ocr.py); this extends the graft's
 training-data surface (SURVEY.md §2.8) with the embedding-level
-counterpart of MinHash/SimHash dedup.
+counterpart of MinHash dedup.
 
 Scale architecture:
   - Centroid training collects a BOUNDED deterministic sample (smallest

@@ -1,15 +1,14 @@
 """Text analytics & dedup operators for training-data pipelines.
 
 All column expressions stay JVM-side (pyspark.sql.functions, codegen'd);
-Python appears only in Arrow-batched kernels (lang-ID, simhash,
-minhash) where per-char/state logic genuinely can't be expressed as
-built-ins.  Everything is deterministic.
+Python appears only in Arrow-batched kernels (normalization, mojibake
+repair, minhash) where per-char/state logic genuinely can't be
+expressed as built-ins.  Everything is deterministic.
 """
 
 from __future__ import annotations
 
 import re
-import struct
 import sys
 from collections.abc import Iterator
 
@@ -21,59 +20,9 @@ from pyspark.sql import functions as F
 # Column-level text features (pure JVM expressions)
 # =========================================================================
 
-def token_count(col: Column) -> Column:
-    """Whitespace token count (0 for empty/blank strings)."""
-    trimmed = F.trim(col)
-    return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    ).cast("long")
-
-
 def exact_dup_key(col: Column) -> Column:
     """Exact-dedup hash key (md5 hex — same bytes in Spark and DuckDB)."""
     return F.md5(col.cast("binary"))
-
-
-# =========================================================================
-# Language identification (Arrow kernel — per-char logic)
-# =========================================================================
-# Tiny deterministic stopword profiles: the graft of a real lang-id
-# model for the fixture corpus (en/de/fr/pl).
-_LANG_PROFILES: dict[str, frozenset[str]] = {
-    "en": frozenset("the and of to in is that for with are was this have from".split()),
-    "de": frozenset("der die und das ist von mit für nicht auf ein eine dem den".split()),
-    "fr": frozenset("le la les et de des est dans pour que une avec sur pas".split()),
-    "pl": frozenset("i w na z do że się nie jest to przez jak dla oraz".split()),
-}
-_WORD_RE = re.compile(r"[a-ząćęłńóśźżüäößéèêàç]+")
-
-
-def identify_language(text: str) -> str:
-    """Deterministic stopword-vote lang-id; 'und' (undetermined) on ties/empty."""
-    words = _WORD_RE.findall((text or "").lower())
-    if not words:
-        return "und"
-    scores = {
-        lang: sum(1 for w in words if w in profile)
-        for lang, profile in _LANG_PROFILES.items()
-    }
-    best = max(scores, key=lambda k: (scores[k], k))
-    if scores[best] == 0:
-        return "und"
-    # ties broken lexicographically by the max() key above — deterministic
-    return best
-
-
-def lang_id_kernel(text_col: str = "text", out_col: str = "lang_pred"):
-    """mapInPandas kernel factory: adds a predicted-language column."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [identify_language(t) for t in pdf[text_col]]
-            yield pdf
-
-    return kernel
 
 
 # C0 controls except \t\n\r, plus DEL — the characters a curation
@@ -96,7 +45,7 @@ def normalize_text(text: str) -> str:
 def normalize_kernel(text_col: str = "text", out_col: str = "norm"):
     """mapInPandas kernel factory: adds the NFC-normalized column.
     Arrow-batched — NFC has no JVM built-in, so this is the sanctioned
-    Python boundary (same policy tier as lang_id_kernel).  NULL text
+    Python boundary (same policy tier as minhash_kernel).  NULL text
     stays NULL (SQL semantics — the DuckDB oracle's nfc_normalize /
     md5 propagate NULL, so the kernel must too; normalize_text's
     None -> "" total contract is for direct Python callers)."""
@@ -179,51 +128,6 @@ def mojibake_repair_kernel(text_col: str = "text"):
 
 
 # =========================================================================
-# SimHash (64-bit) — near-dup fingerprint (Arrow kernel)
-#
-# Hash family: blake2b-64 per token (one C call, PYTHONHASHSEED-free).
-# NOTE: this family replaced the round-1 FNV-1a/Mersenne-affine one —
-# simhash/minhash columns persisted by pre-vectorization runs are NOT
-# comparable with new signatures; recompute sketches, don't mix.
-# =========================================================================
-def simhash64(text: str) -> int:
-    """64-bit SimHash over whitespace tokens (signed for Spark LongType).
-
-    Vectorized: token hashes unpack into a (tokens, 64) bit matrix whose
-    column-wise vote decides each signature bit — the per-token
-    per-bit Python loop was the dominant cost at corpus scale."""
-    from hashlib import blake2b
-
-    tokens = (text or "").split()
-    if not tokens:
-        return 0
-    hs = _np.array(
-        [
-            int.from_bytes(blake2b(t.encode(), digest_size=8).digest(), "big")
-            for t in tokens
-        ],
-        dtype=_np.uint64,
-    )
-    bits = (hs[:, None] >> _np.arange(64, dtype=_np.uint64)[None, :]) & _np.uint64(1)
-    votes = (2 * bits.astype(_np.int64) - 1).sum(axis=0)
-    sig = int(
-        ((votes > 0).astype(_np.uint64) << _np.arange(64, dtype=_np.uint64)).sum()
-        & _np.uint64(0xFFFFFFFFFFFFFFFF)
-    )
-    return struct.unpack("<q", struct.pack("<Q", sig))[0]
-
-
-def simhash_kernel(text_col: str = "text", out_col: str = "simhash"):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [simhash64(t) for t in pdf[text_col]]
-            yield pdf
-
-    return kernel
-
-
-# =========================================================================
 # MinHash + LSH near-dup detection (kernel for signatures, DataFrame
 # ops for banding/bucketing — the scale path is the band-bucket join)
 # =========================================================================
@@ -290,10 +194,9 @@ def minhash_kernel(text_col: str = "text", out_col: str = "minhash"):
     return kernel
 
 
-# Hot-bucket cap: a band/fingerprint/signature shared by more than this
-# many documents is boilerplate by definition (ubiquitous shingle, site
-# chrome) and carries no near-dup signal — but would pay an O(n^2)
-# intra-bucket pair explosion inside a single task at corpus scale.
+# Hot-bucket cap: a band bucket shared by more than this many documents
+# would pay an O(n^2) intra-bucket pair explosion inside a single task at
+# corpus scale, so it degrades to linear star edges (intra_bucket_pairs).
 _MAX_BUCKET = 64
 
 
@@ -322,27 +225,20 @@ def intra_bucket_pairs(
     grouped: DataFrame,
     max_bucket: int = _MAX_BUCKET,
     observation=None,
-    overflow: str = "drop",
 ) -> DataFrame:
     """(id_a < id_b) pair expansion over bucket rows, hot buckets capped.
 
     `grouped` needs an array column `ids` (one row per bucket).  Buckets
     with more than `max_bucket` members never pay the quadratic
-    expansion: one ubiquitous shingle/fingerprint at 10^12-doc scale is
-    a single bucket with millions of ids — a pair explosion (and a
-    collect_list OOM feeder) no shuffle strategy survives.  What happens
-    to an over-cap bucket is `overflow`:
-
-    - ``"drop"`` (default): emit nothing.  Right for single-feature
-      buckets (one shingle, one winnowing fingerprint): a feature shared
-      by >max_bucket docs is boilerplate, not near-dup evidence.
-    - ``"star"``: emit star edges — min(ids) paired with each other
-      member, m-1 pairs, linear in bucket size.  Right for
-      whole-document band-signature buckets (MinHash LSH): a crawl
-      cluster of >max_bucket mirrors/templated copies shares EVERY band
-      bucket, so dropping would emit zero pairs for exactly the most
-      duplicated content; the star keeps the connected component intact
-      for downstream connected_components without quadratic blowup.
+    expansion: one ubiquitous band signature at 10^12-doc scale is a
+    single bucket with millions of ids — a pair explosion no shuffle
+    strategy survives.  An over-cap bucket emits star edges instead:
+    min(ids) paired with each other member, m-1 pairs, linear in bucket
+    size.  Band-signature buckets (MinHash LSH) hold whole-document
+    features, so a crawl cluster of >max_bucket mirrors/templated copies
+    shares EVERY band bucket; dropping over-cap buckets would emit zero
+    pairs for exactly the most duplicated content, while the star keeps
+    the connected component intact for downstream connected_components.
 
     Pair count per bucket is hard-bounded at max(max_bucket*(max_bucket
     -1)/2, n-1).
@@ -355,33 +251,20 @@ def intra_bucket_pairs(
     and Observation.get will fail — read the metrics only on non-empty
     results (at corpus scale the pair set is never empty).
     """
-    if overflow not in ("drop", "star"):
-        raise ValueError(f"overflow must be 'drop' or 'star', got {overflow!r}")
     sized = grouped.withColumn("_n", F.size("ids"))
     if observation is not None:
-        # "overflow_buckets" is the semantically honest name (star mode
-        # degrades over-cap buckets, it does not drop them); the legacy
-        # "dropped_buckets" alias is kept so existing lineage consumers
-        # keep reading a value that is correct in drop mode.
         sized = sized.observe(
             observation,
             F.count(F.lit(1)).alias("total_buckets"),
             F.count(F.when(F.col("_n") > max_bucket, 1)).alias("overflow_buckets"),
-            F.count(F.when(F.col("_n") > max_bucket, 1)).alias("dropped_buckets"),
         )
     full_expr = (
         "filter(flatten(transform(ids, a -> transform(ids, b -> "
         "struct(a, b)))), p -> p.a < p.b)"
     )
-    if overflow == "drop":
-        return sized.filter(
-            (F.col("_n") >= 2) & (F.col("_n") <= max_bucket)
-        ).select(
-            F.explode(F.expr(full_expr)).alias("p")
-        ).select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-    # star mode: ONE conditional pair-array per bucket row — a union of
-    # two filtered branches would duplicate the grouped subtree in the
-    # plan (the upstream kernel/aggregate runs once per consumer unless
+    # ONE conditional pair-array per bucket row — a union of two
+    # filtered branches would duplicate the grouped subtree in the plan
+    # (the upstream kernel/aggregate runs once per consumer unless
     # exchange reuse saves it; a single select needs no saving)
     star_expr = (
         "transform(filter(ids, x -> x > array_min(ids)), "
@@ -438,301 +321,16 @@ def lsh_candidate_pairs(
     group by bucket, emit intra-bucket pairs — the shuffle is on band
     hashes, never a cross join; hot buckets (> max_bucket ids) degrade
     to linear star edges instead of the quadratic expansion (see
-    intra_bucket_pairs overflow="star": band signatures are
-    whole-document features, so a >max_bucket bucket is a mirror/
-    template cluster whose component must stay connected, not
-    boilerplate to drop).  Output: (id_a, id_b) with id_a < id_b,
+    intra_bucket_pairs: band signatures are whole-document features, so
+    a >max_bucket bucket is a mirror/template cluster whose component
+    must stay connected).  Output: (id_a, id_b) with id_a < id_b,
     distinct.
     """
     banded = _band_table(df, id_col, sig_col)
     grouped = banded.groupBy("band", "band_hash").agg(
         F.collect_list(id_col).alias("ids")
     )
-    return intra_bucket_pairs(
-        grouped, max_bucket, observation, overflow="star"
-    ).distinct()
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    sim_col: str = "simhash",
-    max_hamming: int = 3,
-    max_bucket: int = _MAX_BUCKET,
-    observation=None,
-    max_levels: int = 20,
-) -> DataFrame:
-    """SimHash near-dup pairs at scale: signature-deduplicated
-    recursive pigeonhole banding + exact popcount verify, all JVM after
-    the signature kernel.
-
-    Output contract (exact at ANY corpus size, linear in true cluster
-    structure):
-
-    - one ``(rep_a, rep_b, hamming)`` row for EVERY pair of *distinct*
-      signatures within ``max_hamming`` bits, where rep = min doc id of
-      that signature's duplicate group — recall over distinct
-      signatures is EXACT, not probabilistic;
-    - one ``(rep, member, 0)`` star edge for every non-representative
-      member of an identical-signature group (a 10^6-doc mirror
-      cluster is a hamming-0 clique whose exhaustive Θ(m²) pair set no
-      exact engine can emit at scale; the star is its linear spanning
-      encoding, and every true pair stays connected through verified
-      intermediaries — component-level dedup is exact).
-
-    Mechanics: identical signatures collapse first (one shuffle by
-    signature, min-id over a window — never a collect_list).  Distinct
-    signatures are banded into ``max_hamming + 1`` chunks; a near pair
-    must agree exactly on some chunk (pigeonhole).  A bucket larger
-    than ``max_bucket`` never pays the quadratic expansion: its
-    members re-band on their *remaining* bits (the differing bits of a
-    near pair all lie outside the agreed chunks, so pigeonhole applies
-    again inside the bucket), recursively until every bucket fits —
-    guaranteed, because a bucket with ``rem_n`` undecided bits holds at
-    most ``2^rem_n`` distinct members, so recursion bottoms out by
-    ``rem_n <= log2(max_bucket)`` (~4 levels for 64-bit/t=3/cap 64;
-    0 extra levels for non-adversarial corpora).
-
-    Candidates are always banded group-by shuffles — never a cross
-    join; the signature rides the bucket rows as a struct so the final
-    verification is one inline ``bit_count(a ^ b)`` per candidate (no
-    hydration join).  The recursion runs a driver loop with a lazy
-    localCheckpoint per level so the signature kernel executes once
-    regardless of depth.  Output: (id_a, id_b, hamming), id_a < id_b,
-    distinct.
-    """
-    n_bands = max_hamming + 1
-    # Phase 1 — collapse identical signatures.  A mirror cluster of m
-    # identical docs is a hamming-0 clique whose exhaustive pair set is
-    # Θ(m²); no exact engine can emit that at corpus scale, and feeding
-    # duplicates into the banding recursion is worse: an identical-sig
-    # group never splits, so every level would duplicate its members
-    # into each of ~n_bands over-cap sub-buckets — exponential row
-    # growth.  Instead: one shuffle by signature, min-id representative
-    # per group, linear star edges (rep, member, hamming 0) via a
-    # window (never a collect_list — a 10^6-member group must not
-    # become one array).  The recursion then runs over DISTINCT
-    # signatures only, where buckets provably split: two distinct
-    # members of a bucket agree on all consumed bits, so they differ
-    # within the remaining bits, and a bucket with rem_n remaining bits
-    # holds at most 2^rem_n distinct members — once rem_n <=
-    # log2(max_bucket), no bucket can be over cap.
-    from pyspark.sql import Window as _W
-
-    # lazy checkpoint: the star-edge branch AND the banding recursion
-    # both read this frame — without the cut the signature kernel would
-    # execute once per consumer subtree
-    with_rep = (
-        df.select(
-            F.col(id_col).alias("i"), F.col(sim_col).cast("long").alias("s")
-        )
-        .withColumn("_rep", F.min("i").over(_W.partitionBy("s")))
-        .localCheckpoint(eager=False)
-    )
-    star_edges = with_rep.filter(F.col("i") != F.col("_rep")).select(
-        F.col("_rep").alias("id_a"),
-        F.col("i").alias("id_b"),
-        F.lit(0).alias("hamming"),
-    )
-    member = F.struct(
-        F.col("i"),
-        F.col("s"),
-        F.col("s").alias("rem"),
-        F.lit(64).alias("rem_n"),
-    )
-    work = (
-        with_rep.filter(F.col("i") == F.col("_rep"))
-        .select(F.lit(0).cast("long").alias("pkey"), member.alias("m"))
-    )
-
-    # Per-member banding of the remaining bits: w = chunk width,
-    # j = chunk index, cw = this chunk's width (the top chunk may be
-    # narrower), chunk = the agreed-bit value, and the child member
-    # carries rem with the agreed chunk spliced out.  All shift amounts
-    # are < 64 by construction (j*w < rem_n <= 64 and, in the non-top
-    # branch, j*w + cw < rem_n), so Java's mod-64 shift wraparound is
-    # never hit.
-    _w = f"greatest(m.rem_n div {n_bands}, 1)"
-    _cw = f"least({_w}, m.rem_n - j * {_w})"
-    _off = f"(j * {_w})"
-    _chunk = f"shiftrightunsigned(m.rem, {_off}) & (shiftleft(1L, {_cw}) - 1)"
-    _child = f"""named_struct(
-        'i', m.i, 's', m.s,
-        'rem', (m.rem & (shiftleft(1L, {_off}) - 1)) |
-               (CASE WHEN {_off} + {_cw} >= m.rem_n THEN 0L
-                     ELSE shiftleft(
-                         shiftrightunsigned(m.rem, {_off} + {_cw}), {_off})
-                END),
-        'rem_n', m.rem_n - {_cw})"""
-    _full_pairs = (
-        "filter(flatten(transform(ids, a -> transform(ids, b -> "
-        "struct(a, b)))), p -> p.a.i < p.b.i)"
-    )
-
-    pair_frames: list[DataFrame] = []
-    for level in range(max_levels):
-        banded = work.select(
-            "pkey",
-            F.expr(
-                f"explode(sequence(0, cast(ceil(m.rem_n / {_w}) as int) - 1))"
-            ).alias("j"),
-            F.col("m"),
-        ).select(
-            "pkey",
-            "j",
-            F.expr(_chunk).alias("chunk"),
-            F.expr(_child).alias("c"),
-        )
-        grouped = banded.groupBy("pkey", "j", "chunk").agg(
-            F.collect_list("c").alias("ids")
-        )
-        # rem_n is uniform within a bucket (same parent, same agreed
-        # chunk width), so the first member's value is the bucket's
-        sized = grouped.withColumn("_n", F.size("ids")).withColumn(
-            "_rem_n", F.element_at("ids", 1).getField("rem_n")
-        )
-        if observation is not None and level == 0:
-            sized = sized.observe(
-                observation,
-                F.count(F.lit(1)).alias("total_buckets"),
-                F.count(F.when(F.col("_n") > max_bucket, 1)).alias(
-                    "overflow_buckets"
-                ),
-            )
-        # lazy checkpoint: singleton buckets are dropped first (they
-        # emit nothing and cannot recurse), then one materialization
-        # serves the under-cap pair expansion, the over-cap recursion,
-        # and the emptiness probe — the signature kernel runs once.
-        multi = sized.filter(F.col("_n") >= 2).localCheckpoint(eager=False)
-        # recurse only while pigeonhole banding is possible (rem_n >=
-        # n_bands).  Below that a bucket holds < 2^n_bands distinct
-        # members — constant-bounded, expand directly.  (With
-        # max_bucket >= 2^n_bands this branch is provably unreachable:
-        # distinct-sig buckets at rem_n bits hold <= 2^rem_n members.)
-        emit = (F.col("_n") <= max_bucket) | (F.col("_rem_n") < n_bands)
-        pair_frames.append(
-            multi.filter(emit)
-            .select(F.explode(F.expr(_full_pairs)).alias("p"))
-        )
-        over = multi.filter(~emit)
-        if over.isEmpty():
-            break
-        work = over.select(
-            F.xxhash64("pkey", "j", "chunk").alias("pkey"),
-            F.explode("ids").alias("m"),
-        )
-
-    candidates = pair_frames[0]
-    for extra in pair_frames[1:]:
-        candidates = candidates.unionByName(extra)
-    rep_pairs = (
-        candidates.select(
-            F.col("p.a.i").alias("id_a"),
-            F.col("p.b.i").alias("id_b"),
-            F.bit_count(
-                F.col("p.a.s").bitwiseXOR(F.col("p.b.s"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    return rep_pairs.unionByName(star_edges)
-
-
-
-# =========================================================================
-# Document fingerprinting — Karp-Rabin rolling hash + winnowing
-# (Schleimer/Wilkerson/Aiken, SIGMOD'03; the reference has no analog —
-# this is the training-data-pipeline extension of the dedup family)
-# =========================================================================
-_FP_K = 8     # chars per k-gram
-_FP_W = 16    # winnowing window (guarantee: any match >= w+k-1 chars shares a fingerprint)
-_FP_BASE = 257
-_FP_MOD = (1 << 61) - 1
-
-
-def rolling_kgram_hashes(text: str, k: int = _FP_K):
-    """Polynomial k-gram hashes (base _FP_BASE, mod 2^64 via uint64
-    wraparound) of every char k-gram, vectorized: k shifted-array
-    multiply-adds instead of a per-char Python rolling loop.  Returns a
-    numpy uint64 array."""
-    n = len(text)
-    if n == 0:
-        return _np.empty(0, dtype=_np.uint64)
-    codes = _np.frombuffer(text.encode("utf-32-le"), dtype=_np.uint32).astype(
-        _np.uint64
-    )
-    if n < k:
-        h = _np.uint64(0)
-        base = _np.uint64(_FP_BASE)
-        for c in codes:
-            h = h * base + c
-        return _np.array([h], dtype=_np.uint64)
-    m = n - k + 1
-    out = _np.zeros(m, dtype=_np.uint64)
-    for j in range(k):
-        out = out * _np.uint64(_FP_BASE) + codes[j : j + m]
-    return out
-
-
-def winnow_fingerprints(text: str, k: int = _FP_K, w: int = _FP_W) -> list[int]:
-    """Winnowed fingerprint set: min hash of each w-window of k-gram
-    hashes, deduped, sorted (the picked VALUE per window is tie-position
-    independent, so the set needs no tie-break bookkeeping).  Whitespace
-    is normalized first so formatting doesn't perturb fingerprints."""
-    norm = " ".join((text or "").lower().split())
-    hashes = rolling_kgram_hashes(norm, k)
-    if not len(hashes):
-        return []
-    if len(hashes) <= w:
-        return [int(hashes.min() >> _np.uint64(1))]
-    wins = _np.lib.stride_tricks.sliding_window_view(hashes, w).min(axis=1)
-    # >>1 keeps fingerprints in non-negative LongType range (monotone)
-    return sorted({int(x) for x in (wins >> _np.uint64(1))})
-
-
-def fingerprint_kernel(text_col: str = "text"):
-    """mapInPandas kernel: per-doc winnowed fingerprint summary
-    (n_fps, fp_min) + the full fingerprint array for overlap joins."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fps = [winnow_fingerprints(t) for t in pdf[text_col]]
-            out = pdf.drop(columns=[text_col]).copy()
-            out["fingerprints"] = fps
-            out["n_fps"] = [len(f) for f in fps]
-            out["fp_min"] = [f[0] if f else 0 for f in fps]
-            yield out
-
-    return kernel
-
-
-def fingerprint_overlap_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    min_shared: int = 3,
-    max_bucket: int = _MAX_BUCKET,
-    observation=None,
-) -> DataFrame:
-    """Docs sharing >= min_shared winnowed fingerprints — the scale path
-    is explode→group-by-fingerprint→intra-bucket pairs→count, i.e. the
-    same banded-shuffle shape as MinHash-LSH (never a cross join).
-    Fingerprints shared by > max_bucket docs are boilerplate and dropped
-    before pair expansion (see intra_bucket_pairs)."""
-    base = df.select(F.col(id_col).cast("long").alias("_id"), text_col)
-    fps = base.mapInPandas(
-        fingerprint_kernel(text_col),
-        schema="_id long, fingerprints array<bigint>, n_fps long, fp_min bigint",
-    )
-    exploded = fps.select("_id", F.explode("fingerprints").alias("fp"))
-    grouped = exploded.groupBy("fp").agg(F.collect_list("_id").alias("ids"))
-    pairs = intra_bucket_pairs(grouped, max_bucket, observation)
-    return (
-        pairs.groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    return intra_bucket_pairs(grouped, max_bucket, observation).distinct()
 
 
 def blocked_jaccard_pairs(

@@ -184,58 +184,6 @@ def _docs_texts() -> pd.DataFrame:
     ).sort_values("doc_id")
 
 
-def witness_lang_simhash() -> pd.DataFrame:
-    """Twin of _q_lang_simhash: single-process identify_language +
-    simhash64 per document (the kernels wrap these same pure
-    functions); columns (doc_id, lang_pred, simhash)."""
-    from ocr_pipeline_spark.operators.text_ops import identify_language, simhash64
-
-    docs = _docs_texts()
-    rows = []
-    for d, t in zip(docs.doc_id, docs.text):
-        s = simhash64(t or "")
-        rows.append(
-            {
-                "doc_id": int(d),
-                "lang_pred": identify_language(t or ""),
-                "simhash": s - (1 << 64) if s >= (1 << 63) else s,
-            }
-        )
-    return pd.DataFrame(rows)
-
-
-def witness_simhash_dup_pairs() -> pd.DataFrame:
-    """Twin of _q_simhash_dup_pairs via BRUTE FORCE — an all-pairs
-    popcount over single-process signatures, compressed to the
-    operator's documented contract (min-id rep per identical-signature
-    group + hamming-0 stars + exhaustive rep-rep pairs at hamming <= 3).
-    Genuinely independent of the banding machinery."""
-    from ocr_pipeline_spark.operators.text_ops import simhash64
-
-    docs = _docs_texts()
-    sigs = {int(d): simhash64(t or "") for d, t in zip(docs.doc_id, docs.text)}
-    rep: dict[int, int] = {}
-    for i in sorted(sigs):
-        rep.setdefault(sigs[i], i)
-    rows = []
-    for i in sorted(sigs):
-        r = rep[sigs[i]]
-        if r != i:
-            rows.append({"id_a": r, "id_b": i, "hamming": 0})
-    reps = sorted(rep.values())
-    for x in range(len(reps)):
-        for y in range(x + 1, len(reps)):
-            a, b = reps[x], reps[y]
-            h = bin(sigs[a] ^ sigs[b]).count("1")
-            if h <= 3:
-                rows.append({"id_a": a, "id_b": b, "hamming": h})
-    return (
-        pd.DataFrame(rows, columns=["id_a", "id_b", "hamming"])
-        .sort_values(["id_a", "id_b"])
-        .reset_index(drop=True)
-    )
-
-
 def _minhash_candidate_pairs(sigs: dict[int, list[int]], max_bucket: int = 64):
     """Single-process twin of lsh_candidate_pairs: band by the raw
     4-row signature tuple (the Spark side buckets by xxhash64 of the
@@ -658,8 +606,6 @@ WITNESSES = {
     "assemble_documents": witness_assemble_documents,
     "extract_pdf_documents": witness_extract_pdf_documents,
     "pdf_page_explode": witness_pdf_page_explode,
-    "lang_simhash": witness_lang_simhash,
-    "simhash_dup_pairs": witness_simhash_dup_pairs,
     "minhash_dup_pairs": witness_minhash_dup_pairs,
     "near_dup_verified": witness_near_dup_verified,
     "host_link_graph": witness_host_link_graph,

@@ -1,15 +1,11 @@
-"""Link-graph family: outlink kernel, host graph, iterative PageRank.
+"""Link-graph family: outlink kernel and host graph.
 
 Verification strategy mirrors the extraction family's: the Spark
-operator must equal the single-process kernel loop exactly, and the
-iterative algorithm is pinned against an independent dense numpy
-implementation (no Spark, no shared code) at 1e-9.
+operator must equal the single-process kernel loop exactly.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -140,144 +136,3 @@ def test_host_graph_single_exchange(spark):
     df = host_link_graph(generate_pages_df(spark, 50, cross_links=True))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
-
-
-# -------------------------------------------------------------- pagerank
-
-def _numpy_pagerank(edges, damping=0.85, iterations=10):
-    """Independent dense power iteration (no shared code with the op)."""
-    hosts = sorted({s for s, _ in edges} | {d for _, d in edges})
-    idx = {h: i for i, h in enumerate(hosts)}
-    n = len(hosts)
-    w = np.zeros((n, n))
-    for (s, d), c in edges.items():
-        w[idx[s], idx[d]] += c
-    out = w.sum(axis=1)
-    r = np.full(n, 1.0 / n)
-    for _ in range(iterations):
-        contrib = np.zeros(n)
-        for i in range(n):
-            if out[i] > 0:
-                contrib += r[i] * w[i] / out[i]
-        dangling = r[out == 0].sum()
-        r = (1 - damping) / n + damping * (contrib + dangling / n)
-    return dict(zip(hosts, r))
-
-
-def test_pagerank_matches_numpy(spark):
-    from ocr_pipeline_spark.operators.pagerank import host_pagerank
-
-    rows = generate_rows(300, seed=42, cross_links=True)
-    edges = dict(_local_edges(rows))
-    edge_df = spark.createDataFrame(
-        [(s, d, int(c)) for (s, d), c in edges.items()],
-        "src_host string, dst_host string, n_links long",
-    )
-    got = {r.host: r.rank for r in host_pagerank(edge_df, iterations=10).collect()}
-    want = _numpy_pagerank(edges, iterations=10)
-    assert set(got) == set(want)
-    for h in want:
-        assert got[h] == pytest.approx(want[h], abs=1e-9), h
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
-
-
-def _numpy_pagerank_earlystop(edges, damping=0.85, iterations=10, tol=1e-7):
-    """Twin of the operator's early-stop rule: stop after the first
-    step whose L1 delta vs the previous rank vector is < tol."""
-    hosts = sorted({s for s, _ in edges} | {d for _, d in edges})
-    idx = {h: i for i, h in enumerate(hosts)}
-    n = len(hosts)
-    w = np.zeros((n, n))
-    for (s, d), c in edges.items():
-        w[idx[s], idx[d]] += c
-    out = w.sum(axis=1)
-    r = np.full(n, 1.0 / n)
-    steps = 0
-    for _ in range(iterations):
-        contrib = np.zeros(n)
-        for i in range(n):
-            if out[i] > 0:
-                contrib += r[i] * w[i] / out[i]
-        dangling = r[out == 0].sum()
-        r_new = (1 - damping) / n + damping * (contrib + dangling / n)
-        delta = np.abs(r_new - r).sum()
-        r = r_new
-        steps += 1
-        if delta < tol:
-            break
-    return dict(zip(hosts, r)), steps
-
-
-def test_pagerank_earlystop_matches_numpy_twin(spark):
-    """Convergence early-stop (tol) must implement EXACTLY the rule the
-    numpy twin implements — same stopping iteration, same ranks at the
-    stopping point.  tol=5e-2 stops this fixture graph at step 5 of 10
-    (its L1 deltas decay ~0.7x/step: 0.40, 0.17, 0.098, 0.066, 0.045);
-    a tol the graph never reaches must reproduce the fixed-step result
-    exactly (next test)."""
-    from ocr_pipeline_spark.operators.pagerank import host_pagerank
-
-    rows = generate_rows(300, seed=42, cross_links=True)
-    edges = dict(_local_edges(rows))
-    edge_df = spark.createDataFrame(
-        [(s, d, int(c)) for (s, d), c in edges.items()],
-        "src_host string, dst_host string, n_links long",
-    )
-    want, steps = _numpy_pagerank_earlystop(edges, iterations=10, tol=5e-2)
-    assert steps == 5, "fixture graph should stop at step 5 under tol=5e-2"
-    got = {
-        r.host: r.rank
-        for r in host_pagerank(edge_df, iterations=10, tol=5e-2).collect()
-    }
-    assert set(got) == set(want)
-    for h in want:
-        assert got[h] == pytest.approx(want[h], abs=1e-9), h
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
-
-
-def test_pagerank_unreached_tol_equals_fixed_step(spark):
-    """A tol below the graph's 10-step delta (6.6e-3 here) must leave
-    the result equal to the fixed-step power method — the early-stop
-    branch adds a delta probe but never perturbs ranks.  Compared at
-    1e-12 (not ==): the per-host inflow is a distributed float sum, so
-    two independent executions may legally differ in the last ulp."""
-    from ocr_pipeline_spark.operators.pagerank import host_pagerank
-
-    rows = generate_rows(300, seed=42, cross_links=True)
-    edges = dict(_local_edges(rows))
-    edge_df = spark.createDataFrame(
-        [(s, d, int(c)) for (s, d), c in edges.items()],
-        "src_host string, dst_host string, n_links long",
-    )
-    fixed = {r.host: r.rank
-             for r in host_pagerank(edge_df, iterations=6).collect()}
-    tolled = {r.host: r.rank
-              for r in host_pagerank(edge_df, iterations=6, tol=1e-7).collect()}
-    assert set(fixed) == set(tolled)
-    for h in fixed:
-        assert tolled[h] == pytest.approx(fixed[h], abs=1e-12), h
-
-
-def test_pagerank_tol_on_empty_graph(spark):
-    """tol's delta aggregate over an empty rank join yields SQL NULL —
-    must coalesce to 0.0, not raise, and return an empty frame like
-    the fixed-step path does."""
-    from ocr_pipeline_spark.operators.pagerank import host_pagerank
-
-    empty = spark.createDataFrame(
-        [], "src_host string, dst_host string, n_links long"
-    )
-    assert host_pagerank(empty, iterations=3, tol=1e-7).count() == 0
-
-
-def test_pagerank_dangling_mass_conserved(spark):
-    """A pure sink (no outlinks) must redistribute, not leak, its mass."""
-    from ocr_pipeline_spark.operators.pagerank import host_pagerank
-
-    edge_df = spark.createDataFrame(
-        [("a", "sink", 2), ("b", "sink", 1), ("a", "b", 1)],
-        "src_host string, dst_host string, n_links long",
-    )
-    got = {r.host: r.rank for r in host_pagerank(edge_df, iterations=15).collect()}
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-12)
-    assert got["sink"] > got["a"]

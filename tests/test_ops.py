@@ -1,7 +1,5 @@
 """Text analytics, dedup and ANN operator tests."""
 
-import struct
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,36 +9,14 @@ from ocr_pipeline_spark.operators.ann import (
     lsh_ann_topk,
 )
 from ocr_pipeline_spark.operators.text_ops import (
-    identify_language,
     lsh_candidate_pairs,
     minhash_kernel,
     minhash_signature,
     ngram_jaccard,
-    simhash64,
 )
 
 
-# --- lang id / simhash / minhash (pure) -------------------------------------
-def test_lang_id():
-    assert identify_language("the cat and the dog are in the house") == "en"
-    assert identify_language("der Hund ist nicht auf der Straße und das Haus") == "de"
-    assert identify_language("le chat est dans la maison avec les autres") == "fr"
-    assert identify_language("") == "und"
-    assert identify_language("zzz qqq xxx") == "und"
-
-
-def test_simhash_properties():
-    a = simhash64("the quick brown fox jumps over the lazy dog " * 4)
-    b = simhash64("the quick brown fox jumps over the lazy dogs " * 4)
-    c = simhash64("completely different text about spark shuffles and joins")
-    assert a == simhash64("the quick brown fox jumps over the lazy dog " * 4)
-    ham_ab = bin((a ^ b) & (2**64 - 1)).count("1")
-    ham_ac = bin((a ^ c) & (2**64 - 1)).count("1")
-    assert ham_ab < ham_ac
-    assert simhash64("") == 0
-    assert struct.pack(">q", a)  # fits signed 64-bit
-
-
+# --- minhash (pure) ------------------------------------------------------------
 def test_minhash_similarity_ordering():
     base = "word" + " word".join(str(i) for i in range(100))
     near = base + " extra"
@@ -140,100 +116,28 @@ def test_lsh_signatures_deterministic(emb):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-# --- fingerprinting (winnowing) ----------------------------------------------
-def test_rolling_kgram_hashes_match_direct():
-    from ocr_pipeline_spark.operators.text_ops import (
-        _FP_BASE,
-        rolling_kgram_hashes,
-    )
-
-    s = "the quick brown fox jumps over the lazy dog"
-    k = 8
-    rolled = rolling_kgram_hashes(s, k)
-    assert len(rolled) == len(s) - k + 1
-    for i, h in enumerate(rolled):
-        direct = 0
-        for ch in s[i : i + k]:
-            direct = (direct * _FP_BASE + ord(ch)) % (1 << 64)
-        assert int(h) == direct
-
-
-def test_winnow_fingerprints_properties():
-    from ocr_pipeline_spark.operators.text_ops import winnow_fingerprints
-
-    assert winnow_fingerprints("") == []
-    assert winnow_fingerprints("short") == winnow_fingerprints("short")
-    a = "A long enough paragraph about distributed extraction engines " * 5
-    fa = winnow_fingerprints(a)
-    assert fa == sorted(set(fa)) and len(fa) > 3
-    # whitespace normalization: formatting changes don't perturb fingerprints
-    assert winnow_fingerprints(a.replace(" ", "   \n")) == fa
-    # shared prefix => shared fingerprints (the winnowing guarantee)
-    b = a + " plus an entirely new unrelated suffix about k-means cells."
-    fb = set(winnow_fingerprints(b))
-    assert len(fb & set(fa)) >= len(fa) * 0.8
-
-
-def test_fingerprint_overlap_pairs_detects_near_dups(spark):
-    from ocr_pipeline_spark.operators.text_ops import fingerprint_overlap_pairs
-
-    base = (
-        "Common Crawl pages are extracted by a vectorized Arrow kernel "
-        "that tokenizes the DOM and strips boilerplate by link density. " * 4
-    )
-    rows = [
-        (1, base),
-        (2, base + " One extra trailing sentence changes little."),
-        (3, "A completely different document about spherical k-means "
-            "quantizers and inverted file indexes for embeddings. " * 4),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r.id_a, r.id_b) for r in
-             fingerprint_overlap_pairs(df, "doc_id", "text").collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_intra_bucket_pairs_cap_and_observation(spark):
+# --- hot-bucket caps -----------------------------------------------------------
+def test_intra_bucket_pairs_star_overflow(spark):
+    """An over-cap bucket degrades to m-1 star edges (min id -> each
+    other member) instead of vanishing — linear output, component stays
+    connected — and the Observation audit trail counts it."""
     from pyspark.sql import Observation
 
     from ocr_pipeline_spark.operators.text_ops import intra_bucket_pairs
 
     rows = [
-        ([1],),                      # singleton: no pairs
-        ([10, 11, 12],),             # 3 ids -> 3 pairs
-        ([list(range(100, 170))][0],),  # 70 ids > cap 64 -> dropped
-    ]
-    grouped = spark.createDataFrame(rows, "ids array<bigint>")
-    obs = Observation("buckets")
-    pairs = intra_bucket_pairs(grouped, max_bucket=64, observation=obs).collect()
-    assert len(pairs) == 3
-    assert {(r.id_a, r.id_b) for r in pairs} == {(10, 11), (10, 12), (11, 12)}
-    # overflow_buckets is the honest name (star mode degrades, it does
-    # not drop); dropped_buckets is the legacy alias for drop mode
-    assert obs.get == {
-        "total_buckets": 3,
-        "overflow_buckets": 1,
-        "dropped_buckets": 1,
-    }
-
-
-def test_intra_bucket_pairs_star_overflow(spark):
-    """overflow='star': an over-cap bucket degrades to m-1 star edges
-    (min id -> each other member) instead of vanishing — linear output,
-    component stays connected."""
-    from ocr_pipeline_spark.operators.text_ops import intra_bucket_pairs
-
-    rows = [
+        ([1],),                         # singleton: no pairs
         ([10, 11, 12],),                # under cap: full 3 pairs
         ([list(range(100, 170))][0],),  # 70 ids > cap 64 -> star
     ]
     grouped = spark.createDataFrame(rows, "ids array<bigint>")
+    obs = Observation("buckets")
     pairs = {(r.id_a, r.id_b) for r in
-             intra_bucket_pairs(grouped, max_bucket=64, overflow="star").collect()}
+             intra_bucket_pairs(grouped, max_bucket=64, observation=obs).collect()}
     full = {(10, 11), (10, 12), (11, 12)}
     star = {(100, b) for b in range(101, 170)}
     assert pairs == full | star
+    assert obs.get == {"total_buckets": 3, "overflow_buckets": 1}
 
 
 def test_lsh_mirror_cluster_survives_hot_bucket(spark):
@@ -287,43 +191,6 @@ def test_blocked_jaccard_skipped_blocks_observation(spark):
     ).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(100, 101)}
     assert obs.get == {"total_blocks": 2, "skipped_blocks": 1}
-
-
-def test_hot_bucket_cap_bounds_fingerprint_pairs(spark):
-    """Ubiquitous-boilerplate corpus: every doc shares one big block.
-    Without the cap this emits ~n^2/2 pairs from a single fingerprint
-    bucket; with it the pair count stays sub-quadratic."""
-    from pyspark.sql import Observation
-
-    from ocr_pipeline_spark.operators.text_ops import fingerprint_overlap_pairs
-
-    n = 120
-    boiler = (
-        "subscribe to our newsletter accept all cookies all rights reserved "
-        "terms of service privacy policy contact us about careers " * 6
-    )
-    cluster = "a genuinely shared article body that ten documents reuse verbatim " * 6
-    rows = [
-        (
-            i,
-            boiler
-            + (f" {cluster} " if i < 10 else "")
-            + f" unique filler {i} "
-            + " ".join(f"tok{i}_{j}" for j in range(40)),
-        )
-        for i in range(n)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    obs = Observation("fp_buckets")
-    pairs = fingerprint_overlap_pairs(
-        df, "doc_id", "text", min_shared=1, observation=obs
-    ).collect()
-    got = obs.get
-    assert got["dropped_buckets"] > 0  # the 120-doc boilerplate fingerprints
-    # the genuine 10-doc cluster survives the cap...
-    assert {(r.id_a, r.id_b) for r in pairs} >= {(0, 1), (0, 9), (8, 9)}
-    # ...but nothing near the n*(n-1)/2 = 7140 boilerplate blowup is emitted
-    assert len(pairs) < n * (n - 1) / 8, len(pairs)
 
 
 def test_lsh_signature_batch_matches_scalar(emb):
@@ -599,145 +466,6 @@ def test_ivf_lloyd_refinement_monotone_objective(spark):
     for a, b in zip(objs, objs[1:]):
         assert b >= a - 1e-9, objs
     assert objs[-1] > objs[0]  # the bounded-sample init left real slack
-
-
-def test_simhash_near_dup_pairs_exact_at_threshold(spark):
-    """Pigeonhole banding guarantees EXACT recall at the hamming
-    threshold over distinct signatures: the operator's pair set must
-    equal a brute-force all-pairs popcount compressed to the documented
-    contract (rep-rep edges between distinct signatures + hamming-0
-    stars inside identical-signature groups), and reported hamming
-    distances must match an independent Python popcount."""
-    from ocr_pipeline_spark.operators.text_ops import (
-        simhash64,
-        simhash_near_dup_pairs,
-    )
-
-    base = (
-        "a long web article body about distributed joins and shuffle "
-        "planning with enough tokens to give the signature signal " * 4
-    )
-    rows = [
-        (1, base),
-        (2, base + " tail variation"),          # near-dup of 1
-        (3, base.replace("joins", "sketches")),  # near-dup of 1
-        (4, "completely unrelated text about baking sourdough bread "
-            "with rye flour and long fermentation times " * 4),
-        (5, base),                               # exact dup of 1
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    from ocr_pipeline_spark.operators.text_ops import simhash_kernel
-
-    sigs_df = df.mapInPandas(
-        simhash_kernel(), schema="doc_id long, text string, simhash long"
-    )
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_near_dup_pairs(sigs_df, "doc_id", max_hamming=3).collect()
-    }
-    # independent brute force on independently computed signatures,
-    # compressed to the rep contract: identical-sig groups -> min-id rep
-    # + star edges; rep-rep pairs exhaustive over distinct signatures
-    sigs = {i: simhash64(t) for i, t in rows}
-    rep = {}
-    for i in sorted(sigs):
-        rep.setdefault(sigs[i], i)
-    want = {}
-    for i in sorted(sigs):  # stars
-        if rep[sigs[i]] != i:
-            want[(rep[sigs[i]], i)] = 0
-    reps = sorted(rep.values())
-    for x in range(len(reps)):
-        for y in range(x + 1, len(reps)):
-            a, b = reps[x], reps[y]
-            h = bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1")
-            if h <= 3:
-                want[(a, b)] = h
-    assert got == want
-    assert (1, 5) in got and got[(1, 5)] == 0  # exact dup found
-
-
-def test_simhash_recursive_rebanding_exact_with_hot_band_bucket(spark):
-    """r3 VERDICT #4: a band bucket with >> max_bucket members must not
-    degrade recall — over-cap buckets re-band on their remaining bits
-    (pigeonhole applies inside the bucket), so the pair set stays EXACTLY
-    equal to brute force even when every doc shares one 16-bit band."""
-    import random
-
-    from ocr_pipeline_spark.operators.text_ops import simhash_near_dup_pairs
-
-    rng = random.Random(7)
-    shared_low = 0xBEEF  # every sig agrees on band 0 -> one 200-member bucket
-    sigs = {}
-    i = 0
-    while len(sigs) < 200:
-        s = (rng.getrandbits(48) << 16) | shared_low
-        if s not in sigs.values():
-            sigs[i] = s
-            i += 1
-    # plant near pairs: flip 1..3 bits in the high 48 of some sigs
-    base_ids = [0, 1, 2]
-    next_id = 200
-    for k, bid in enumerate(base_ids, start=1):
-        flipped = sigs[bid]
-        for bit in rng.sample(range(16, 64), k):
-            flipped ^= 1 << bit
-        sigs[next_id] = flipped
-        next_id += 1
-    rows = [(i, s - (1 << 64) if s >= (1 << 63) else s) for i, s in sigs.items()]
-    df = spark.createDataFrame(rows, "doc_id long, simhash long")
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_near_dup_pairs(
-            df, "doc_id", max_hamming=3, max_bucket=64
-        ).collect()
-    }
-    want = {}
-    ids = sorted(sigs)
-    for a_i in range(len(ids)):
-        for b_i in range(a_i + 1, len(ids)):
-            a, b = ids[a_i], ids[b_i]
-            h = bin(sigs[a] ^ sigs[b]).count("1")
-            if h <= 3:
-                want[(a, b)] = h
-    assert len(want) >= 3  # the planted pairs exist
-    assert got == want
-
-
-def test_simhash_residue_cluster_stays_connected(spark):
-    """Residue clusters (>max_bucket docs agreeing on >=61 bits) degrade
-    to hamming-0 stars + verified rep edges: every emitted pair must be
-    hamming-valid (soundness) and the whole near-dup cluster must stay
-    one connected component (component-level completeness)."""
-    from ocr_pipeline_spark.operators.text_ops import simhash_near_dup_pairs
-
-    sig_a = 0x123456789ABCDEF0
-    sig_b = sig_a ^ 1  # hamming 1 from sig_a
-    sigs = {i: sig_a for i in range(70)}
-    sigs.update({i: sig_b for i in range(70, 140)})
-    rows = [(i, s - (1 << 64) if s >= (1 << 63) else s) for i, s in sigs.items()]
-    df = spark.createDataFrame(rows, "doc_id long, simhash long")
-    pairs = simhash_near_dup_pairs(
-        df, "doc_id", max_hamming=3, max_bucket=64
-    ).collect()
-    # soundness: every edge hamming-correct and within threshold
-    for r in pairs:
-        h = bin(sigs[r.id_a] ^ sigs[r.id_b]).count("1")
-        assert r.hamming == h and h <= 3, (r.id_a, r.id_b, r.hamming, h)
-    # linear, not quadratic: 140 docs, full pair set would be 9730
-    assert len(pairs) < 600
-    # completeness at component level: union-find over emitted edges
-    parent = list(range(140))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in pairs:
-        parent[find(r.id_a)] = find(r.id_b)
-    assert len({find(i) for i in range(140)}) == 1
 
 
 def test_line_dedup_drops_cross_doc_paragraphs(spark):

@@ -16,16 +16,11 @@ SF_DIR = "/root/testdata/sf0.01"
 _NO_CROSS_QUERIES = [
     "minhash_dup_pairs",
     "near_dup_verified",
-    "fingerprint_overlap",
     "dedup_soft_weights",
     "ann_lsh_recall",
     "ann_ivf_recall",
-    "pack_sequences",
-    "contamination_check",
     "dup_spans",
     "dedup_apply_spans",
-    "stratified_sample",
-    "simhash_dup_pairs",
 ]
 
 
@@ -90,17 +85,6 @@ def test_lsh_near_dup_single_exchange(spark):
     assert n_exchanges <= 2, f"{n_exchanges} exchanges:\n{plan[:2000]}"
 
 
-def test_stratified_sample_single_exchange(spark):
-    """Stratified sampling is one stratum-key shuffle + an in-partition
-    top-k — never a second exchange or a join."""
-    import __spark_entry__ as entry_mod
-
-    plan = _plan(entry_mod.queries()["stratified_sample"](spark, SF_DIR))
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, f"{n_exchanges} exchanges:\n{plan[:2000]}"
-    assert "Join" not in plan
-
-
 def test_dedup_apply_spans_no_pair_expansion(spark):
     """Span removal keeps dup_spans' linear shape: gram counting is
     two-phase (partial agg + equi join back on the gram key) and the
@@ -142,17 +126,6 @@ def test_dup_spans_two_phase_gram_counting(spark):
     assert "ReusedExchange" in _plan(df), (
         "gram explode subtree duplicated — shared exchange not reused"
     )
-
-
-def test_contamination_gram_join_is_broadcast(spark):
-    """The eval-set side of the contamination gram join is small by
-    construction — the plan must broadcast it, never shuffle the
-    corpus gram stream into a sort-merge join."""
-    import __spark_entry__ as entry_mod
-
-    plan = _plan(entry_mod.queries()["contamination_check"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_aqe_splits_skewed_join_partitions(spark):
@@ -295,19 +268,6 @@ def test_pdf_layout_markdown_is_fused_map(spark):
     assert plan.count("MapInPandas") == 1, plan[:2000]
     assert "Join" not in plan, plan[:2000]
     assert "hashpartitioning" not in plan, plan[:2000]
-
-
-def test_host_pagerank_final_plan_reads_checkpoints(spark):
-    """host_pagerank's lineage-cut contract (the same one anchor_texts
-    pins): after the per-iteration localCheckpoints, the final plan
-    reads materialized frames — the link-extraction kernel must NOT
-    reappear (no MapInPandas), or every action would re-run it per
-    consumer branch."""
-    import __spark_entry__ as entry_mod
-
-    plan = _plan(entry_mod.queries()["host_pagerank"](spark, SF_DIR))
-    assert "MapInPandas" not in plan, plan[:2000]
-    assert "CartesianProduct" not in plan, plan[:2000]
 
 
 def test_cdx_index_is_narrow_plus_range_sort(spark):
@@ -572,7 +532,7 @@ def test_link_spam_single_kernel_on_host_frame(spark):
 def test_hits_step_no_kernel_rerun_no_cross(spark):
     """hits_step (X71): the checkpointed edge frame feeds nodes/auth/
     hub — the link kernel must not be duplicated per consumer branch
-    (same lineage-cut contract as host_pagerank/anchor_texts), and the
+    (same lineage-cut contract as anchor_texts), and the
     transpose-multiply is keyed joins + partial aggs, never a
     cartesian or a window."""
     import __spark_entry__ as entry_mod

@@ -42,7 +42,6 @@ def test_witness_rows_nontrivial():
         "assemble_documents": 1880,
         "extract_pdf_documents": 400,
         "pdf_page_explode": 1205,
-        "lang_simhash": 500,
         "page_metadata": 500,
         "fuzzy_decontamination": 5,  # the five planted %89 eval leaks
         "wet_export": 8,             # one row per content-addressed shard
@@ -50,6 +49,6 @@ def test_witness_rows_nontrivial():
     for name, n in sizes.items():
         df = pd.read_parquet(os.path.join(gen_witness.WITNESS_DIR, f"{name}.parquet"))
         assert len(df) == n, (name, len(df))
-    for name in ("simhash_dup_pairs", "minhash_dup_pairs", "near_dup_verified"):
+    for name in ("minhash_dup_pairs", "near_dup_verified"):
         df = pd.read_parquet(os.path.join(gen_witness.WITNESS_DIR, f"{name}.parquet"))
         assert len(df) > 0, name
