@@ -117,27 +117,45 @@ def test_lsh_signatures_deterministic(emb):
 
 
 # --- hot-bucket caps -----------------------------------------------------------
-def test_intra_bucket_pairs_star_overflow(spark):
-    """An over-cap bucket degrades to m-1 star edges (min id -> each
-    other member) instead of vanishing — linear output, component stays
-    connected — and the Observation audit trail counts it."""
+def test_intra_bucket_pairs_cap_and_observation(spark):
+    """The per-bucket cap bounds the expansion, and the Observation audit
+    trail counts every bucket and every over-cap one."""
     from pyspark.sql import Observation
 
     from ocr_pipeline_spark.operators.text_ops import intra_bucket_pairs
 
     rows = [
         ([1],),                         # singleton: no pairs
+        ([10, 11, 12],),                # 3 ids -> 3 pairs
+        ([list(range(100, 170))][0],),  # 70 ids > cap 64 -> m-1 pairs
+    ]
+    grouped = spark.createDataFrame(rows, "ids array<bigint>")
+    obs = Observation("buckets")
+    pairs = intra_bucket_pairs(grouped, max_bucket=64, observation=obs).collect()
+    # 3 full pairs + 69 star edges, never the 70*69/2 quadratic expansion
+    assert len(pairs) == 3 + 69
+    assert {(r.id_a, r.id_b) for r in pairs if r.id_a < 100} == {
+        (10, 11), (10, 12), (11, 12)
+    }
+    assert obs.get == {"total_buckets": 3, "overflow_buckets": 1}
+
+
+def test_intra_bucket_pairs_star_overflow(spark):
+    """An over-cap bucket degrades to m-1 star edges (min id -> each
+    other member) instead of vanishing — linear output, component stays
+    connected."""
+    from ocr_pipeline_spark.operators.text_ops import intra_bucket_pairs
+
+    rows = [
         ([10, 11, 12],),                # under cap: full 3 pairs
         ([list(range(100, 170))][0],),  # 70 ids > cap 64 -> star
     ]
     grouped = spark.createDataFrame(rows, "ids array<bigint>")
-    obs = Observation("buckets")
     pairs = {(r.id_a, r.id_b) for r in
-             intra_bucket_pairs(grouped, max_bucket=64, observation=obs).collect()}
+             intra_bucket_pairs(grouped, max_bucket=64).collect()}
     full = {(10, 11), (10, 12), (11, 12)}
     star = {(100, b) for b in range(101, 170)}
     assert pairs == full | star
-    assert obs.get == {"total_buckets": 3, "overflow_buckets": 1}
 
 
 def test_lsh_mirror_cluster_survives_hot_bucket(spark):
