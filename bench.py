@@ -6,12 +6,10 @@
      "docs_per_sec": ..., "docs_per_sec_maponly": ...,
      "docs_per_sec_e2e_write": ...}
 
-Run detail (CPUs, page and char counts, pre-leg idle fractions, query
-reruns) goes to BENCH/bench_detail.json, not to stdout.
-
 Headline: end-to-end extraction (docs/sec) over a deterministic
 synthetic pages table sized by SF (materialized to parquet once and
-reused), plus every queries() entry at $SPARK_GRAFT_SF_DIR.
+reused), plus every queries() entry at $SPARK_GRAFT_SF_DIR.  Each leg
+and query is timed best-of-2 after a warm-up.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
@@ -33,47 +31,10 @@ def _sf_from_dir(sf_dir: str) -> float:
     return float(m.group(1)) if m else 0.1
 
 
-def _cpu_idle_frac(window: float = 0.5) -> float:
-    """Machine-condition probe: fraction of CPU time the box spent idle
-    over a short window in which the bench itself runs nothing.  This
-    box suffers transient co-tenant bursts (BENCH/BASELINE.md) that can
-    halve a leg's measured rate; sampling /proc/stat idle immediately
-    before a leg stamps a weather report into the artifact so a poisoned
-    number is recognizable, and lets the harness re-run a leg that
-    started under load."""
-    def snap():
-        with open("/proc/stat") as f:
-            vals = [int(x) for x in f.readline().split()[1:]]
-        return vals[3] + vals[4], sum(vals)  # idle+iowait, total
-
-    i0, t0 = snap()
-    time.sleep(window)
-    i1, t1 = snap()
-    return round((i1 - i0) / max(1, t1 - t0), 3)
-
-
-def _probe_idle(label: str, idle_fracs: dict, threshold: float = 0.85,
-                retries: int = 2) -> float:
-    """Sample pre-leg idle; if a co-tenant burst is in progress, wait it
-    out (up to `retries` short waits) before letting the leg start.
-    Records the final sample under `label`."""
-    frac = _cpu_idle_frac()
-    for _ in range(retries):
-        if frac >= threshold:
-            break
-        time.sleep(4.0)
-        frac = _cpu_idle_frac()
-    idle_fracs[label] = frac
-    return frac
-
-
-DETAIL_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH", "bench_detail.json"
-)
-
 # pages per unit SF: sf0.1 -> 400k synthetic pages (~650 MB parquet)
 PAGES_PER_SF = 4_000_000
 SEED = 42
+_HASH_MOD = 1 << 40  # sum of 40-bit row hashes cannot overflow a long
 
 
 def materialize_pages(spark, n_pages: int) -> str:
@@ -85,6 +46,28 @@ def materialize_pages(spark, n_pages: int) -> str:
 
         generate_pages_df(spark, n_pages, SEED).write.mode("overwrite").parquet(path)
     return path
+
+
+def digest(df):
+    """Order-independent (n, d): row count and digest over every column.
+
+    A bare count("*") lets Catalyst prune every column but the
+    repartition keys, so the salted exchange would move urls, not
+    extracted rows."""
+    from pyspark.sql import functions as F
+
+    row_hash = F.pmod(F.xxhash64(*df.columns), F.lit(_HASH_MOD))
+    return df.agg(F.count("*").alias("n"), F.sum(row_hash).alias("d"))
+
+
+def best_of_2(fn):
+    """(seconds, result) of the faster of two runs."""
+    runs = []
+    for _ in range(2):
+        t0 = time.time()
+        result = fn()
+        runs.append((time.time() - t0, result))
+    return min(runs, key=lambda r: r[0])
 
 
 def main() -> None:
@@ -105,8 +88,6 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     headline: dict[str, float] = {}  # docs/s, on the stdout line
-    idle_fracs: dict[str, float] = {}
-    detail: dict = {"cpus": cpus, "idle_frac": idle_fracs}  # to DETAIL_PATH
 
     pages_path = materialize_pages(spark, n_pages)
 
@@ -118,40 +99,19 @@ def main() -> None:
     ).agg(F.count("*")).collect()
 
     # --- headline: end-to-end extraction ---------------------------------
-    # best-of-2 per plan: transient co-tenant bursts on this box can halve
-    # a single run's rate (see BENCH/BASELINE.md); the best run measures
-    # the job, the worst measures the neighbor
-    def _timed_extract(co_locate: bool):
-        t0 = time.time()
-        agg = run_extraction(
+    def _extract(co_locate: bool) -> int:
+        return digest(run_extraction(
             spark, spark.read.parquet(pages_path), describe=True,
             num_partitions=cpus * 2, co_locate_hosts=co_locate,
-        ).agg(
-            F.count("*").alias("n"), F.sum("n_chars").alias("chars")
-        ).collect()[0]
-        return time.time() - t0, agg
+        )).collect()[0]["n"]
 
     # (a) north-rule plan: salted host co-location shuffle after the kernel
-    # n_runs: best-of-2, plus one extra run when the pre-leg idle probe
-    # says a co-tenant burst survived the wait — the best run measures
-    # the job, the worst measures the neighbor
-    def _n_runs(idle: float) -> int:
-        return 3 if idle < 0.85 else 2
-
-    idle = _probe_idle("extract_pages", idle_fracs)
-    t_extract, agg = min(
-        (_timed_extract(True) for _ in range(_n_runs(idle))), key=lambda r: r[0]
-    )
+    t_extract, n_out = best_of_2(lambda: _extract(True))
     timings["extract_pages"] = round(t_extract, 3)
-    headline["docs_per_sec"] = round(agg["n"] / t_extract, 1)
-    detail["n_pages"] = int(agg["n"])
-    detail["chars_out"] = int(agg["chars"])
+    headline["docs_per_sec"] = round(n_out / t_extract, 1)
 
     # (b) map-only fast path (no input shuffle) — byte-identical output
-    idle = _probe_idle("extract_pages_maponly", idle_fracs)
-    t_map, _ = min(
-        (_timed_extract(False) for _ in range(_n_runs(idle))), key=lambda r: r[0]
-    )
+    t_map, _ = best_of_2(lambda: _extract(False))
     timings["extract_pages_maponly"] = round(t_map, 3)
     headline["docs_per_sec_maponly"] = round(n_pages / t_map, 1)
 
@@ -162,20 +122,17 @@ def main() -> None:
 
     from ocr_pipeline_spark.plans.job import run_pipeline
 
-    def _timed_pipeline() -> float:
+    def _pipeline() -> None:
         wh = tempfile.mkdtemp(prefix="bench_wh_")
         try:
-            t0 = time.time()
             run_pipeline(
                 spark, spark.read.parquet(pages_path), wh, run_id="bench",
                 describe=True, n_buckets=32,
             )
-            return time.time() - t0
         finally:
             shutil.rmtree(wh, ignore_errors=True)
 
-    idle = _probe_idle("extract_pipeline_write", idle_fracs)
-    t_pipe = min(_timed_pipeline() for _ in range(_n_runs(idle)))
+    t_pipe, _ = best_of_2(_pipeline)
     timings["extract_pipeline_write"] = round(t_pipe, 3)
     headline["docs_per_sec_e2e_write"] = round(n_pages / t_pipe, 1)
 
@@ -189,50 +146,11 @@ def main() -> None:
             bench_queries = [
                 q for q in bench_queries if q not in ("link_spam", "hits_step")
             ]
-        # reference times from the last clean same-sf campaign (committed
-        # as bench_ref.json): a best-of-N that still exceeds the clean
-        # reference by >1.5x is treated as co-tenant-poisoned and re-run
-        ref_times: dict[str, float] = {}
-        ref_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "bench_ref.json")
-        if os.path.exists(ref_path):
-            with open(ref_path) as fh:
-                ref = json.load(fh)
-            # times from another scale or CPU count are no reference
-            if ref.get("sf") == sf and ref.get("cpus") == cpus:
-                ref_times = ref.get("queries", {})
-        # per-BLOCK idle stamps: BENCH_r04 probed idle only before/after
-        # the whole ~70-query suite, so a mid-suite co-tenant burst
-        # inflated the back half invisibly (judge re-measured dup_spans
-        # at 1.43s vs the artifact's 6.56s).  A stamp every BLOCK queries
-        # makes a poisoned stretch recognizable and waits bursts out.
-        BLOCK = 10
-        n_extra_runs = 0
-        for qi, name in enumerate(bench_queries):
-            if qi % BLOCK == 0:
-                _probe_idle(f"query_block_{qi // BLOCK}", idle_fracs)
-
-            def _timed_query() -> float:
-                t0 = time.time()
-                qs[name](spark, sf_dir).agg(F.count("*")).collect()
-                return time.time() - t0
-
-            # best-of-2 baseline (single-session drift, BENCH/BASELINE.md),
-            # plus a third run when the two samples disagree >1.5x or the
-            # best still exceeds the clean reference by >1.5x — both are
-            # co-tenant signatures, not plan costs
-            runs = [_timed_query() for _ in range(2)]
-            suspicious = max(runs) > 1.5 * min(runs) or (
-                name in ref_times
-                and min(runs) > 1.5 * max(ref_times[name], 0.05)
+        for name in bench_queries:
+            t_query, _ = best_of_2(
+                lambda: qs[name](spark, sf_dir).agg(F.count("*")).collect()
             )
-            if suspicious:
-                _probe_idle(f"rerun_{name}", idle_fracs)
-                runs.append(_timed_query())
-                n_extra_runs += 1
-            timings[name] = round(min(runs), 3)
-        detail["bench_rerun_count"] = n_extra_runs
-        idle_fracs["query_suite_post"] = _cpu_idle_frac()
+            timings[name] = round(t_query, 3)
 
     total = round(sum(timings.values()), 3)
     result = {
@@ -244,9 +162,6 @@ def main() -> None:
         **headline,
     }
     spark.stop()
-    os.makedirs(os.path.dirname(DETAIL_PATH), exist_ok=True)
-    with open(DETAIL_PATH, "w") as fh:
-        json.dump(detail, fh, indent=1, sort_keys=True)
     print(json.dumps(result, separators=(",", ":")))
 
 

@@ -4,7 +4,7 @@ Everything in this subpackage is a deterministic pure function so that
 the Spark job's per-url output is byte-identical to a single-process
 loop regardless of partitioning, batch boundaries, or parallelism
 (the graft's analog of the reference's temperature=0 / seed=0 pinning,
-/root/reference/src/qwen_processor.py:58,111).
+reference src/qwen_processor.py:58,111).
 """
 
 from ocr_pipeline_spark.kernel.cleaning import clean_text

@@ -1,7 +1,7 @@
 """Per-document ordered assembly (A3/A4).
 
 Graft of the reference's ``generate_markdown`` + ``merge_page_boundaries``
-(/root/reference/src/stage2_ocr.py:474-629).  For the HTML corpus a
+(reference src/stage2_ocr.py:474-629).  For the HTML corpus a
 document is a single page and assembly degenerates to identity, but the
 multi-page path (PDF-style documents split across rows with a page
 number) ships and is exercised by tests: pages are sorted by page

@@ -1,7 +1,7 @@
 """Block segmentation + markdown rendering over the DOM tree.
 
 The graft of the reference's per-page extraction kernel
-(/root/reference/src/stage2_ocr_worker.py:54-144): where the reference
+(reference src/stage2_ocr_worker.py:54-144): where the reference
 sends a page image through an OCR model, we walk the DOM of the page's
 HTML, strip boilerplate by structural + text-density/link-density
 heuristics (Readability/Boilerpipe-style), and render the surviving

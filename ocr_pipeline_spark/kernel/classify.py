@@ -1,7 +1,7 @@
 """Page classification — the graft of the reference's Stage 1 contract.
 
 Output record shape and taxonomy follow the reference's prompt contract
-and parser normalization (/root/reference/src/qwen_processor.py:34-56,
+and parser normalization (reference src/qwen_processor.py:34-56,
 196-241): ``type`` is whitelisted to
 {text, table, diagram, flowchart, figure, mixed, document}, confidence
 is a float defaulting to 0.5, and a ``method`` stamp identifies the
@@ -116,7 +116,7 @@ def classify_stats(stats: PageStats) -> dict:
 
 def normalize_classification(record: dict | None) -> dict:
     """Defensive normalization — the graft of the reference's response
-    parser (/root/reference/src/qwen_processor.py:196-241): whitelist the
+    parser (reference src/qwen_processor.py:196-241): whitelist the
     type (else 'mixed'), coerce confidence to float (else 0.5)."""
     record = dict(record or {})
     page_type = str(record.get("type", "mixed")).lower()
@@ -132,7 +132,7 @@ def normalize_classification(record: dict | None) -> dict:
 
 
 # Extraction-strategy dispatch — the graft of the reference's prompt
-# routing (/root/reference/src/stage2_ocr_worker.py:35-47): sub-0.7
+# routing (reference src/stage2_ocr_worker.py:35-47): sub-0.7
 # confidence always falls back to the safe 'mixed' strategy.
 CONFIDENCE_FLOOR = 0.7
 

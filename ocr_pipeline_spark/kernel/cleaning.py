@@ -1,7 +1,7 @@
 """The deterministic text-cleaning operator chain (C1–C9).
 
 Behavioral parity target: the reference's ``clean_result`` chain
-(/root/reference/src/stage2_ocr.py:184-399).  The *order* of the steps
+(reference src/stage2_ocr.py:184-399).  The *order* of the steps
 and every threshold below are observable semantics and are preserved
 exactly; the implementation is our own.
 

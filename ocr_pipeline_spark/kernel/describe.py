@@ -1,5 +1,5 @@
 """Deterministic diagram description — the graft of the reference's
-Stage 1.5 (/root/reference/src/qwen_processor.py:290-347).
+Stage 1.5 (reference src/qwen_processor.py:290-347).
 
 The reference batch-prompts a VLM for a prose description of each
 diagram page; here the "description" is a pure function of the

@@ -2,7 +2,7 @@
 stdlib ``html.parser`` as its fallback.
 
 This replaces the reference's page-image rendering front end
-(/root/reference/src/stage2_ocr.py:406-442): for web pages the "page"
+(reference src/stage2_ocr.py:406-442): for web pages the "page"
 is the HTML byte blob itself, so the tokenizer is the scan operator.
 
 Design constraints:

@@ -2,7 +2,7 @@
 
 The north-rule layout-parse path: the reference renders PDF pages to
 images and lets the OCR model linearize layout implicitly
-(/root/reference/src/stage2_ocr.py:406-442 feeds page images to the
+(reference src/stage2_ocr.py:406-442 feeds page images to the
 model); codec-free, the graft recovers reading order EXPLICITLY with
 the classic recursive XY-cut (Nagy & Seth 1984): alternately split the
 page along the widest horizontal whitespace band (top block before

@@ -1,7 +1,7 @@
 """Outlink extraction + URL canonicalization — the link-graph source.
 
 The reference pipeline has no link stage (its corpus is PDFs —
-/root/reference/src/stage2_ocr.py:406-442 ingests page images); this
+reference src/stage2_ocr.py:406-442 ingests page images); this
 module extends the extraction kernel for the Common-Crawl-style web
 corpus the engine targets, where host-graph construction from page
 outlinks is a standard corpus-curation input (crawl frontier scoring,

@@ -1,7 +1,7 @@
 """Per-document assembly operator (A3/A4 as a grouped-map kernel).
 
 Graft of the reference's document assembly
-(/root/reference/src/stage2_ocr.py:474-605): pages of one document are
+(reference src/stage2_ocr.py:474-605): pages of one document are
 an ordered fold (boundary-fragment carry + header + separators), so in
 Spark it is ``groupBy(doc_key).applyInPandas`` — the one place grouped
 state is genuinely required.  The shuffle key is the document key;

@@ -1,7 +1,7 @@
 """Distributed BPE tokenizer training (X39).
 
 The reference has no tokenizer stage (its corpus is page images —
-/root/reference/src/stage2_ocr.py:406-442 ingests rendered PDFs); this
+reference src/stage2_ocr.py:406-442 ingests rendered PDFs); this
 module extends the graft's training-data surface (SURVEY.md §2.8) with
 the tokenizer-training step every LLM data pipeline runs over its
 corpus.

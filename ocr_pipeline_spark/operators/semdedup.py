@@ -11,7 +11,7 @@ through semantic deduplication" — the published pipeline shape:
      members, kept or not).
 
 The reference repo has no semantic-dedup stage (its corpus is page
-images — /root/reference/src/stage2_ocr.py); this extends the graft's
+images — reference src/stage2_ocr.py); this extends the graft's
 training-data surface (SURVEY.md §2.8) with the embedding-level
 counterpart of MinHash dedup.
 

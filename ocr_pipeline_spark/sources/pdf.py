@@ -1,7 +1,7 @@
 """PDF payload → page rows (the S2 page-explode graft).
 
 Reference analog: ``pdf_to_page_images``
-(/root/reference/src/stage2_ocr.py:406-442) opens a PDF with PyMuPDF
+(reference src/stage2_ocr.py:406-442) opens a PDF with PyMuPDF
 and emits one rendered image per page.  Spark-first shape: a pandas-UDF
 splitter turns each document's ``binary`` payload into
 ``ARRAY<STRUCT<page_num,content>>`` and ``explode()`` turns documents

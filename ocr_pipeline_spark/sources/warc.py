@@ -1,7 +1,7 @@
 """WARC (Web ARChive, ISO 28500) source: the Common Crawl container
 format (X44).
 
-The reference ingests rendered PDFs (/root/reference/src/stage2_ocr.py:
+The reference ingests rendered PDFs (reference src/stage2_ocr.py:
 406-442); this graft's north input is Common-Crawl-style web pages, and
 WARC is the wire format those actually arrive in — so the source
 surface gains a real WARC record reader: split a WARC file (plain or

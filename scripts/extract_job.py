@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """spark-submit entrypoint — the graft of the reference's CLI contract
-(/root/reference/src/ocr_pipeline.py:386-455, entrypoint.py:9-45).
+(reference src/ocr_pipeline.py:386-455, entrypoint.py:9-45).
 
     spark-submit --py-files dist/ocr_pipeline_spark.zip \
         scripts/extract_job.py \

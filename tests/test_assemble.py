@@ -1,5 +1,5 @@
 """A3 boundary merge + A4 document assembly tests
-(semantics from /root/reference/src/stage2_ocr.py:474-629)."""
+(semantics from reference src/stage2_ocr.py:474-629)."""
 
 from ocr_pipeline_spark.kernel.assemble import (
     assemble_document,

@@ -1,7 +1,7 @@
 """Unit tests for the C1–C9 cleaning chain.
 
 Each threshold/branch asserted here is an observable semantic of the
-reference chain (/root/reference/src/stage2_ocr.py:184-399) that the
+reference chain (reference src/stage2_ocr.py:184-399) that the
 graft preserves exactly.
 """
 
