@@ -98,14 +98,44 @@ def frame_tables(text: str) -> str:
 
 
 # --- C5 ---------------------------------------------------------------
-_BULLET_DOT_RE = re.compile(r"^(\s*)•\s*", re.MULTILINE)
-_BULLET_RING_RE = re.compile(r"^(\s*)○\s*", re.MULTILINE)
+def _replace_bullets(text: str, glyph: str, dash: str) -> str:
+    r"""``re.sub(r"^(\s*)GLYPH\s*", r"\1DASH", text, flags=re.MULTILINE)``
+    without trying a match at every character (tests/oracle_kernel.py).
+
+    A glyph and the whitespace run after it become `dash` iff a line
+    starts between it and `lo`, the later of the start of the whitespace
+    run ending at the glyph and the end of the previous replacement
+    (where the regex resumes).  So in ``"•\n  • x"`` the first match eats
+    the second line's indent and the second glyph stays: ``"- • x"``.
+    ``\s`` is `str.isspace()`.
+    """
+    n = len(text)
+    out: list[str] = []
+    last = 0  # end of the previous replacement
+    i = text.find(glyph)
+    while i != -1:
+        lo = i
+        while lo > last and text[lo - 1].isspace():
+            lo -= 1
+        if lo == 0 or "\n" in text[lo - 1 : i]:
+            j = i + 1
+            while j < n and text[j].isspace():
+                j += 1
+            out.append(text[last:i])
+            out.append(dash)
+            last = j
+            i = text.find(glyph, j)
+        else:
+            i = text.find(glyph, i + 1)
+    out.append(text[last:])
+    return "".join(out)
 
 
 def normalize_bullets(text: str) -> str:
-    text = _BULLET_DOT_RE.sub(r"\1- ", text)
-    text = _BULLET_RING_RE.sub(r"\1  - ", text)
-    return text
+    """Line-leading ``•`` -> ``- `` and ``○`` -> ``  - `` (ref :234-236),
+    in that order: the ``○`` pass reads the ``•`` pass's output."""
+    text = _replace_bullets(text, "•", "- ")
+    return _replace_bullets(text, "○", "  - ")
 
 
 # --- C6 ---------------------------------------------------------------

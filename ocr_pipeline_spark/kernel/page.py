@@ -59,7 +59,10 @@ class PageResult:
 
 
 # --- span computation ---------------------------------------------------
-_LIST_LINE = re.compile(r"^(?:[-*] |\d+\. )")
+# matched at a segment start with `pattern.match(text, i, end)`, which
+# does not treat `i` as ``^``, so the patterns carry no anchor
+_LIST_ITEM = re.compile(r"[-*] |\d+\. ")
+_RULE = re.compile(r"\s*---\s*")  # fullmatch == `segment.strip() == "---"`
 
 
 # first character -> (prefix, kind) for the kinds a prefix decides
@@ -72,18 +75,22 @@ _PREFIX_KINDS = {
 }
 
 
-def _segment_kind(segment: str) -> str:
-    head = segment[:1]
+def _segment_kind(text: str, i: int, end: int) -> str:
+    """Kind of the segment ``text[i:end]``, classified in place: a slice
+    would copy every segment of the page once more."""
+    head = text[i]
     prefix_kind = _PREFIX_KINDS.get(head)
-    if prefix_kind is not None and segment.startswith(prefix_kind[0]):
+    if prefix_kind is not None and text.startswith(prefix_kind[0], i, end):
         return prefix_kind[1]
     # isdigit() admits every character \d does
-    if (head == "-" or head == "*" or head.isdigit()) and _LIST_LINE.match(segment):
+    if (head == "-" or head == "*" or head.isdigit()) and _LIST_ITEM.match(
+        text, i, end
+    ):
         return "list"
-    line_end = segment.find("\n")
-    if segment.count("|", 0, line_end if line_end != -1 else len(segment)) >= 2:
+    line_end = text.find("\n", i, end)
+    if text.count("|", i, line_end if line_end != -1 else end) >= 2:
         return "table"
-    if segment.strip() == "---":
+    if _RULE.fullmatch(text, i, end):
         return "rule"
     return "paragraph"
 
@@ -103,8 +110,9 @@ def compute_spans(markdown: str) -> list[dict]:
         else:
             nxt = markdown.find("\n\n", i)
             end = nxt if nxt != -1 else n
-        segment = markdown[i:end]
-        spans.append({"block_type": _segment_kind(segment), "start": i, "end": end})
+        spans.append(
+            {"block_type": _segment_kind(markdown, i, end), "start": i, "end": end}
+        )
         i = end
     return spans
 

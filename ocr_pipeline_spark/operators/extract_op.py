@@ -16,6 +16,8 @@ reference splits these stages only to keep GPU models resident
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -50,6 +52,25 @@ def _cls_cell(cls: dict) -> dict:
 
 
 # --- kernel ------------------------------------------------------------------
+def drop_zip_finders() -> None:
+    """Forget this process's cached zip finders.
+
+    A PySpark worker calls `importlib.invalidate_caches()` at the start
+    of every task, and each cached `zipimport.zipimporter` then re-reads
+    its whole archive directory in pure Python: pyspark.zip (1,328
+    entries) and the `--py-files` zip, once for the archive root and once
+    per package imported from it.  With no zip finder cached there is
+    nothing to reload.  A later import from a zip rebuilds its finder
+    from `zipimport._zip_directory_cache`, which is left alone, so the
+    archive is not read again.  Given up: a finder rebuilt that way does
+    not notice an archive rewritten in place, at the same path, after its
+    first import.  Other finders are left alone; `FileFinder`
+    invalidation is already lazy."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+
+
 def fused_extract_kernel(describe: bool, counters: dict | None = None):
     """mapInPandas kernel: pages(url, warc_ts, html, lang) -> EXTRACTED_DDL.
 
@@ -61,6 +82,9 @@ def fused_extract_kernel(describe: bool, counters: dict | None = None):
     lineage (the manifest/metrics rows stay authoritative)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the worker reloads its finders before it unpickles this UDF, so
+        # this task's own imports are done; the next task's reload is free
+        drop_zip_finders()
         for pdf in batches:
             # columnar construction: ~2x cheaper than row tuples through
             # pandas object inference at this row width

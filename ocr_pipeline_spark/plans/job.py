@@ -194,10 +194,13 @@ def run_pipeline(
     duplicates and no missing urls.  `max_chunks` exists for the
     kill/resume tests.
 
-    Per chunk: scan → fused kernel (map-only) → ONE repartition by
-    bucket → write → lineage metrics from a column-pruned re-read of
-    the files just committed (they describe exactly the bytes on disk)
-    → manifest.
+    Per chunk: scan of the whole input → filter to the chunk's buckets
+    → fused kernel (map-only) → ONE repartition by bucket → write →
+    lineage metrics from a column-pruned re-read of the files just
+    committed (they describe exactly the bytes on disk) → manifest.
+    `pkey` is computed after the scan, so the filter prunes no file:
+    every chunk reads every input row, and a run of k chunks scans the
+    input k times.
 
     `co_locate_hosts` and `metrics_mode` accept only their defaults
     (True and "committed") and raise ValueError otherwise: the
@@ -226,10 +229,12 @@ def run_pipeline(
             "counters": {name: 0 for name in counters},
         }
 
-    # pkey is a pure function of warc_ts, so chunk selection happens on
-    # the INPUT: on a bucket(warc_ts)-partitioned table this is partition
-    # pruning at the scan — a resumed run never re-extracts completed
-    # buckets (SURVEY.md §4.4).
+    # pkey is a pure function of warc_ts, so chunk selection filters the
+    # INPUT rows before the kernel: a resumed run never re-extracts
+    # completed buckets (SURVEY.md §4.4).  The filter runs after the
+    # scan, on a column the scan does not have, so it prunes no file; an
+    # Iceberg table partitioned by bucket(warc_ts) would not help either,
+    # since Iceberg's bucket() is murmur3, not this xxhash64.
     bucketed_pages = with_bucket(pages, n_buckets)
 
     chunk = chunk_size or len(pending)
