@@ -25,6 +25,8 @@ Layout:
                shuffle, checkpoint/resume, lineage metrics).
     fixtures/  deterministic synthetic `pages` generator (seeded; Zipf
                host skew; page-taxonomy template library).
+    queries/   the driver's query families, each query next to its
+               DuckDB oracle; only __spark_entry__.py and tests import it.
 """
 
 __version__ = "0.1.0"

@@ -28,7 +28,7 @@ def exact_dup_key(col: Column) -> Column:
 # C0 controls except \t\n\r, plus DEL — the characters a curation
 # normalize pass strips (they break tokenizers and leak from broken
 # charset transcodes); kept in sync with the DuckDB oracle's RE2 class
-# in __spark_entry__.oracle_sql()["text_normalize"]
+# in queries/extraction.TEXT_NORMALIZE_SQL
 _CTRL_RE = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]")
 
 

@@ -16,8 +16,9 @@ Decode strategy, chosen by whether PyMuPDF imports:
     stream(s), found by a structural parse: object scan, page-tree
     ordering via /Kids, /Contents dereference and Flate inflate via
     stdlib zlib.  The result is deterministic and testable end to end,
-    and `page_text` extracts the text show operators from it, so PDF
-    pages flow through the same text pipeline as html pages.
+    and `page_text_xy` extracts the text show operators from it in
+    reading order, so PDF pages flow through the same text pipeline as
+    html pages.
 """
 
 from __future__ import annotations
@@ -177,8 +178,8 @@ def split_pdf_pages_text(data: bytes | None) -> list[dict]:
     shape of output in both environments instead of silently feeding
     PNG bytes to the content-stream text extractor on a real cluster
     (round-2 ADVICE item).  Under PyMuPDF the text is page.get_text()
-    (real glyph placement); without codecs it is page_text() over the
-    structural content streams."""
+    (real glyph placement); without codecs it is page_text_xy() over
+    the structural content streams."""
     if not data or data[:5] != b"%PDF-":
         return []
     if _HAVE_MUPDF:  # pragma: no cover - real-cluster path
@@ -195,8 +196,6 @@ def split_pdf_pages_text(data: bytes | None) -> list[dict]:
     ]
 
 
-_TJ_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)\)\s*(?:Tj|')")
-_TJARR_RE = re.compile(rb"\[((?:[^\[\]\\]|\\.)*)\]\s*TJ", re.S)
 _STR_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)\)")
 _ESC = {
     b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
@@ -227,26 +226,6 @@ def _unescape(s: bytes) -> bytes:
         out += c
         i += 1
     return bytes(out)
-
-
-def page_text(content: bytes | None) -> str:
-    """Text show operators (Tj / ' / TJ) of a content stream, in stream
-    order, newline-joined — the codec-free analog of the reference's
-    per-page OCR text."""
-    if not content:
-        return ""
-    pieces: list[tuple[int, bytes]] = []
-    for m in _TJ_RE.finditer(content):
-        pieces.append((m.start(), _unescape(m.group(1))))
-    for m in _TJARR_RE.finditer(content):
-        joined = b"".join(
-            _unescape(s.group(1)) for s in _STR_RE.finditer(m.group(1))
-        )
-        pieces.append((m.start(), joined))
-    pieces.sort()
-    return "\n".join(
-        p.decode("utf-8", "replace") for _, p in pieces if p
-    )
 
 
 _NUM = rb"[-+]?(?:\d+\.?\d*|\.\d+)"
@@ -317,14 +296,15 @@ def page_text_blocks(
 
 
 def page_text_xy(content: bytes | None) -> str:
-    """page_text with XY-cut reading order (kernel/layout.py): text
+    """Page text in XY-cut reading order (kernel/layout.py): text
     blocks are re-linearized by recursive whitespace-band cuts, so a
     two-column page reads title -> left column -> right column even
     when the content stream interleaves the columns.  Falls back to
     stream order when the stream carries no positioning diversity —
     on linear single-column streams the XY-cut order IS stream order,
-    so this is a strict generalization (equality with page_text pinned
-    over the whole fixture corpus in tests/test_layout.py)."""
+    so this is a strict generalization of stream order (equality with
+    the stream-order oracle tests/oracle_pdf.page_text is pinned over
+    the whole fixture corpus in tests/test_layout.py)."""
     from ocr_pipeline_spark.kernel.layout import xy_cut
 
     blocks = page_text_blocks(content)

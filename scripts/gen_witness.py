@@ -8,8 +8,10 @@ tests/test_spark_job.py proves the distributed output byte-equals this
 loop, so the witness is an independent ground truth for the driver's
 hash compare, not an echo of the Spark plan.
 
-Witnesses are pinned to the driver's correctness scale (sf0.01, the
-same constants the queries derive from that sf_dir).  Regenerate with
+Witnesses over the documents table are pinned to the driver's
+correctness scale (sf0.01).  Witnesses over generated input use the
+queries' own fixed sizes (WITNESS_PAGES, WITNESS_PDFS), so those
+oracles hold at every scale.  Regenerate with
 
     python scripts/gen_witness.py
 
@@ -38,6 +40,11 @@ from ocr_pipeline_spark.kernel.page import (  # noqa: E402
     extract_page,
     page_num_from_url,
 )
+from ocr_pipeline_spark.queries import (  # noqa: E402
+    SEED,
+    WITNESS_PAGES,
+    WITNESS_PDFS,
+)
 from ocr_pipeline_spark.sources.pdf import (  # noqa: E402
     page_text_xy,
     split_pdf_pages,
@@ -49,10 +56,6 @@ WITNESS_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "tests", "fixtures", "witness",
 )
-SEED = 42
-# the sf-derived sizes the queries compute from sf_dir at sf0.01
-N_ASSEMBLE_PAGES = 2000   # max(500, 0.01 * 200_000)
-N_PDF_DOCS = 400          # min(max(100, 0.01 * 40_000), 2000)
 
 _PAGE_SUFFIX = re.compile(r"/page-\d+/?$")
 
@@ -82,7 +85,7 @@ def _assemble(per_doc: dict[str, list[dict]]) -> pd.DataFrame:
 
 
 def witness_extract_documents() -> pd.DataFrame:
-    """Twin of _q_extract_documents at sf0.01: documents -> wrapped
+    """Twin of the extract_documents query at sf0.01: documents -> wrapped
     pages -> per-page kernel; columns (url, page_type, method,
     markdown, n_chars)."""
     docs = pd.read_parquet(
@@ -105,11 +108,11 @@ def witness_extract_documents() -> pd.DataFrame:
 
 
 def witness_assemble_documents() -> pd.DataFrame:
-    """Twin of _q_assemble_documents at sf0.01: synthetic pages corpus
+    """Twin of the assemble_documents query: synthetic pages corpus
     -> kernel -> per-document ordered assembly; columns (doc_key,
     n_pages, n_figures, n_chars)."""
     per_doc: dict[str, list[dict]] = {}
-    for p in generate_rows(N_ASSEMBLE_PAGES, SEED):
+    for p in generate_rows(WITNESS_PAGES, SEED):
         r = extract_page(p["html"], page_num_from_url(p["url"]), describe=True)
         doc_key = _PAGE_SUFFIX.sub("", p["url"])
         per_doc.setdefault(doc_key, []).append(
@@ -124,14 +127,14 @@ def witness_assemble_documents() -> pd.DataFrame:
 
 
 def witness_extract_pdf_documents() -> pd.DataFrame:
-    """Twin of _q_extract_pdf_documents at sf0.01: PDF corpus ->
+    """Twin of the extract_pdf_documents query: PDF corpus ->
     structural text split -> html wrap (sources/pdf.py:pdf_to_pages_df
     convention) -> kernel -> assembly; columns (doc_key, n_pages,
     n_chars)."""
     import html as _html
 
     per_doc: dict[str, list[dict]] = {}
-    for i in range(N_PDF_DOCS):
+    for i in range(WITNESS_PDFS):
         url, payload, _ = doc_pdf(SEED, i)
         for page in split_pdf_pages_text(payload):
             body = "".join(
@@ -155,11 +158,11 @@ def witness_extract_pdf_documents() -> pd.DataFrame:
 
 
 def witness_pdf_page_explode() -> pd.DataFrame:
-    """Twin of _q_pdf_page_explode at sf0.01: PDF corpus -> structural
+    """Twin of the pdf_page_explode query: PDF corpus -> structural
     page split -> content-stream text; columns (url, page_num, n_bytes,
     text)."""
     rows = []
-    for i in range(N_PDF_DOCS):
+    for i in range(WITNESS_PDFS):
         url, payload, _ = doc_pdf(SEED, i)
         for page in split_pdf_pages(payload):
             content = page["content"] or b""
@@ -213,7 +216,7 @@ def _minhash_candidate_pairs(sigs: dict[int, list[int]], max_bucket: int = 64):
 
 
 def witness_minhash_dup_pairs() -> pd.DataFrame:
-    """Twin of _q_minhash_dup_pairs: single-process minhash signatures
+    """Twin of the minhash_dup_pairs query: single-process minhash signatures
     + band-bucket pair generation; columns (id_a, id_b)."""
     from ocr_pipeline_spark.operators.text_ops import minhash_signature
 
@@ -227,7 +230,7 @@ def witness_minhash_dup_pairs() -> pd.DataFrame:
 
 
 def witness_near_dup_verified() -> pd.DataFrame:
-    """Twin of _q_near_dup_verified: minhash-LSH candidates verified by
+    """Twin of the near_dup_verified query: minhash-LSH candidates verified by
     char-3-gram Jaccard at threshold 0.3; columns (id_a, id_b,
     jaccard).  round() here and in the Arrow kernel are the same
     CPython round on the same double — bit-identical."""
@@ -249,14 +252,14 @@ def witness_near_dup_verified() -> pd.DataFrame:
 
 def witness_host_link_graph() -> pd.DataFrame:
     """X31 witness: single-process outlink loop over the cross-linked
-    corpus at the sf0.01 query size (n=2000, same formula as
-    _q_host_link_graph)."""
+    corpus at the queries' WITNESS_PAGES size (pagerank_step,
+    link_spam and hits_step read it)."""
     from collections import Counter
 
     from ocr_pipeline_spark.kernel.links import extract_outlinks, host_of
 
     counts: Counter = Counter()
-    for row in generate_rows(N_ASSEMBLE_PAGES, seed=SEED, cross_links=True):
+    for row in generate_rows(WITNESS_PAGES, seed=SEED, cross_links=True):
         src = host_of(row["url"])
         for link in extract_outlinks(row["html"], row["url"]):
             counts[(src, host_of(link))] += 1
@@ -268,9 +271,9 @@ def witness_host_link_graph() -> pd.DataFrame:
 
 
 def witness_pdf_layout_markdown() -> pd.DataFrame:
-    """X52 witness: single-process twin of _q_pdf_layout_markdown at
-    the sf0.01 query size (n=400 report pages) — generate, split,
-    positioned-parse, reconstruct, md5."""
+    """X52 witness: single-process twin of the pdf_layout_markdown query
+    over WITNESS_PDFS report pages — generate, split, positioned-parse,
+    reconstruct, md5."""
     import hashlib
 
     from ocr_pipeline_spark.fixtures.gen_pdfs import report_pdf
@@ -280,7 +283,7 @@ def witness_pdf_layout_markdown() -> pd.DataFrame:
     )
 
     rows = []
-    for i in range(N_PDF_DOCS):
+    for i in range(WITNESS_PDFS):
         url, payload = report_pdf(SEED, i)
         md = page_markdown_xy(_split_structural(payload)[0]["content"])
         rows.append(
@@ -297,8 +300,8 @@ def witness_pdf_layout_markdown() -> pd.DataFrame:
 
 def witness_anchor_texts() -> pd.DataFrame:
     """X50 witness: single-process anchor loop over the cross-linked
-    corpus at the sf0.01 query size (n=2000, same formula as
-    _q_anchor_texts), with the identical aggregation done in pure
+    corpus at the anchor_texts query's WITNESS_PAGES size, with the
+    identical aggregation done in pure
     Python (total refs, distinct src hosts, dominant text under
     (count DESC, text ASC))."""
     from collections import Counter, defaultdict
@@ -308,7 +311,7 @@ def witness_anchor_texts() -> pd.DataFrame:
     text_counts: dict[str, Counter] = defaultdict(Counter)
     hosts: dict[str, set] = defaultdict(set)
     refs: Counter = Counter()
-    for row in generate_rows(N_ASSEMBLE_PAGES, seed=SEED, cross_links=True):
+    for row in generate_rows(WITNESS_PAGES, seed=SEED, cross_links=True):
         src = host_of(row["url"])
         for link, text in extract_anchors(row["html"], row["url"]):
             refs[link] += 1
@@ -491,7 +494,7 @@ def witness_warc_records() -> pd.DataFrame:
 
 
 def witness_fuzzy_decontamination() -> pd.DataFrame:
-    """Twin of _q_fuzzy_decontamination: deterministic eval-leak
+    """Twin of the fuzzy_decontamination query: deterministic eval-leak
     injection, bipartite minhash banding (raw band tuples — the Spark
     side buckets by xxhash64 of the same tuples), char-3-gram Jaccard
     verify at 0.5; columns (doc_id, ref_id, jaccard)."""
@@ -540,7 +543,7 @@ def witness_fuzzy_decontamination() -> pd.DataFrame:
 
 
 def witness_wet_export() -> pd.DataFrame:
-    """Twin of _q_wet_export: single-process kernel extraction ->
+    """Twin of the wet_export query: single-process kernel extraction ->
     WARC 'conversion' records -> per-record-gzip container per
     content-addressed shard (first md5 hex digit of url % 8), records
     url-sorted; columns (shard, n_records, n_bytes, wet_md5)."""
@@ -585,7 +588,7 @@ def witness_wet_export() -> pd.DataFrame:
 
 
 def witness_page_metadata() -> pd.DataFrame:
-    """Twin of _q_page_metadata at sf0.01: documents -> head-enriched
+    """Twin of the page_metadata query at sf0.01: documents -> head-enriched
     pages (wrap_document_with_head) -> kernel/metadata.page_metadata;
     columns (url, title, description, canonical, og_title, ld_type)."""
     from ocr_pipeline_spark.fixtures.gen_pages import wrap_document_with_head

@@ -3,6 +3,8 @@
 
 import hashlib
 import math
+import os
+import re
 
 import duckdb
 import pytest
@@ -10,20 +12,36 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.01"
+SF_SMALL = "/root/testdata/sf0.001"
 # Only the tables a query reads: a query over a retired table (the
 # TPC-H star or the events log) fails the compare loudly.
 TABLES = ("documents", "embeddings")
+# Queries that generate their input at their witness's fixed size: their
+# oracles must hold at every scale, so they are compared at a second one.
+WITNESS_SIZED = (
+    "assemble_documents", "anchor_texts", "pagerank_step", "link_spam",
+    "hits_step", "pdf_page_explode", "pdf_layout_markdown",
+    "extract_pdf_documents",
+)
 
 
 @pytest.fixture(scope="module")
-def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    yield con
-    con.close()
+def ddb_at():
+    cons = {}
+    for sf_dir in (SF_DIR, SF_SMALL):
+        con = cons[sf_dir] = duckdb.connect()
+        for t in TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+            )
+    yield cons
+    for con in cons.values():
+        con.close()
+
+
+@pytest.fixture(scope="module")
+def ddb(ddb_at):
+    return ddb_at[SF_DIR]
 
 
 def _norm(v):
@@ -91,14 +109,18 @@ def test_rows_only_queries_run(spark):
         assert df.count() >= 0, name
 
 
-@pytest.mark.parametrize("name", ORACLE_KEYS)
-def test_query_matches_oracle(spark, ddb, name):
+@pytest.mark.parametrize(
+    "name,sf_dir",
+    [pytest.param(n, SF_DIR, id=n) for n in ORACLE_KEYS]
+    + [pytest.param(n, SF_SMALL, id=f"{n}-sf0.001") for n in WITNESS_SIZED],
+)
+def test_query_matches_oracle(spark, ddb_at, name, sf_dir):
     q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
+    sdf = q(spark, sf_dir)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
 
-    res = ddb.execute(entry_mod.oracle_sql()[name])
+    res = ddb_at[sf_dir].execute(entry_mod.oracle_sql()[name])
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
 
@@ -125,6 +147,19 @@ def test_query_matches_oracle(spark, ddb, name):
             (a, b) for a, b in zip(s_lines, d_lines) if a != b
         ][:5]
         pytest.fail(f"{name}: value hash mismatch; first diffs: {diffs}")
+
+
+def test_every_witness_an_oracle_reads_exists():
+    """Each oracle names its witness parquet by an absolute path the
+    driver module resolves; a wrong anchor would fail only inside
+    DuckDB, so pin every path to an existing file."""
+    sqls = entry_mod.oracle_sql().values()
+    paths = {
+        p for sql in sqls for p in re.findall(r"read_parquet\('([^']+)'\)", sql)
+    }
+    assert len(paths) == 16, sorted(paths)
+    missing = sorted(p for p in paths if not os.path.isfile(p))
+    assert not missing, missing
 
 
 def test_near_dup_verified_consistent_with_exact_oracle(spark):
@@ -245,7 +280,7 @@ def test_extract_fidelity_nonvacuous(spark):
     sides while the oracle compare stayed green.  Require real overlap:
     the extraction keeps the document's own words, so recall must be
     high for essentially every doc."""
-    rows = entry_mod._q_extract_fidelity(spark, SF_DIR).collect()
+    rows = entry_mod.queries()["extract_fidelity"](spark, SF_DIR).collect()
     assert len(rows) == 500
     nonzero = sum(1 for r in rows if r.n_common > 0)
     assert nonzero == 500, f"only {nonzero}/500 docs overlap"
@@ -257,7 +292,7 @@ def test_sitemap_parse_last_mod_never_null(spark, ddb):
     """A host whose sitemap carries no <lastmod> reports '' — on both
     sides.  `_norm` maps None to the same token for Spark and DuckDB, so
     the hash compare alone cannot catch a NULL cell."""
-    spark_rows = entry_mod._q_sitemap_parse(spark, SF_DIR).collect()
+    spark_rows = entry_mod.queries()["sitemap_parse"](spark, SF_DIR).collect()
     duck_rows = ddb.execute(entry_mod.oracle_sql()["sitemap_parse"]).fetchall()
     assert spark_rows and duck_rows
     assert all(r.last_mod is not None for r in spark_rows)
@@ -272,7 +307,7 @@ def test_mojibake_repair_nonvacuous(spark):
     oracle stayed green.  Require the repair to actually fire on every
     row with real multi-byte content (the garnish alone contributes
     2-, 3- and 4-byte sequences: >= 14 marker bytes)."""
-    rows = entry_mod._q_mojibake_repair(spark, SF_DIR).collect()
+    rows = entry_mod.queries()["mojibake_repair"](spark, SF_DIR).collect()
     assert len(rows) == 500
     assert all(r.did_repair for r in rows)
     assert all(r.n_marks >= 14 for r in rows)
@@ -287,7 +322,7 @@ def test_host_template_lines_strips_banner_keeps_organic_dups(spark):
     0.08) survives — corpus-global line_dedup would have dropped it.
     If the banner synthesis ever drifted between host pages the
     detector would silently keep it and n_kept == n_lines."""
-    rows = entry_mod._q_host_template_lines(spark, SF_DIR).collect()
+    rows = entry_mod.queries()["host_template_lines"](spark, SF_DIR).collect()
     assert len(rows) == 500
     assert all(r.n_lines - r.n_kept == 1 for r in rows), (
         "every doc must lose exactly its banner line"

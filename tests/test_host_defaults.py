@@ -1,9 +1,5 @@
-"""Defaults that must fit the host they run on, and scale pins that must
-fail loudly instead of comparing against the wrong witness."""
+"""Defaults that must fit the host they run on."""
 
-import pytest
-
-import __spark_entry__ as entry_mod
 from ocr_pipeline_spark.plans import job
 
 
@@ -33,11 +29,3 @@ def test_driver_memory_is_capped_at_48g(tmp_path, monkeypatch):
 def test_driver_memory_env_wins(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert job.driver_memory(_meminfo(tmp_path, 16_093_000)) == "3g"
-
-
-@pytest.mark.parametrize("name", ["link_spam", "hits_step"])
-def test_link_witness_queries_refuse_other_scales(name):
-    query = entry_mod.queries()[name]
-    with pytest.raises(ValueError, match="sf0.01"):
-        query(None, "testdata/sf0.1")
-    assert entry_mod._link_witness_pages("testdata/sf0.01/") == 2000

@@ -18,11 +18,11 @@ from ocr_pipeline_spark.fixtures.gen_pdfs import (
 from ocr_pipeline_spark.kernel.layout import xy_cut
 from ocr_pipeline_spark.sources.pdf import (
     _split_structural,
-    page_text,
     page_text_blocks,
     page_text_xy,
     split_pdf_pages_text,
 )
+from oracle_pdf import page_text
 
 
 def test_xy_cut_title_then_columns():

