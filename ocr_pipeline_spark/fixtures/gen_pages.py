@@ -458,15 +458,16 @@ def wrap_document_with_head(doc_id: int, text: str, lang: str, source: str) -> d
     }
 
 
-def documents_with_head_df(documents_df):
-    """documents(doc_id, text, lang, source, ...) -> head-enriched pages."""
+def _documents_df(documents_df, wrap):
+    """documents(doc_id, text, lang, source, ...) -> pages, one
+    `wrap(doc_id, text, lang, source)` row per document."""
     import pandas as pd
 
     def _wrap(batches):
         for pdf in batches:
             yield pd.DataFrame(
                 [
-                    wrap_document_with_head(int(d), t, l, s)
+                    wrap(int(d), t, l, s)
                     for d, t, l, s in zip(
                         pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
                     )
@@ -476,26 +477,16 @@ def documents_with_head_df(documents_df):
     return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
         _wrap, schema=PAGES_SCHEMA_DDL
     )
+
+
+def documents_with_head_df(documents_df):
+    """documents(doc_id, text, lang, source, ...) -> head-enriched pages."""
+    return _documents_df(documents_df, wrap_document_with_head)
 
 
 def documents_as_pages_df(documents_df):
     """documents(doc_id, text, lang, source, ...) -> pages DataFrame."""
-    import pandas as pd
-
-    def _wrap(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    wrap_document_as_page(int(d), t, l, s)
-                    for d, t, l, s in zip(
-                        pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
-                    )
-                ]
-            )
-
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        _wrap, schema=PAGES_SCHEMA_DDL
-    )
+    return _documents_df(documents_df, wrap_document_as_page)
 
 
 def generate_pages_df(

@@ -46,7 +46,6 @@ _DESCRIBE_KINDS = frozenset({"heading", "diagram", "code", "figure"})
 @dataclass
 class PageResult:
     markdown: str                 # final per-page markdown (meta header + text)
-    body: str                     # cleaned text before A1/A2 (no header)
     classification: dict          # Stage-1 contract record
     method: str
     spans: list[dict] = field(default_factory=list)
@@ -199,7 +198,6 @@ def extract_page(
             gc.enable()
     return PageResult(
         markdown=markdown,
-        body=body,
         classification=classification,
         method=method,
         spans=spans,

@@ -15,6 +15,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # =========================================================================
 # Column-level text features (pure JVM expressions)
@@ -45,7 +46,7 @@ def normalize_text(text: str) -> str:
 def normalize_kernel(text_col: str = "text", out_col: str = "norm"):
     """mapInPandas kernel factory: adds the NFC-normalized column.
     Arrow-batched — NFC has no JVM built-in, so this is the sanctioned
-    Python boundary (same policy tier as minhash_kernel).  NULL text
+    Python boundary (same policy tier as with_minhash).  NULL text
     stays NULL (SQL semantics — the DuckDB oracle's nfc_normalize /
     md5 propagate NULL, so the kernel must too; normalize_text's
     None -> "" total contract is for direct Python callers)."""
@@ -184,14 +185,20 @@ def minhash_signature(text: str) -> list[int]:
     return [int(x) for x in mins]
 
 
-def minhash_kernel(text_col: str = "text", out_col: str = "minhash"):
+def with_minhash(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """`df` plus a `minhash` array<bigint> column, the signature of
+    `text_col`, added in one Arrow pass."""
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [minhash_signature(t) for t in pdf[text_col]]
-            yield pdf
+            yield pdf.assign(
+                minhash=[minhash_signature(t) for t in pdf[text_col]]
+            )
 
-    return kernel
+    return df.mapInPandas(kernel, schema=T.StructType(
+        df.schema.fields
+        + [T.StructField("minhash", T.ArrayType(T.LongType()))]
+    ))
 
 
 # Hot-bucket cap: a band bucket shared by more than this many documents
@@ -333,6 +340,98 @@ def lsh_candidate_pairs(
     return intra_bucket_pairs(grouped, max_bucket, observation).distinct()
 
 
+def _char_grams(text: str, n: int) -> set[str]:
+    """The text's character n-gram set; a text shorter than n is its own
+    single gram."""
+    return {text[i : i + n] for i in range(max(len(text) - n + 1, 0))} or {text}
+
+
+def _block_intersections(texts, n: int):
+    """Gram-set intersections of every doc pair of one block, as
+    (ia, ib, n_inter, size_a, size_b) over the upper triangle.
+
+    ONE boolean gram-matrix product per block instead of m^2/2 Python
+    set intersections: M (docs x vocab) 0/1 float32, then inter =
+    M @ M.T — counts are exact integers in float32 up to 2^24 (a doc
+    has far fewer grams than that).  BLAS turns the block's whole pair
+    grid into a single GEMM, and the gram-set sizes are its diagonal."""
+    grams = [_char_grams(t or "", n) for t in texts]
+    vocab: dict[str, int] = {}
+    for gs in grams:
+        for g in gs:
+            if g not in vocab:
+                vocab[g] = len(vocab)
+    M = _np.zeros((len(grams), len(vocab)), dtype=_np.float32)
+    for i, gs in enumerate(grams):
+        M[i, [vocab[g] for g in gs]] = 1.0
+    inter = _np.rint(M @ M.T).astype(_np.int64)
+    sizes = inter.diagonal()
+    ia, ib = _np.triu_indices(len(grams), k=1)
+    return ia, ib, inter[ia, ib], sizes[ia], sizes[ib]
+
+
+def _blocked_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    block_col: str,
+    n: int,
+    max_block: int,
+    cols: tuple[str, ...],
+    score,
+    observation=None,
+) -> DataFrame:
+    """The shell of the blocked exact-gram operators: one shuffle on the
+    block key, then per block (docs in id order) the pair grid from
+    `_block_intersections`, turned into the long columns `cols` by
+    `score(ids, ia, ib, n_inter, size_a, size_b)`.  Blocks of fewer than
+    2 or more than `max_block` docs emit nothing; `observation` gets
+    (total_blocks, skipped_blocks), the latter counting the blocks over
+    `max_block`."""
+    base = df.select(
+        F.col(id_col).cast("long").alias("_id"),
+        F.col(block_col).alias("_blk"),
+        F.col(text_col).alias("_text"),
+    )
+    if observation is not None:
+        from pyspark.sql import Window
+
+        w_blk = Window.partitionBy("_blk")
+        base = (
+            base.withColumn(
+                "_rn", F.row_number().over(w_blk.orderBy("_id"))
+            )
+            .withColumn("_bn", F.count("*").over(w_blk))
+            .observe(
+                observation,
+                F.sum(F.when(F.col("_rn") == 1, 1).otherwise(0)).alias(
+                    "total_blocks"
+                ),
+                F.sum(
+                    F.when(
+                        (F.col("_rn") == 1) & (F.col("_bn") > max_block), 1
+                    ).otherwise(0)
+                ).alias("skipped_blocks"),
+            )
+            .drop("_rn", "_bn")
+        )
+
+    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
+        if not 2 <= len(pdf) <= max_block:
+            return pd.DataFrame(
+                {c: pd.Series([], dtype="int64") for c in cols}
+            )
+        pdf = pdf.sort_values("_id")
+        ids = pdf["_id"].to_numpy()
+        return pd.DataFrame(
+            score(ids, *_block_intersections(pdf["_text"], n))
+        )
+
+    return base.groupBy("_blk").applyInPandas(
+        per_block, schema=", ".join(f"{c} long" for c in cols)
+    )
+
+
 def blocked_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -365,79 +464,20 @@ def blocked_jaccard_pairs(
     partitioning the pair stage already shuffles on (no extra
     exchange).  Same AQE empty-result caveat as intra_bucket_pairs.
     """
-    base = df.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(block_col).alias("_blk"),
-        F.col(text_col).alias("_text"),
-    )
-    if observation is not None:
-        from pyspark.sql import Window
 
-        w_blk = Window.partitionBy("_blk")
-        base = (
-            base.withColumn(
-                "_rn", F.row_number().over(w_blk.orderBy("_id"))
-            )
-            .withColumn("_bn", F.count("*").over(w_blk))
-            .observe(
-                observation,
-                F.sum(F.when(F.col("_rn") == 1, 1).otherwise(0)).alias(
-                    "total_blocks"
-                ),
-                F.sum(
-                    F.when(
-                        (F.col("_rn") == 1) & (F.col("_bn") > max_block), 1
-                    ).otherwise(0)
-                ).alias("skipped_blocks"),
-            )
-            .drop("_rn", "_bn")
-        )
-
-    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2 or m > max_block:
-            return pd.DataFrame(
-                {"id_a": pd.Series([], dtype="int64"),
-                 "id_b": pd.Series([], dtype="int64"),
-                 "n_inter": pd.Series([], dtype="int64"),
-                 "n_union": pd.Series([], dtype="int64")}
-            )
-        pdf = pdf.sort_values("_id")
-        ids = pdf["_id"].to_numpy()
-        grams = [
-            {t[i : i + n] for i in range(max(len(t) - n + 1, 0))} or {t}
-            for t in ((x or "") for x in pdf["_text"])
-        ]
-        # ONE boolean gram-matrix product per block instead of m^2/2
-        # Python set intersections: M (docs x vocab) 0/1 float32, then
-        # inter = M @ M.T — counts are exact integers in float32 up to
-        # 2^24 (a doc has far fewer grams than that).  BLAS turns the
-        # block's whole pair grid into a single GEMM.
-        vocab: dict[str, int] = {}
-        for gs in grams:
-            for g in gs:
-                if g not in vocab:
-                    vocab[g] = len(vocab)
-        M = _np.zeros((m, len(vocab)), dtype=_np.float32)
-        for i, gs in enumerate(grams):
-            M[i, [vocab[g] for g in gs]] = 1.0
-        inter = _np.rint(M @ M.T).astype(_np.int64)
-        sizes = inter.diagonal()
-        ia, ib = _np.triu_indices(m, k=1)
-        n_inter = inter[ia, ib]
-        n_union = sizes[ia] + sizes[ib] - n_inter
+    def score(ids, ia, ib, n_inter, size_a, size_b):
+        n_union = size_a + size_b - n_inter
         keep = threshold_den * n_inter >= threshold_num * n_union
-        return pd.DataFrame(
-            {
-                "id_a": ids[ia[keep]].astype("int64"),
-                "id_b": ids[ib[keep]].astype("int64"),
-                "n_inter": n_inter[keep],
-                "n_union": n_union[keep],
-            }
-        )
+        return {
+            "id_a": ids[ia[keep]].astype("int64"),
+            "id_b": ids[ib[keep]].astype("int64"),
+            "n_inter": n_inter[keep],
+            "n_union": n_union[keep],
+        }
 
-    return base.groupBy("_blk").applyInPandas(
-        per_block, schema="id_a long, id_b long, n_inter long, n_union long"
+    return _blocked_pairs(
+        df, id_col, text_col, block_col, n, max_block,
+        ("id_a", "id_b", "n_inter", "n_union"), score, observation,
     )
 
 
@@ -469,75 +509,61 @@ def blocked_containment_pairs(
     (ties broken by lower id).  Blocks above max_block are skipped —
     at corpus scale mega-hosts go through the MinHash candidate path
     first, with this measure applied only to candidate pairs."""
-    base = df.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(block_col).alias("_blk"),
-        F.col(text_col).alias("_text"),
-    )
 
-    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"id_contained": pd.Series([], dtype="int64"),
-             "id_container": pd.Series([], dtype="int64"),
-             "n_inter": pd.Series([], dtype="int64"),
-             "n_small": pd.Series([], dtype="int64"),
-             "n_big": pd.Series([], dtype="int64")}
-        )
-        m = len(pdf)
-        if m < 2 or m > max_block:
-            return empty
-        pdf = pdf.sort_values("_id")
-        ids = pdf["_id"].to_numpy()
-        grams = [
-            {t[i : i + n] for i in range(max(len(t) - n + 1, 0))} or {t}
-            for t in ((x or "") for x in pdf["_text"])
-        ]
-        vocab: dict[str, int] = {}
-        for gs in grams:
-            for g in gs:
-                if g not in vocab:
-                    vocab[g] = len(vocab)
-        M = _np.zeros((m, len(vocab)), dtype=_np.float32)
-        for i, gs in enumerate(grams):
-            M[i, [vocab[g] for g in gs]] = 1.0
-        inter = _np.rint(M @ M.T).astype(_np.int64)
-        sizes = inter.diagonal()
-        ia, ib = _np.triu_indices(m, k=1)
-        n_inter = inter[ia, ib]
+    def score(ids, ia, ib, n_inter, size_a, size_b):
         # containment of the smaller set; ids sorted so on equal sizes
         # the lower id (ia) is the contained role
-        small_is_a = sizes[ia] <= sizes[ib]
-        n_small = _np.where(small_is_a, sizes[ia], sizes[ib])
-        n_big = _np.where(small_is_a, sizes[ib], sizes[ia])
+        small_is_a = size_a <= size_b
+        n_small = _np.where(small_is_a, size_a, size_b)
         keep = threshold_den * n_inter >= threshold_num * n_small
-        return pd.DataFrame(
-            {
-                "id_contained": _np.where(small_is_a, ids[ia], ids[ib])[
-                    keep
-                ].astype("int64"),
-                "id_container": _np.where(small_is_a, ids[ib], ids[ia])[
-                    keep
-                ].astype("int64"),
-                "n_inter": n_inter[keep],
-                "n_small": n_small[keep],
-                "n_big": n_big[keep],
-            }
-        )
+        return {
+            "id_contained": _np.where(small_is_a, ids[ia], ids[ib])[
+                keep
+            ].astype("int64"),
+            "id_container": _np.where(small_is_a, ids[ib], ids[ia])[
+                keep
+            ].astype("int64"),
+            "n_inter": n_inter[keep],
+            "n_small": n_small[keep],
+            "n_big": _np.where(small_is_a, size_b, size_a)[keep],
+        }
 
-    return base.groupBy("_blk").applyInPandas(
-        per_block,
-        schema=(
-            "id_contained long, id_container long, n_inter long,"
-            " n_small long, n_big long"
-        ),
+    return _blocked_pairs(
+        df, id_col, text_col, block_col, n, max_block,
+        ("id_contained", "id_container", "n_inter", "n_small", "n_big"),
+        score,
     )
 
 
 def ngram_jaccard(a: str, b: str, n: int = 3) -> float:
     """Character n-gram Jaccard similarity (verification of candidates)."""
-    ga = {a[i : i + n] for i in range(max(len(a) - n + 1, 0))} or {a}
-    gb = {b[i : i + n] for i in range(max(len(b) - n + 1, 0))} or {b}
+    ga, gb = _char_grams(a, n), _char_grams(b, n)
     return len(ga & gb) / len(ga | gb)
+
+
+def _verified_pairs(
+    hydrated: DataFrame, ids: dict[str, str], threshold: float
+) -> DataFrame:
+    """Candidate pairs hydrated with (_text_a, _text_b) -> the pairs whose
+    n-gram Jaccard, rounded to 4 dp, is >= threshold, in one Arrow
+    kernel.  `ids` maps the two input id columns to their output
+    names."""
+
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    **{out: pdf[c] for c, out in ids.items()},
+                    "jaccard": [
+                        round(ngram_jaccard(x or "", y or ""), 4)
+                        for x, y in zip(pdf["_text_a"], pdf["_text_b"])
+                    ],
+                }
+            )
+
+    schema = "".join(f"{out} long, " for out in ids.values())
+    scored = hydrated.mapInPandas(verify, schema=schema + "jaccard double")
+    return scored.filter(F.col("jaccard") >= threshold)
 
 
 def verified_near_dups(
@@ -553,32 +579,11 @@ def verified_near_dups(
     joins broadcast the pair list.
     """
     base = df.select(F.col(id_col).cast("long").alias("_id"), F.col(text_col))
-    sigs = base.mapInPandas(
-        minhash_kernel(text_col),
-        schema=f"_id long, {text_col} string, minhash array<bigint>",
-    )
-    pairs = lsh_candidate_pairs(sigs, "_id")
+    pairs = lsh_candidate_pairs(with_minhash(base, text_col), "_id")
     a = base.select(F.col("_id").alias("id_a"), F.col(text_col).alias("_text_a"))
     b = base.select(F.col("_id").alias("id_b"), F.col(text_col).alias("_text_b"))
     hydrated = pairs.join(a, "id_a").join(b, "id_b")
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"],
-                    "id_b": pdf["id_b"],
-                    "jaccard": [
-                        round(ngram_jaccard(x or "", y or ""), 4)
-                        for x, y in zip(pdf["_text_a"], pdf["_text_b"])
-                    ],
-                }
-            )
-
-    scored = hydrated.mapInPandas(
-        verify, schema="id_a long, id_b long, jaccard double"
-    )
-    return scored.filter(F.col("jaccard") >= threshold)
+    return _verified_pairs(hydrated, {"id_a": "id_a", "id_b": "id_b"}, threshold)
 
 
 def cross_corpus_near_dups(
@@ -614,17 +619,12 @@ def cross_corpus_near_dups(
     base_r = ref.select(
         F.col(ref_id).cast("long").alias("_rid"), F.col(text_col)
     )
-    sig_c = base_c.mapInPandas(
-        minhash_kernel(text_col),
-        schema=f"_cid long, {text_col} string, minhash array<bigint>",
-    )
-    sig_r = base_r.mapInPandas(
-        minhash_kernel(text_col),
-        schema=f"_rid long, {text_col} string, minhash array<bigint>",
-    )
     cand = (
-        _band_table(sig_c, "_cid")
-        .join(F.broadcast(_band_table(sig_r, "_rid")), ["band", "band_hash"])
+        _band_table(with_minhash(base_c, text_col), "_cid")
+        .join(
+            F.broadcast(_band_table(with_minhash(base_r, text_col), "_rid")),
+            ["band", "band_hash"],
+        )
         .select("_cid", "_rid")
         .distinct()
     )
@@ -634,21 +634,6 @@ def cross_corpus_near_dups(
         F.broadcast(base_r.select("_rid", F.col(text_col).alias("_text_b"))),
         "_rid",
     )
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    corpus_id: pdf["_cid"],
-                    ref_id: pdf["_rid"],
-                    "jaccard": [
-                        round(ngram_jaccard(x or "", y or ""), 4)
-                        for x, y in zip(pdf["_text_a"], pdf["_text_b"])
-                    ],
-                }
-            )
-
-    scored = hydrated.mapInPandas(
-        verify, schema=f"{corpus_id} long, {ref_id} long, jaccard double"
+    return _verified_pairs(
+        hydrated, {"_cid": corpus_id, "_rid": ref_id}, threshold
     )
-    return scored.filter(F.col("jaccard") >= threshold)

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from ocr_pipeline_spark.operators.components import connected_components
 from ocr_pipeline_spark.operators.text_ops import (
     blocked_containment_pairs, blocked_jaccard_pairs, cross_corpus_near_dups,
-    log_overflow_metrics, lsh_candidate_pairs, minhash_kernel,
-    verified_near_dups,
+    log_overflow_metrics, lsh_candidate_pairs, verified_near_dups,
+    with_minhash,
 )
 from ocr_pipeline_spark.queries.common import (
     SYNTH_URLS_SQL, synth_urls, table, witness_sql,
@@ -227,10 +227,7 @@ DEDUP_APPLY_SPANS_SQL = f"""
 
 def minhash_dup_pairs(spark, sf_dir):
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = d.mapInPandas(
-        minhash_kernel(),
-        schema="doc_id long, text string, minhash array<bigint>",
-    )
+    sigs = with_minhash(d)
     obs = Observation()
     out = lsh_candidate_pairs(sigs, "doc_id", observation=obs).orderBy(
         "id_a", "id_b"

@@ -23,8 +23,8 @@ from ocr_pipeline_spark.queries.common import (
     witness_sql,
 )
 from ocr_pipeline_spark.sources.pdf import (
-    _split_structural, explode_pdf_pages, page_markdown_xy, page_text_xy,
-    pdf_to_pages_df,
+    explode_pdf_pages, page_markdown_xy, page_text_xy, pdf_to_pages_df,
+    split_pdf_pages,
 )
 from ocr_pipeline_spark.sources.warc import (
     documents_as_warc_df, warc_pages_df, wet_export_df,
@@ -106,7 +106,7 @@ def pdf_page_explode(spark, sf_dir):
     (sources/pdf.py, ref stage2_ocr.py:406-442) -> explode() to page
     rows -> per-page text extraction.  Input: the deterministic PDF
     corpus (pure function of seed+doc_id) at its witness size."""
-    pages = explode_pdf_pages(witness_pdfs(spark), "payload")
+    pages = explode_pdf_pages(witness_pdfs(spark))
 
     def text_kernel(batches):
         for pdf in batches:
@@ -147,7 +147,7 @@ def pdf_layout_markdown(spark, sf_dir):
             urls, mds = [], []
             for i in pdf["id"]:
                 url, payload = report_pdf(SEED, int(i))
-                page = _split_structural(payload)[0]
+                page = split_pdf_pages(payload)[0]
                 urls.append(url)
                 mds.append(page_markdown_xy(page["content"]))
             yield pd.DataFrame({"url": urls, "markdown": mds})

@@ -9,16 +9,14 @@ into page rows — downstream kernels stay per-page, exactly like the
 html path (kernel/page.py), and the explode parallelizes pages across
 tasks.
 
-Decode strategy, chosen by whether PyMuPDF imports:
-  * with PyMuPDF, ``content`` is the rendered-PNG bytes of each page,
-    byte-compatible with the reference's pixmap path;
-  * without it, ``content`` is each page's decompressed content
-    stream(s), found by a structural parse: object scan, page-tree
-    ordering via /Kids, /Contents dereference and Flate inflate via
-    stdlib zlib.  The result is deterministic and testable end to end,
-    and `page_text_xy` extracts the text show operators from it in
-    reading order, so PDF pages flow through the same text pipeline as
-    html pages.
+Decode strategy: one structural splitter, stdlib only, so executors
+need no native codec (docs/DESIGN.md §7).  ``content`` is each page's
+decompressed content stream(s): object scan, page-tree ordering via
+/Kids, /Contents dereference and Flate inflate via zlib.  The result
+is deterministic on every host, and `page_text_xy` extracts the text
+show operators from it in reading order, so PDF pages flow through the
+same text pipeline as html pages.  Where the reference rasterizes a
+page for OCR, this graft reads the page's own text operators.
 """
 
 from __future__ import annotations
@@ -30,15 +28,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-PDF_PAGES_DDL = "array<struct<page_num:int,content:binary>>"
-
-try:  # pragma: no cover - not shipped in this container
-    import fitz as _fitz  # type: ignore
-
-    _HAVE_MUPDF = True
-except ImportError:
-    _HAVE_MUPDF = False
 
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)\bendobj", re.S)
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
@@ -122,39 +111,19 @@ def _page_order(objects: dict[int, bytes], page_ids: list[int]) -> list[int]:
 
 
 def split_pdf_pages(data: bytes | None) -> list[dict]:
-    """binary PDF -> [{"page_num": i, "content": bytes}], 1-based.
-
-    With PyMuPDF: content = rendered-PNG bytes per page (the reference's
-    pixmap).  Without: content = the page's decompressed content
-    stream(s), in page-tree order.  Malformed/non-PDF payloads yield []
-    (a crawl row with a lying content-type must not fail the task).
-    """
+    """binary PDF -> [{"page_num": i, "content": bytes}], 1-based:
+    object scan → page-tree order → /Contents dereference → Flate
+    inflate, so content = the page's decompressed content stream(s).
+    Malformed/non-PDF payloads yield [] (a crawl row with a lying
+    content-type must not fail the task)."""
     if not data or data[:5] != b"%PDF-":
         return []
-    if _HAVE_MUPDF:  # pragma: no cover - real-cluster path
-        doc = _fitz.open(stream=data, filetype="pdf")
-        out = [
-            {"page_num": i + 1,
-             "content": page.get_pixmap(dpi=72).tobytes("png")}
-            for i, page in enumerate(doc)
-        ]
-        doc.close()
-        return out
-    return _split_structural(data)
-
-
-def _split_structural(data: bytes) -> list[dict]:
-    """The codec-free structural splitter: object scan → page-tree
-    order → /Contents dereference → Flate inflate.  content = the
-    page's decompressed content stream(s)."""
     objects = _object_map(data)
     page_ids = [
         num for num, body in objects.items()
         if re.search(rb"/Type\s*/Page\b", body)
         and not re.search(rb"/Type\s*/Pages\b", body)
     ]
-    if not page_ids:
-        return []
     out = []
     for i, num in enumerate(_page_order(objects, page_ids)):
         m = _CONTENTS_RE.search(objects[num])
@@ -166,34 +135,6 @@ def _split_structural(data: bytes) -> list[dict]:
             )
         out.append({"page_num": i + 1, "content": content})
     return out
-
-
-def split_pdf_pages_text(data: bytes | None) -> list[dict]:
-    """binary PDF -> [{"page_num": i, "text": str}], 1-based — the TEXT
-    pipeline's splitter.
-
-    Unlike split_pdf_pages (whose `content` is environment-dependent:
-    rendered-PNG bytes under PyMuPDF, raw content streams without),
-    this always yields page TEXT, so pdf_to_pages_df produces the same
-    shape of output in both environments instead of silently feeding
-    PNG bytes to the content-stream text extractor on a real cluster
-    (round-2 ADVICE item).  Under PyMuPDF the text is page.get_text()
-    (real glyph placement); without codecs it is page_text_xy() over
-    the structural content streams."""
-    if not data or data[:5] != b"%PDF-":
-        return []
-    if _HAVE_MUPDF:  # pragma: no cover - real-cluster path
-        doc = _fitz.open(stream=data, filetype="pdf")
-        out = [
-            {"page_num": i + 1, "text": page.get_text()}
-            for i, page in enumerate(doc)
-        ]
-        doc.close()
-        return out
-    return [
-        {"page_num": p["page_num"], "text": page_text_xy(p["content"])}
-        for p in _split_structural(data)
-    ]
 
 
 _STR_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)\)")
@@ -448,25 +389,12 @@ def page_markdown_xy(content: bytes | None) -> str:
 
 
 # --- Spark operators ---------------------------------------------------------
-def pdf_pages_kernel(bin_col: str = "payload", out_col: str = "pages"):
-    """mapInPandas kernel factory: adds the page array column."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [split_pdf_pages(d) for d in pdf[bin_col]]
-            yield pdf
-
-    return kernel
+# pdf_to_pages_df stamps every page row with this capture time and lang
+_PAGE_TS = "2024-01-01 00:00:00"
+_PAGE_LANG = "und"
 
 
-def pdf_to_pages_df(
-    df: DataFrame,
-    bin_col: str = "payload",
-    url_col: str = "url",
-    lang: str = "und",
-    warc_ts: str = "2024-01-01 00:00:00",
-) -> DataFrame:
+def pdf_to_pages_df(df: DataFrame) -> DataFrame:
     """documents(url, payload) -> the standard pages(url, warc_ts, html,
     lang) table, one row per PDF page.
 
@@ -482,14 +410,13 @@ def pdf_to_pages_df(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            urls, pages_col = [], []
-            for url, data in zip(pdf[url_col], pdf[bin_col]):
+            pages_col = []
+            for data in pdf["payload"]:
                 arr = []
-                for p in split_pdf_pages_text(data):
-                    text = p["text"]
+                for p in split_pdf_pages(data):
                     body = "".join(
                         f"<p>{_html.escape(line)}</p>"
-                        for line in text.split("\n")
+                        for line in page_text_xy(p["content"]).split("\n")
                         if line.strip()
                     )
                     arr.append(
@@ -498,44 +425,45 @@ def pdf_to_pages_df(
                             "html": f"<html><body><main>{body}</main></body></html>",
                         }
                     )
-                urls.append(url)
                 pages_col.append(arr)
-            yield pd.DataFrame({"url": urls, "pages": pages_col})
+            yield pd.DataFrame({"url": pdf["url"], "pages": pages_col})
 
-    with_pages = df.select(url_col, bin_col).mapInPandas(
+    with_pages = df.select("url", "payload").mapInPandas(
         kernel, schema="url string, pages array<struct<page_num:int,html:string>>"
     )
     return with_pages.select(
         "url", F.explode("pages").alias("page")
     ).select(
         F.concat(F.col("url"), F.lit("/page-"), F.col("page.page_num")).alias("url"),
-        F.lit(warc_ts).cast("timestamp").alias("warc_ts"),
+        F.lit(_PAGE_TS).cast("timestamp").alias("warc_ts"),
         F.encode(F.col("page.html"), "utf-8").alias("html"),
-        F.lit(lang).alias("lang"),
+        F.lit(_PAGE_LANG).alias("lang"),
     )
 
 
-def explode_pdf_pages(
-    df: DataFrame, bin_col: str = "payload", keep_cols: tuple[str, ...] = ("url",)
-) -> DataFrame:
+def explode_pdf_pages(df: DataFrame) -> DataFrame:
     """documents(url, payload) -> pages(url, page_num, content).
 
     The splitter is one narrow Arrow pass; explode() then multiplies
     rows without a shuffle, so page rows inherit the input partitioning
     and downstream per-page kernels parallelize across pages even when
     one task's documents are few and thick."""
-    keep = [F.col(c) for c in keep_cols]
-    ddl = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in keep_cols
-    )
-    with_pages = df.select(*keep_cols, bin_col).mapInPandas(
-        pdf_pages_kernel(bin_col),
-        schema=f"{ddl}, {bin_col} binary, pages {PDF_PAGES_DDL}",
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame({
+                "url": pdf["url"],
+                "pages": [split_pdf_pages(d) for d in pdf["payload"]],
+            })
+
+    with_pages = df.select("url", "payload").mapInPandas(
+        kernel,
+        schema="url string, pages array<struct<page_num:int,content:binary>>",
     )
     return with_pages.select(
-        *keep, F.explode("pages").alias("page")
+        "url", F.explode("pages").alias("page")
     ).select(
-        *keep,
+        "url",
         F.col("page.page_num").alias("page_num"),
         F.col("page.content").alias("content"),
     )

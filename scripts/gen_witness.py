@@ -48,7 +48,6 @@ from ocr_pipeline_spark.queries import (  # noqa: E402
 from ocr_pipeline_spark.sources.pdf import (  # noqa: E402
     page_text_xy,
     split_pdf_pages,
-    split_pdf_pages_text,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -136,10 +135,10 @@ def witness_extract_pdf_documents() -> pd.DataFrame:
     per_doc: dict[str, list[dict]] = {}
     for i in range(WITNESS_PDFS):
         url, payload, _ = doc_pdf(SEED, i)
-        for page in split_pdf_pages_text(payload):
+        for page in split_pdf_pages(payload):
             body = "".join(
                 f"<p>{_html.escape(line)}</p>"
-                for line in page["text"].split("\n")
+                for line in page_text_xy(page["content"]).split("\n")
                 if line.strip()
             )
             html = f"<html><body><main>{body}</main></body></html>"
@@ -277,15 +276,12 @@ def witness_pdf_layout_markdown() -> pd.DataFrame:
     import hashlib
 
     from ocr_pipeline_spark.fixtures.gen_pdfs import report_pdf
-    from ocr_pipeline_spark.sources.pdf import (
-        _split_structural,
-        page_markdown_xy,
-    )
+    from ocr_pipeline_spark.sources.pdf import page_markdown_xy
 
     rows = []
     for i in range(WITNESS_PDFS):
         url, payload = report_pdf(SEED, i)
-        md = page_markdown_xy(_split_structural(payload)[0]["content"])
+        md = page_markdown_xy(split_pdf_pages(payload)[0]["content"])
         rows.append(
             {
                 "url": url,

@@ -17,10 +17,9 @@ from ocr_pipeline_spark.fixtures.gen_pdfs import (
 )
 from ocr_pipeline_spark.kernel.layout import xy_cut
 from ocr_pipeline_spark.sources.pdf import (
-    _split_structural,
     page_text_blocks,
     page_text_xy,
-    split_pdf_pages_text,
+    split_pdf_pages,
 )
 from oracle_pdf import page_text
 
@@ -55,14 +54,10 @@ def test_two_column_pdf_reads_title_then_columns():
     col_a = ["alpha one", "alpha two", "alpha three"]
     col_b = ["beta one", "beta two"]
     pdf = build_pdf_raw_streams([build_layout_content(title, col_a, col_b)])
-    page = _split_structural(pdf)[0]
+    page = split_pdf_pages(pdf)[0]
     # stream order interleaves the columns — the adversarial premise
     assert page_text(page["content"]).split("\n")[1] == "beta one"
     assert page_text_xy(page["content"]) == "\n".join(
-        [title] + col_a + col_b
-    )
-    # the text-pipeline splitter uses the layout-aware path
-    assert split_pdf_pages_text(pdf)[0]["text"] == "\n".join(
         [title] + col_a + col_b
     )
 
@@ -71,7 +66,7 @@ def test_linear_stream_identity_with_stream_order():
     """Single-column fixtures: XY-cut order == stream order, byte-equal
     (goldens and witnesses built on build_pdf stay valid)."""
     pdf = build_pdf(["Hello world\nSecond line\nThird", "Page two\nMore"])
-    for p in _split_structural(pdf):
+    for p in split_pdf_pages(pdf):
         assert page_text_xy(p["content"]) == page_text(p["content"])
 
 
@@ -136,7 +131,7 @@ def test_page_markdown_xy_reconstructs_headings_and_table():
     from ocr_pipeline_spark.sources.pdf import page_markdown_xy
 
     url, pdf = report_pdf(42, 0)
-    md = page_markdown_xy(_split_structural(pdf)[0]["content"])
+    md = page_markdown_xy(split_pdf_pages(pdf)[0]["content"])
     lines = md.split("\n")
     assert lines[0].startswith("# ")            # 18pt title
     assert any(l.startswith("## ") for l in lines)   # 14.5pt heading

@@ -10,9 +10,9 @@ from ocr_pipeline_spark.operators.ann import (
 )
 from ocr_pipeline_spark.operators.text_ops import (
     lsh_candidate_pairs,
-    minhash_kernel,
     minhash_signature,
     ngram_jaccard,
+    with_minhash,
 )
 
 
@@ -38,9 +38,7 @@ def test_lsh_finds_planted_near_duplicates(spark):
     base = " ".join(f"w{i}" for i in range(200))
     rows = [(0, base), (1, base + " tail"), (2, " ".join(f"q{i}" for i in range(200)))]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = df.mapInPandas(
-        minhash_kernel(), schema="doc_id long, text string, minhash array<bigint>"
-    )
+    sigs = with_minhash(df)
     pairs = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, "doc_id").collect()}
     assert (0, 1) in pairs
     assert (0, 2) not in pairs and (1, 2) not in pairs
@@ -164,10 +162,6 @@ def test_lsh_mirror_cluster_survives_hot_bucket(spark):
     zero pairs for exactly the most duplicated content.  Star overflow
     must keep the whole cluster in one connected component."""
     from ocr_pipeline_spark.operators.components import connected_components
-    from ocr_pipeline_spark.operators.text_ops import (
-        lsh_candidate_pairs,
-        minhash_kernel,
-    )
 
     n = 80  # > _MAX_BUCKET=64
     body = (
@@ -178,9 +172,7 @@ def test_lsh_mirror_cluster_survives_hot_bucket(spark):
         (1000, "an unrelated singleton document about parquet row groups " * 8)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = df.mapInPandas(
-        minhash_kernel(), schema="doc_id long, text string, minhash array<bigint>"
-    )
+    sigs = with_minhash(df)
     pairs = lsh_candidate_pairs(sigs, "doc_id")
     comp = {
         r.id: r.comp

@@ -4,7 +4,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_pipeline_spark.fixtures.gen_pdfs import build_pdf, doc_pdf, generate_pdfs_df
-from ocr_pipeline_spark.sources.pdf import explode_pdf_pages, split_pdf_pages
+from ocr_pipeline_spark.sources.pdf import (
+    explode_pdf_pages, page_text_xy, split_pdf_pages,
+)
 from oracle_pdf import page_text
 
 
@@ -49,78 +51,49 @@ def test_split_tolerates_garbage():
 
 
 def test_split_pdf_pages_text_matches_structural_path():
-    """split_pdf_pages_text is the environment-stable TEXT splitter
-    (ADVICE r2: under PyMuPDF split_pdf_pages yields PNG bytes, which
-    must never reach page_text).  In the codec-free environment it must
-    equal page_text over the structural split exactly."""
-    from ocr_pipeline_spark.sources.pdf import split_pdf_pages_text
-
+    """The text pipeline reads pages as page_text_xy over split_pdf_pages;
+    on these linear streams that equals the stream-order oracle."""
     pdf = build_pdf(["alpha one\nbeta two", "gamma", "delta\nfour"])
-    assert split_pdf_pages_text(pdf) == [
-        {"page_num": 1, "text": "alpha one\nbeta two"},
-        {"page_num": 2, "text": "gamma"},
-        {"page_num": 3, "text": "delta\nfour"},
+    pages = split_pdf_pages(pdf)
+    assert [(p["page_num"], page_text_xy(p["content"])) for p in pages] == [
+        (1, "alpha one\nbeta two"), (2, "gamma"), (3, "delta\nfour"),
     ]
-    assert split_pdf_pages_text(None) == []
-    assert split_pdf_pages_text(b"<html>not a pdf</html>") == []
+    assert [page_text_xy(p["content"]) for p in pages] == [
+        page_text(p["content"]) for p in pages
+    ]
 
 
-def test_split_pdf_pages_text_pymupdf_branch(monkeypatch):
-    """Exercise the PyMuPDF environment branch without the dependency
-    (r3 VERDICT #6): with a stub fitz module injected, the TEXT splitter
-    must yield page.get_text() output — and the image splitter pixmap
-    PNG bytes — instead of falling through to the structural path."""
+def test_split_ignores_an_installed_fitz():
+    """The splitter is stdlib-only on every host: with a PyMuPDF (`fitz`)
+    module importable, a reloaded `sources.pdf` still returns the
+    structural content streams, never the module's rendered pages."""
+    import importlib
+    import sys
+    import types
+
     import ocr_pipeline_spark.sources.pdf as pdf_mod
 
-    class _FakePage:
-        def __init__(self, i):
-            self.i = i
-
-        def get_text(self):
-            return f"mupdf text of page {self.i}"
-
-        def get_pixmap(self, dpi=72):
-            page = self
-
-            class _Pix:
-                def tobytes(self, fmt):
-                    assert fmt == "png"
-                    return b"PNG-" + str(page.i).encode()
-
-            return _Pix()
-
-    class _FakeDoc:
-        closed = False
-
-        def __iter__(self):
-            return iter(_FakePage(i) for i in range(1, 4))
-
-        def close(self):
-            _FakeDoc.closed = True
-
-    class _FakeFitz:
-        @staticmethod
-        def open(stream, filetype):
-            assert filetype == "pdf" and stream[:5] == b"%PDF-"
-            return _FakeDoc()
-
-    monkeypatch.setattr(pdf_mod, "_fitz", _FakeFitz, raising=False)
-    monkeypatch.setattr(pdf_mod, "_HAVE_MUPDF", True)
-
     pdf = build_pdf(["alpha", "beta", "gamma"])
-    assert pdf_mod.split_pdf_pages_text(pdf) == [
-        {"page_num": 1, "text": "mupdf text of page 1"},
-        {"page_num": 2, "text": "mupdf text of page 2"},
-        {"page_num": 3, "text": "mupdf text of page 3"},
-    ]
-    assert _FakeDoc.closed
-    assert pdf_mod.split_pdf_pages(pdf) == [
-        {"page_num": 1, "content": b"PNG-1"},
-        {"page_num": 2, "content": b"PNG-2"},
-        {"page_num": 3, "content": b"PNG-3"},
-    ]
-    # guard inputs still short-circuit before touching fitz
-    assert pdf_mod.split_pdf_pages_text(b"notpdf") == []
+    want = split_pdf_pages(pdf)
+    page = types.SimpleNamespace(
+        get_pixmap=lambda dpi=72: types.SimpleNamespace(
+            tobytes=lambda fmt: b"PNG"
+        ),
+        get_text=lambda: "fitz text",
+    )
+    fitz = types.ModuleType("fitz")
+
+    class _Doc(list):
+        def close(self):
+            pass
+
+    fitz.open = lambda stream=None, filetype=None: _Doc([page] * 3)
+    sys.modules["fitz"] = fitz
+    try:
+        assert importlib.reload(pdf_mod).split_pdf_pages(pdf) == want
+    finally:
+        del sys.modules["fitz"]
+        importlib.reload(pdf_mod)
 
 
 def test_page_text_escapes_and_tj_arrays():
@@ -144,7 +117,7 @@ def test_corpus_determinism():
 # --- Spark plumbing ----------------------------------------------------------
 def test_explode_pdf_pages_spark(spark):
     docs = generate_pdfs_df(spark, 30, seed=42)
-    pages = explode_pdf_pages(docs, "payload")
+    pages = explode_pdf_pages(docs)
     rows = pages.collect()
     expected = {  # page counts straight from the generator
         doc_pdf(42, i)[0]: doc_pdf(42, i)[2] for i in range(30)
@@ -159,7 +132,7 @@ def test_explode_pdf_pages_spark(spark):
 
 def test_explode_is_narrow_no_shuffle(spark):
     docs = generate_pdfs_df(spark, 5, seed=1)
-    plan = explode_pdf_pages(docs, "payload")._jdf.queryExecution().executedPlan().toString()
+    plan = explode_pdf_pages(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # explode inherits input partitioning
 
 

@@ -61,17 +61,16 @@ def test_no_zip_reread_after_drop(tmp_path, monkeypatch):
 _CHILD = """
 import json, sys, zipimport
 import pandas as pd
-from ocr_pipeline_spark.fixtures.gen_pages import generate_pages_df
+from ocr_pipeline_spark.fixtures.gen_pages import PAGES_SCHEMA_DDL, generate_rows
 from ocr_pipeline_spark.plans.job import default_session, run_extraction
 
 spark = default_session("local[1]", app_name="finders", shuffle_partitions=1)
 spark.sparkContext.setLogLevel("ERROR")
-# cached, so the extraction tasks run one Python worker, not two chained
-pages = generate_pages_df(spark, n_rows=20, seed=11, partitions=1).cache()
-pages.count()
-for _ in range(2):
-    run_extraction(spark, pages, co_locate_hosts=False).write.format(
-        "noop").mode("overwrite").save()
+# driver-side rows: the extraction task is the first task of the one
+# Python worker, so the finders its own imports cache are what is probed
+pages = spark.createDataFrame(generate_rows(20, seed=11), PAGES_SCHEMA_DDL)
+run_extraction(spark, pages, co_locate_hosts=False).write.format(
+    "noop").mode("overwrite").save()
 
 
 def probe(batches):
@@ -95,8 +94,9 @@ spark.stop()
 
 
 def test_reused_worker_holds_no_zip_finders():
-    """Two extraction jobs on one reused worker (`local[1]`), then a probe
-    task counts the zip finders left for its `invalidate_caches()`."""
+    """One extraction job on a reused worker (`local[1]`), then a probe
+    task counts the zip finders left for its `invalidate_caches()`: the
+    imports the extraction task made must not leave any behind."""
     env = dict(os.environ, PYTHONPATH=REPO)
     out = subprocess.run(
         [sys.executable, "-c", _CHILD], cwd=REPO, env=env,
